@@ -1058,7 +1058,8 @@ def incremental_band_dedup(
     pipeline hits every crawl cycle (the full ``minhash_near_dups``
     all-pairs pass is the bootstrap, this is the steady state).
 
-    Generations are a deterministic split (``id % gens``): gen 0 seeds
+    Generations are a deterministic split (``pmod(id, gens)``, non-
+    negative for negative ids too, like numpy's ``%``): gen 0 seeds
     the index; gen g in 1..gens-1 arrives as batch g. A batch doc is a
     DUP if it shares a band bucket with an index doc AND the pair
     passes the family's standard two-stage verify (signature-estimate
@@ -1086,7 +1087,7 @@ def incremental_band_dedup(
     combined = _shared_build(docs, id_col, text_col, memo=memo)
     words = _build_words(combined)
     all_ids = docs.select(
-        F.col(id_col), (F.col(id_col) % gens).cast("long").alias("gen"))
+        F.col(id_col), F.pmod(id_col, gens).cast("long").alias("gen"))
 
     if words:
         n_docs = combined.count()
@@ -1249,7 +1250,7 @@ def incremental_band_dedup(
         outs_f: list[DataFrame] = []
         removed_f: DataFrame | None = None
         for g in range(1, gens):
-            vg = verified.filter(F.col("id_a") % gens == g)
+            vg = verified.filter(F.pmod("id_a", gens) == g)
             if removed_f is not None:
                 vg = vg.join(
                     removed_f.select(F.col(id_col).alias("id_b")),
@@ -1288,7 +1289,7 @@ def incremental_band_dedup(
                 F.array(*[F.col(f"band{b}") for b in range(4)])
             ).alias("band_idx", "bucket"),
         )
-        .withColumn("gen", F.col(id_col) % gens)
+        .withColumn("gen", F.pmod(id_col, gens))
         .localCheckpoint(eager=True)
     )
 
@@ -1432,11 +1433,17 @@ def incremental_dedup_sql(
       SELECT {id_col}, {shingle_hashed} AS sh FROM {table}
     )""",
     ]
+
+    def gen_of(col: str) -> str:
+        # Spark's pmod: non-negative for negative ids (DuckDB's % takes
+        # the dividend's sign)
+        return f"(({col} % {gens}) + {gens}) % {gens}"
+
     outs = []
     for g in range(1, gens):
         old_conds = []
         for og in range(g):
-            cond = f"o.{id_col} % {gens} = {og}"
+            cond = f"{gen_of(f'o.{id_col}')} = {og}"
             if og >= 1:
                 cond = (f"({cond} AND o.{id_col} NOT IN"
                         f" (SELECT new_id FROM dup{og}))")
@@ -1446,7 +1453,7 @@ def incremental_dedup_sql(
       SELECT DISTINCT n.{id_col} AS new_id, o.{id_col} AS old_id
       FROM buckets n JOIN buckets o
         ON n.bucket = o.bucket AND n.band_idx = o.band_idx
-      WHERE n.{id_col} % {gens} = {g}
+      WHERE {gen_of(f'n.{id_col}')} = {g}
         AND ({' OR '.join(old_conds)}))"""
         )
         parts.append(
@@ -1469,7 +1476,7 @@ def incremental_dedup_sql(
                 AS BIGINT) AS is_novel,
            CAST(COALESCE(dup{g}.n_dup, 0) AS BIGINT) AS n_dup_partners
     FROM {table} d LEFT JOIN dup{g} ON dup{g}.new_id = d.{id_col}
-    WHERE d.{id_col} % {gens} = {g}"""
+    WHERE {gen_of(f'd.{id_col}')} = {g}"""
         )
     return (
         "WITH " + ",\n    ".join(parts) + "\n    "
@@ -2761,11 +2768,15 @@ def containment_pairs(
         # sort-merge join — interleaved A/B at sf0.1, 3 reps:
         # candidate subplan 1.6-2.1 s / 12.6-15.0 CPU-s (SMJ) →
         # 1.2-1.3 s / 5.6-8.0 CPU-s (BHJ, build = prefix). Estimate:
-        # n_sh·14 B ≈ 0.25 fraction × 56 B/row; past the cap the hint
+        # the (1-t) fraction of n_sh plus ~0.05 for each doc's +1 row
+        # (0.25 at t=0.8, over half the index at t=0.5), at 56 B/row
+        # plus 8 B per partition column; past the cap the hint
         # degrades to the planner's choice (the 100 TB regime).
         n_sh_rows = sh.count()
-        prefix_a = size_hinted(prefix_a, n_sh_rows * 14,
-                               cap=BROADCAST_BYTES_CAP)
+        prefix_frac = 1.0 - min_containment + 0.05
+        prefix_a = size_hinted(
+            prefix_a, int(n_sh_rows * prefix_frac * (56 + 8 * len(pcols))),
+            cap=BROADCAST_BYTES_CAP)
         cand = (
             # partition columns are part of the JOIN KEY — equality as
             # a post-join filter would still enumerate every cross-

@@ -62,6 +62,23 @@ def get_spark(
         # fused verify 5.9-8.4s with 8000 vs 9.4-11.5s with the
         # default. Normal-width stages are unaffected either way.)
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # Generated-class cache (static; default 100 entries, LRU). One
+        # curation pass (prepare_documents + containment, prefix and
+        # incremental dedup on perfbench's 120-doc corpus) compiles
+        # ~195 distinct classes, so at 100 the LRU thrashes and every
+        # warm pass recompiled 182-183 of them (CodegenMetrics). Sized
+        # above a pass's working set, warm passes compile 0-2; the
+        # retained classes cost ~3% peak RSS on that workload (1250 ->
+        # 1287 MB median, 4 vCPUs).
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # pyspark wraps every Column / functions.* call to capture the
+        # Python call site and push it to the JVM for error messages:
+        # F.col costs 13 py4j round trips instead of 3, and a curation
+        # pass makes ~23k round trips instead of ~9k. For
+        # expressions the engine builds, the captured frame is always
+        # a df_spark line, never the caller's code, so the context it
+        # adds to an error names nothing the traceback does not.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # short_lived=True → C1-only JIT (no C2): every query generates
         # FRESH codegen classes, each run for seconds — C2's expensive
         # optimizing compiles (measured: 67 s of compilation wall during

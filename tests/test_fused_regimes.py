@@ -50,3 +50,30 @@ def test_containment_gather_vs_count_join_identical(docs, monkeypatch):
         D.containment_pairs(docs, 0.8, partition_cols=["source"], memo=False))
     assert fused == count_join
     assert len(fused) > 0
+
+
+def test_incremental_negative_ids_both_regimes_match_oracle(
+        spark, sf_dir, monkeypatch):
+    """Generations are pmod(id, gens) on both regimes, matching the
+    fused kernel's numpy ``%``: with ids shifted below zero, no doc
+    falls out of the output and both regimes equal the DuckDB twin."""
+    import duckdb
+
+    shift = 250
+    docs = load_sdf(spark, sf_dir, "documents").withColumn(
+        "doc_id", F.col("doc_id") - shift)
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * REPLACE (doc_id - "
+        f"{shift} AS doc_id) FROM read_parquet('{sf_dir}/documents.parquet')")
+    want = sorted(con.execute(D.incremental_dedup_sql("documents", 0.6)).fetchall())
+    ids = [r[0] for r in con.execute("SELECT doc_id FROM documents").fetchall()]
+    assert len(want) == sum(1 for i in ids if i % 3 != 0)
+    assert any(r[0] < 0 and r[2] == 0 for r in want), "no negative-id dup"
+
+    monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 1 << 62)
+    fused = _rows(D.incremental_band_dedup(docs, 0.6, memo=False))
+    monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
+    jvm = _rows(D.incremental_band_dedup(docs, 0.6, memo=False))
+    assert fused == want
+    assert jvm == want

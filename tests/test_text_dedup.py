@@ -305,18 +305,13 @@ def test_prefix_filter_completeness_and_reduction(spark, sf_dir):
 
 def test_containment_completeness_and_planted_subset(spark, sf_dir):
     """containment_pairs is (a) COMPLETE — matches the exhaustive
-    directed co-occurrence join at C ≥ t — on the real corpus, and
+    directed co-occurrence join at C ≥ t, for t = 0.8 and 0.5 (whose
+    prefix side is over twice as large) — on the real corpus, and
     (b) correct on a planted strict-subset fixture where Jaccard would
     miss the pair (small doc fully inside a much larger one)."""
     from df_spark.sources.tables import load_sdf
 
     docs = load_sdf(spark, sf_dir, "documents")
-    got = {
-        (r.id_a, r.id_b, r.n_common)
-        for r in D.containment_pairs(
-            docs, 0.8, k=7, partition_cols=["source"], memo=False
-        ).collect()
-    }
     sh = D.shingle_hashes(docs.select("doc_id", "text"), "doc_id", "text", 7).distinct()
     sh = sh.join(docs.select("doc_id", "source"), "doc_id")
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
@@ -327,10 +322,16 @@ def test_containment_completeness_and_planted_subset(spark, sf_dir):
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("c"))
         .join(sizes.selectExpr("doc_id id_a", "sz sa"), "id_a")
-        .filter("20 * c >= 16 * sa")
-    )
-    expected = {(r.id_a, r.id_b, r.c) for r in co.collect()}
-    assert got == expected
+    ).collect()
+    for t, t20 in ((0.8, 16), (0.5, 10)):
+        got = {
+            (r.id_a, r.id_b, r.n_common)
+            for r in D.containment_pairs(
+                docs, t, k=7, partition_cols=["source"], memo=False
+            ).collect()
+        }
+        expected = {(r.id_a, r.id_b, r.c) for r in co if 20 * r.c >= t20 * r.sa}
+        assert got == expected, t
 
     # planted asymmetry: doc 1 is a strict substring of doc 2, padding
     # makes |S2| >> |S1| so J(1,2) < 0.5 while C(1->2) = 1.0; doc 3 is

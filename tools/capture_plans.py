@@ -1,8 +1,9 @@
 """Capture .explain("formatted") output for named queries into
-plans/r13/<query>_<tag>.txt — the optimization round's plan-diff
-evidence (judge checks plan claims against these files).
+plans/<round>/<query>_<tag>.txt — a round's plan-diff evidence (plan
+claims are checked against these files).
 
-Usage: python tools/capture_plans.py <tag> <query> [query ...]
+Usage: python tools/capture_plans.py <round> <tag> <query> [query ...]
+  e.g. python tools/capture_plans.py r14 before containment_join
 Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 """
 
@@ -19,10 +20,12 @@ from df_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1]
-    names = sys.argv[2:]
+    if len(sys.argv) < 4:
+        sys.exit(__doc__)
+    round_tag, tag = sys.argv[1], sys.argv[2]
+    names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
+    out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", round_tag)
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("capture_plans", short_lived=True)
     registry = load_registry()
