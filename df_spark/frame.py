@@ -26,9 +26,9 @@ Semantic deltas from the reference (deliberate, documented):
 
 from __future__ import annotations
 
-from typing import Any, Mapping, Sequence
+from typing import Any, Callable, Mapping, Sequence
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -531,10 +531,18 @@ class Df:
 
     def collect_columns(self) -> dict[str, list]:
         """Columnar result like the reference HTTP API's block form
-        (src/api.rs:74-85): dict of column name → list of values."""
+        (src/api.rs:74-85): dict of column name → list of values, equal
+        value for value to the columns of ``collect()``. Collected as
+        Arrow batches and converted per column, not pivoted from Rows."""
         sdf = self._resolved()._sdf
-        rows = sdf.collect()
-        return {name: [r[i] for r in rows] for i, name in enumerate(sdf.columns)}
+        table = sdf.toArrow()
+        out = {}
+        for i, field in enumerate(sdf.schema.fields):
+            vals = table.column(i).to_pylist()
+            conv = _row_form(field.dataType)
+            out[field.name] = vals if conv is None else [
+                None if x is None else conv(x) for x in vals]
+        return out
 
     def count(self) -> int:
         # declared-but-unimplemented in the reference (src/api.rs:78)
@@ -615,6 +623,29 @@ class GroupedDf:
                 self._parent.fingerprint, f"{self._kind}:{self._keys}:{dict(aggregators)!r}"
             ),
         )
+
+
+def _row_form(dt: T.DataType) -> "Callable[[Any], Any] | None":
+    """Converter from Arrow's ``to_pylist`` value of type ``dt`` to the
+    value ``collect()`` returns, or None where the two already agree.
+    Arrow gives tz-aware UTC timestamps, dicts for structs and key-value
+    pairs for maps; ``collect()`` gives naive local timestamps, Rows and
+    dicts."""
+    if isinstance(dt, T.TimestampType):
+        return lambda x: x.astimezone().replace(tzinfo=None)
+    if isinstance(dt, T.ArrayType):
+        elem = _row_form(dt.elementType)
+        return elem and (lambda xs: [None if x is None else elem(x) for x in xs])
+    if isinstance(dt, T.MapType):
+        key = _row_form(dt.keyType) or (lambda k: k)
+        val = _row_form(dt.valueType) or (lambda x: x)
+        return lambda kvs: {key(k): None if x is None else val(x) for k, x in kvs}
+    if isinstance(dt, T.StructType):
+        fields = [(f.name, _row_form(f.dataType)) for f in dt.fields]
+        return lambda d: Row(**{
+            name: d[name] if conv is None or d[name] is None else conv(d[name])
+            for name, conv in fields})
+    return None
 
 
 def _collapse_agg(agg: Aggregator, name: str, elem: T.DataType) -> Column:

@@ -41,13 +41,14 @@ N_PLANES = 8
 DIM = 64
 N_TABLES = 4  # multi-table LSH: candidate = same bucket in ANY table
 
-# semdedup's grouped-matrix verify serializes one CELL's pair matrix
-# into a single grouped-map task; with balanced cells (the SemDeDup
-# contract — n_cells grows with the corpus) a 16k-vector corpus bounds
-# the worst single-cell matrix at 16k² doubles = 2 GB, and typical
-# cells at (n/n_cells)² ≪ that. Past the gate the distributed per-cell
+# semdedup's grouped-matrix verify scores one CELL's pair matrix in a
+# single grouped-map task, holding ~6 n×n float64 arrays at its peak
+# (dots, the per-dim outer product, cos and the upper-triangle
+# indices); the gate is on the LARGEST cell, so one skewed cell cannot
+# pass it on the strength of a small corpus total. At 4,096 rows the
+# peak is ~6 × 134 MB ≈ 0.8 GB. Past the gate the distributed per-cell
 # join keeps a giant cell's pair space spread across tasks.
-SEMDEDUP_GROUPED_MAX_ROWS = 16_384
+SEMDEDUP_GROUPED_MAX_ROWS = 4_096
 
 
 def _plane_sign(j: int, d: int, table: int = 0) -> int:
@@ -517,10 +518,10 @@ def semdedup(
     Arrow-batched map, materialized ONCE (eager checkpoint) so the
     self-join/grouped verify and the final audit join don't each
     re-run the assignment UDF. The within-cell verify is then adaptive
-    on the runtime-measured corpus size (r13 — the fused
+    on the runtime-measured largest cell (r13 — the fused
     ``minhash_near_dups`` pattern):
 
-    - **grouped-matrix** (corpus under ``SEMDEDUP_GROUPED_MAX_ROWS``):
+    - **grouped-matrix** (largest cell under ``SEMDEDUP_GROUPED_MAX_ROWS``):
       one ``applyInPandas`` per cell ships each vector ONCE and scores
       the cell's pair matrix in numpy with per-dimension IN-ORDER
       accumulation — bit-identical to the pairwise ``cosine_fast``
@@ -552,8 +553,10 @@ def semdedup(
         F.col(vec_col),
         assign_udf(F.col(vec_col))[0].alias("cell"),
     ).localCheckpoint(eager=True)
-    n_vecs = cells.count()
-    if n_vecs <= SEMDEDUP_GROUPED_MAX_ROWS:
+    # one aggregation, like the count it replaces; ≤ n_cells rows
+    largest_cell = max(
+        (r[1] for r in cells.groupBy("cell").count().collect()), default=0)
+    if largest_cell <= SEMDEDUP_GROUPED_MAX_ROWS:
         def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
             ids = pdf[id_col].to_numpy(np.int64)
             order = np.argsort(ids, kind="stable")

@@ -115,8 +115,9 @@ class ScalarMemo:
     size-gate or bounded collect computed once per session isn't
     re-materialized by every query in a family (judge r10: a per-run
     ``per_doc.count()`` purely to size a broadcast gate was one of the
-    top-cost rows' only avoidable jobs). Values must be small (scalars
-    or bounded lists); unbounded data NEVER lands here."""
+    top-cost rows' only avoidable jobs). Values must be small (scalars,
+    bounded lists, or lazy plan handles such as the wire server's built
+    ``Df`` nodes); unbounded data NEVER lands here."""
 
     def __init__(self, capacity: int = 64) -> None:
         self.capacity = capacity

@@ -19,11 +19,20 @@ this engine unchanged:
   "the whole lineage tree is the wire format").
 
 The plan this server returns is its own opaque op list (the client
-round-trips it verbatim, exactly as with the reference server). Plans
-are replayed through the fluent ``Df`` on action, so the PlanCache's
-content-addressed fingerprints give reference-style cross-request
-memoization for free. ``Count``/``Take`` are implemented (the reference
-declares them but panics — ``src/api.rs:78``).
+round-trips it verbatim, exactly as with the reference server). Like
+the reference's content-addressed ``Pool`` (``src/pool.rs:25-94``), the
+server keeps every lineage node it has built: each prefix of a plan has
+a key computed from the wire JSON alone (the source's path, mtime, size
+and declared schema for ``Read``; the parent's key and the op's
+canonical JSON for every other node), and ``Engine.build`` looks the
+whole plan up by that key, building only the missing suffix. An ``Op``
+request on a known prefix therefore validates just its one new step,
+and a rewritten source file gets a new key, so it is re-read. Actions
+additionally persist the frame under its ``Df`` fingerprint
+(``PlanCache``), so a re-submitted plan reads the persisted partitions.
+Results reach the reply through Arrow (``Df.collect_columns``).
+``Count``/``Take`` are implemented (the reference declares them but
+panics — ``src/api.rs:78``).
 """
 
 from __future__ import annotations
@@ -39,6 +48,8 @@ from pyspark.sql import types as T
 from .expr import Aggregator, Comparator, Expr, Predicate, Value, c, v
 from .frame import Df
 from .plans.cache import PlanCache
+from .plans.fingerprint import fingerprint_op, fingerprint_source
+from .plans.memo import ScalarMemo
 
 _TYPE_MAP = {
     "Bool": T.BooleanType(),
@@ -109,59 +120,106 @@ def _parse_schema(obj: dict) -> T.StructType:
     )
 
 
+def _canonical(obj: Any) -> str:
+    return json.dumps(obj, sort_keys=True, separators=(",", ":"))
+
+
 class Engine:
-    """Replays wire plans through the fluent Df; caches by fingerprint."""
+    """Builds wire plans through the fluent Df, one memoized node per
+    plan prefix; caches action results by fingerprint."""
 
     def __init__(self, spark: SparkSession, cache_capacity: int = 32) -> None:
         self.spark = spark
         self.cache = PlanCache(capacity=cache_capacity)
+        # prefix key -> built Df; its per-key in-flight marker makes
+        # concurrent requests for one new prefix build it once
+        self.nodes = ScalarMemo()
+        self._snapshots: dict[str, str] = {}  # path -> last source fingerprint read
+        self._read_lock = threading.Lock()
 
-    def build(self, plan: list[dict]) -> Df:
-        df: Df | None = None
+    def _prefix_keys(self, plan: list[dict]) -> list[str]:
+        """The key of every prefix of ``plan``, computed without
+        building anything."""
+        keys: list[str] = []
         for op in plan:
             (name, args), = op.items()
             if name == "Read":
                 fmt, path, schema = args
-                if fmt == "csv":
-                    df = Df.from_csv(self.spark, path, _parse_schema(schema))
-                elif fmt == "parquet":  # extension beyond the reference
-                    df = Df.from_parquet(self.spark, path)
-                else:
-                    raise ValueError(f"unknown format {fmt!r}")
-                continue
-            if df is None:
+                key = fingerprint_op(fingerprint_source(fmt, path), _canonical(schema))
+            elif not keys:
                 raise ValueError("plan has no Read source")
-            if name == "Select":
-                df = df.select(*[_parse_expr(e) for e in args])
-            elif name == "Filter":
-                col, pred = args
-                df = df.filter(col, Predicate(_CMP_MAP[pred["comparator"]],
-                                              _parse_value(pred["value"])))
-            elif name == "OrderBy":
-                df = df.order_by(*args)
-            elif name == "GroupBy":
-                df = df.group_by(*args)
-            elif name == "Aggregation":
-                df = df.aggregate({col: _AGG_MAP[a] for col, a in args.items()})
             elif name == "Join":
                 right_plan, lcol, rcol = args
-                df = df.join(self.build(right_plan), lcol, rcol)
+                right_key = self._prefix_keys(right_plan)[-1]
+                key = fingerprint_op(keys[-1], _canonical(["Join", right_key, lcol, rcol]))
             else:
-                raise ValueError(f"unknown op {name!r}")
-        if df is None:
+                key = fingerprint_op(keys[-1], _canonical(op))
+            keys.append(key)
+        if not keys:
             raise ValueError("empty plan")
-        return df
+        return keys
+
+    def build(self, plan: list[dict]) -> Df:
+        keys = self._prefix_keys(plan)
+        return self._node(plan, keys, len(keys))
+
+    def _node(self, plan: list[dict], keys: list[str], n: int) -> Df:
+        """The Df of ``plan[:n]``: memoized, else the memoized parent
+        plus one step. A step that raises memoizes nothing."""
+        def step() -> Df:
+            (name, args), = plan[n - 1].items()
+            if name == "Read":
+                return self._read(*args)
+            return self._apply(self._node(plan, keys, n - 1), name, args)
+
+        return self.nodes.get_or_build((keys[n - 1],), step)
+
+    def _read(self, fmt: str, path: str, schema: dict) -> Df:
+        # Spark's cache matches a re-read of a path to frames persisted
+        # from it, whatever the file held then, so a path read before
+        # under another (mtime, size) snapshot is refreshed first. The
+        # lock keeps a concurrent reader of the new snapshot from
+        # collecting before that refresh.
+        snapshot = fingerprint_source(fmt, path)
+        with self._read_lock:
+            if self._snapshots.setdefault(path, snapshot) != snapshot:
+                self.spark.catalog.refreshByPath(path)
+                self._snapshots[path] = snapshot
+        if fmt == "csv":
+            return Df.from_csv(self.spark, path, _parse_schema(schema))
+        if fmt == "parquet":  # extension beyond the reference
+            return Df.from_parquet(self.spark, path)
+        raise ValueError(f"unknown format {fmt!r}")
+
+    def _apply(self, df: Df, name: str, args: Any) -> Df:
+        if name == "Select":
+            return df.select(*[_parse_expr(e) for e in args])
+        if name == "Filter":
+            col, pred = args
+            return df.filter(col, Predicate(_CMP_MAP[pred["comparator"]],
+                                            _parse_value(pred["value"])))
+        if name == "OrderBy":
+            return df.order_by(*args)
+        if name == "GroupBy":
+            return df.group_by(*args)
+        if name == "Aggregation":
+            return df.aggregate({col: _AGG_MAP[a] for col, a in args.items()})
+        if name == "Join":
+            right_plan, lcol, rcol = args
+            return df.join(self.build(right_plan), lcol, rcol)
+        raise ValueError(f"unknown op {name!r}")
 
     def blocks(self, df: Df) -> dict[str, dict[str, list]]:
         """Columnar result in the reference's externally-tagged AnyBlock
         form (src/block.rs:110-119)."""
-        sdf = df.to_spark()
         cols = df.collect_columns()
-        out = {}
-        for field in sdf.schema.fields:
-            vals = cols[field.name]
-            out[field.name] = {_block_tag(field.dataType): vals}
-        return out
+        # the Arrow collect above already fetched this frame's schema
+        # (the frames passed here carry no pending group_by, so
+        # df.schema reads the same DataFrame)
+        return {
+            field.name: {_block_tag(field.dataType): cols[field.name]}
+            for field in df.schema.fields
+        }
 
 
 def _block_tag(dt: T.DataType) -> str:
@@ -212,9 +270,10 @@ def make_handler(engine: Engine):
                 if "Read" in fn:
                     plan = [{"Read": fn["Read"]}]
                 elif "Op" in fn:
-                    self_check = engine.build(plan + [fn["Op"]])  # eager validation
-                    _ = self_check  # build errors surface as 400s
+                    # eager validation: builds only the new step, and
+                    # build errors surface as 400s
                     plan = plan + [fn["Op"]]
+                    engine.build(plan)
                 elif "Action" in fn:
                     action = fn["Action"]
                     # content-addressed memoization (reference Pool,

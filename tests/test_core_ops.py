@@ -319,9 +319,52 @@ def test_from_vecs_list_unresolvable_element(spark):
 # --- actions ----------------------------------------------------------------
 
 
-def test_collect_columns(spark):
+def test_collect_columns(spark, monkeypatch):
+    import datetime
+    import decimal
+    import time
+
+    from pyspark.sql import types as T
+
     cols = bool_int(spark).collect_columns()
     assert cols == {"bool": [True, False, True], "int": [1, 2, 3]}
+
+    # the Arrow path gives each type the value collect() gives; a driver
+    # zone off UTC makes the naive-local timestamp conversion visible
+    monkeypatch.setenv("TZ", "America/Los_Angeles")
+    time.tzset()
+    try:
+        schema = T.StructType([
+            T.StructField("b", T.BooleanType()), T.StructField("i", T.LongType()),
+            T.StructField("f", T.DoubleType()), T.StructField("s", T.StringType()),
+            T.StructField("n", T.NullType()), T.StructField("d", T.DateType()),
+            T.StructField("ts", T.TimestampType()),
+            T.StructField("dec", T.DecimalType(10, 2)),
+            T.StructField("ia", T.ArrayType(T.LongType())),
+            T.StructField("sa", T.ArrayType(T.StringType())),
+            T.StructField("tsa", T.ArrayType(T.TimestampType())),
+            T.StructField("st", T.StructType([
+                T.StructField("x", T.LongType()), T.StructField("t", T.TimestampType())])),
+            T.StructField("m", T.MapType(T.StringType(), T.LongType())),
+        ])
+        ts = datetime.datetime(2020, 7, 2, 3, 4, 5, 6)
+        rows = [
+            (True, 1, 1.5, "a", None, datetime.date(2020, 1, 2), ts,
+             decimal.Decimal("1.50"), [1, None], ["x", None], [ts, None],
+             (7, ts), {"k": 1}),
+            (None,) * len(schema.fields),
+        ]
+        sdf = spark.createDataFrame(rows, schema)
+        for frame in (sdf, sdf.limit(0)):
+            got = Df.from_spark(frame).collect_columns()
+            want = frame.collect()
+            assert list(got) == frame.columns
+            for i, name in enumerate(frame.columns):
+                assert got[name] == [r[i] for r in want], name
+                assert [type(x) for x in got[name]] == [type(r[i]) for r in want], name
+    finally:
+        monkeypatch.undo()
+        time.tzset()
 
 
 def test_count_take(spark):

@@ -198,6 +198,45 @@ def test_semdedup_grouped_matches_join_path(spark, sf_dir):
     assert grouped and grouped == joined
 
 
+def test_semdedup_gate_is_on_the_largest_cell(spark, monkeypatch):
+    """One skewed cell decides the regime, not the corpus total: with
+    the gate at the largest cell's size the grouped matrix runs (the
+    corpus total is above it), one row lower the distributed join runs,
+    and both sides give the same audit table."""
+    import random
+
+    import df_spark.operators.similarity as S
+
+    rng = random.Random(7)
+    dims, n_cells = 8, 4
+
+    def near(axis: int, noise: float) -> list[float]:
+        return [(1.0 if d == axis else 0.0) + rng.uniform(-noise, noise)
+                for d in range(dims)]
+
+    vecs = [near(c, 0.0) for c in range(n_cells)]  # ids 0-3: the centroids
+    vecs += [near(0, rng.choice([0.05, 0.6])) for _ in range(40)]  # skewed cell
+    vecs += [near(c, 0.3) for c in (1, 2, 3) for _ in range(2)]
+    emb = spark.createDataFrame(
+        list(enumerate(vecs)), "vec_id long, embedding array<double>")
+
+    def run(gate: int) -> tuple[list, bool]:
+        monkeypatch.setattr(S, "SEMDEDUP_GROUPED_MAX_ROWS", gate)
+        out = S.semdedup(emb, n_cells=n_cells, tau=0.9)
+        grouped = "FlatMapGroupsInPandas" in _plan(out)
+        return sorted(tuple(r) for r in out.collect()), grouped
+
+    largest = max(r[1] for r in S.semdedup(emb, n_cells=n_cells, tau=0.9)
+                  .groupBy("cell").count().collect())
+    assert largest < emb.count()  # skewed, yet not the whole corpus
+    grouped_rows, grouped = run(largest)
+    joined_rows, joined_grouped = run(largest - 1)
+    assert grouped and not joined_grouped
+    assert grouped_rows == joined_rows
+    keeps = {r[2] for r in grouped_rows}
+    assert keeps == {0, 1}
+
+
 # --- r13 continuation: modality pair sets are session-memoized --------
 
 

@@ -227,3 +227,123 @@ def test_pool_memoization_and_introspection(server, small_csv):
     after = pool()
     assert after["size"] >= 1
     assert after["hits"] >= before["hits"] + 1  # second run reused the frame
+
+
+def test_rewritten_sources_are_reread(server, spark, tmp_path):
+    """A source file rewritten with new content and a new size gets a
+    new key (fingerprint_source hashes mtime and size), so a resubmitted
+    plan returns the new rows, not the persisted or memoized old ones."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    csv = tmp_path / "t.csv"
+    pqt = str(tmp_path / "t.parquet")
+    csv.write_text("1|foo|true\n2|bar|false\n")
+    pq.write_table(pa.table({"x": [1, 2]}), pqt)
+    csv_plan = call(None, {"Read": ["csv", str(csv), SMALL_SCHEMA]})["dataframe"]
+    csv_plan = call(csv_plan, {"Op": {"Select": [{"Source": "int"}, {"Source": "string"}]}})["dataframe"]
+    pq_plan = call(None, {"Read": ["parquet", pqt, {"columns": []}]})["dataframe"]
+    pq_plan = call(pq_plan, {"Op": {"Filter": ["x", {
+        "comparator": "GreaterThan", "value": {"Int": 0}}]}})["dataframe"]
+    assert call(csv_plan, {"Action": "Collect"})["blocks"] == {
+        "int": {"Int": [1, 2]}, "string": {"String": ["foo", "bar"]}}
+    assert call(pq_plan, {"Action": "Collect"})["blocks"] == {"x": {"Int": [1, 2]}}
+
+    csv.write_text("7|seven|true\n8|eight|false\n9|nine|true\n")
+    pq.write_table(pa.table({"x": [5, 6, 7, 8]}), pqt)
+    assert call(csv_plan, {"Action": "Collect"})["blocks"] == {
+        "int": {"Int": [7, 8, 9]}, "string": {"String": ["seven", "eight", "nine"]}}
+    assert call(pq_plan, {"Action": "Collect"})["blocks"] == {"x": {"Int": [5, 6, 7, 8]}}
+
+
+def _last_job_id(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return max(spark.sparkContext.statusTracker().getJobIdsForGroup(None), default=-1)
+
+
+def test_plan_prefixes_are_built_once(server, spark, tmp_path, monkeypatch):
+    """Each request that extends a plan builds only its new step: the
+    source is read once over a 4-op chain, and an Op on a built prefix
+    starts no Spark job (a parquet read would start one)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from df_spark.frame import Df
+
+    csv = tmp_path / "chain.csv"
+    csv.write_text("1|foo|true\n2|bar|false\n3|baz|true\n")
+    reads = []
+    from_csv = Df.from_csv
+    monkeypatch.setattr(Df, "from_csv", staticmethod(
+        lambda *a, **k: reads.append(a[1]) or from_csv(*a, **k)))
+    plan = call(None, {"Read": ["csv", str(csv), SMALL_SCHEMA]})["dataframe"]
+    for op in [
+        {"Filter": ["int", {"comparator": "GreaterThan", "value": {"Int": 1}}]},
+        {"Select": [{"Source": "int"}, {"Source": "bool"}]},
+        {"OrderBy": ["int"]},
+        {"Select": [{"Alias": ["y", {"Operation": [
+            "Add", {"Source": "int"}, {"Constant": {"Int": 1}}]}]}]},
+    ]:
+        plan = call(plan, {"Op": op})["dataframe"]
+    assert call(plan, {"Action": "Collect"})["blocks"] == {"y": {"Int": [3, 4]}}
+    assert reads == [str(csv)]
+
+    pqt = str(tmp_path / "chain.parquet")
+    pq.write_table(pa.table({"x": [3, 1, 2]}), pqt)
+    plan = call(None, {"Read": ["parquet", pqt, {"columns": []}]})["dataframe"]
+    plan = call(plan, {"Op": {"Filter": ["x", {
+        "comparator": "GreaterThan", "value": {"Int": 1}}]}})["dataframe"]
+    before = _last_job_id(spark)
+    nxt = call(plan, {"Op": {"OrderBy": ["x"]}})["dataframe"]
+    assert _last_job_id(spark) == before
+
+    # a failing step is a 400 and memoizes nothing; its prefix still
+    # serves the next valid step
+    with pytest.raises(urllib.error.HTTPError) as exc:
+        call(plan, {"Op": {"Select": [{"Source": "nope"}]}})
+    assert exc.value.code == 400
+    with pytest.raises(urllib.error.HTTPError):
+        call(plan, {"Op": {"Select": [{"Source": "nope"}]}})
+    assert call(nxt, {"Action": "Collect"})["blocks"] == {"x": {"Int": [2, 3]}}
+
+
+def test_concurrent_requests_build_a_prefix_once(server, tmp_path, monkeypatch):
+    """Concurrent Op requests on one new prefix (more clients than
+    cores) read the source once: the node memo's in-flight marker makes
+    the other requests wait for the first build instead of repeating it."""
+    import sys
+    import threading
+
+    from df_spark.frame import Df
+
+    csv = tmp_path / "concurrent.csv"
+    csv.write_text("1|foo|true\n2|bar|false\n3|baz|true\n")
+    reads = []
+    from_csv = Df.from_csv
+    monkeypatch.setattr(Df, "from_csv", staticmethod(
+        lambda *a, **k: reads.append(a[1]) or from_csv(*a, **k)))
+    plan = call(None, {"Read": ["csv", str(csv), SMALL_SCHEMA]})["dataframe"]
+    replies, errors = [], []
+
+    def client(i: int) -> None:
+        try:
+            r = call(plan, {"Op": {"Filter": ["int", {
+                "comparator": "GreaterThan", "value": {"Int": i % 3}}]}})
+            replies.append(call(r["dataframe"], {"Action": "Count"})["blocks"])
+        except Exception as e:  # noqa: BLE001 — reported by the assert below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=client, args=(i,)) for i in range(12)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert sorted(b["count"]["Int"][0] for b in replies) == [1] * 4 + [2] * 4 + [3] * 4
+    assert reads == [str(csv)]
