@@ -18,8 +18,8 @@ from pyspark.sql import functions as F
 BPE_TOKEN_RE = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 WORD_RE = r"\S+"
 
-# marker stopwords per language for the n-gram/stopword heuristic; the
-# CASE chain below breaks ties in this fixed order
+# marker stopwords per language for the n-gram/stopword heuristic;
+# lang_id breaks ties in this fixed order
 LANG_MARKERS: dict[str, list[str]] = {
     "en": [" the ", " and ", " of ", " to "],
     "de": [" der ", " und ", " die ", " nicht "],
@@ -130,20 +130,23 @@ def lang_scores_sql(expr: str) -> dict[str, str]:
 
 
 def lang_id(col: Column) -> Column:
-    """argmax language with fixed tie-break order (CASE chain — the SQL
-    twin is the same chain, so results match bit-for-bit)."""
+    """argmax language, ties to the earlier language in ``LANG_ORDER``;
+    null text stays null. Each language's score is computed once, as the
+    first field of a (score, priority, lang) struct whose priority runs
+    in reverse ``LANG_ORDER``; ``greatest`` compares the structs field by
+    field, so the best score wins and a tie goes to the higher priority.
+    The SQL twin's CASE chain picks the same language: its first branch
+    whose score is >= every other one. Not a CASE chain here: it
+    repeats every score inside 20 comparisons, which more than triples
+    the generated code of the stage that scores the text."""
     scores = lang_scores(col)
-    expr = None
-    # build reversed so the first lang in LANG_ORDER wins ties
-    for lang in reversed(LANG_ORDER):
-        cond = scores[lang]
-        others = [scores[o] for o in LANG_ORDER if o != lang]
-        is_max = None
-        for o in others:
-            c = cond >= o
-            is_max = c if is_max is None else (is_max & c)
-        expr = F.when(is_max, F.lit(lang)) if expr is None else F.when(is_max, F.lit(lang)).otherwise(expr)
-    return expr
+    best = F.greatest(*[
+        F.struct(scores[lang].alias("score"),
+                 F.lit(len(LANG_ORDER) - i).alias("priority"),
+                 F.lit(lang).alias("lang"))
+        for i, lang in enumerate(LANG_ORDER)
+    ])
+    return F.when(col.isNotNull(), best["lang"])
 
 
 def lang_id_sql(expr: str) -> str:

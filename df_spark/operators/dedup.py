@@ -35,6 +35,7 @@ from pyspark.sql import types as T
 
 from ..functions.hashing import NUM_HASHES, h32, h32_sql, minhash_perm, minhash_perm_sql
 from ..plans.memo import FrameMemo, frame_key
+from .observe import observed, observed_checkpoint, with_observed
 from .partitioning import (
     BROADCAST_BYTES_CAP,
     barrier_width,
@@ -361,11 +362,11 @@ def _shared_build(
             prof = hashes.groupBy(id_col).agg(
                 *[F.min(minhash_perm(F.col("h"), i)).alias(f"m{i}")
                   for i in range(NUM_HASHES)])
-            return (
+            return observed_checkpoint(
                 sets.filter(F.size("sh") > 0)
                 .withColumn("n_sh", F.size("sh"))
-                .join(prof, id_col)
-                .localCheckpoint(eager=True)
+                .join(prof, id_col),
+                nh=F.col("n_sh"),
             )
 
         from pyspark.sql import Window
@@ -439,7 +440,9 @@ def _shared_build(
             # the broadcast-dictionary regime (checkpointing erases it)
             plan_probe.append(
                 combined._jdf.queryExecution().executedPlan().toString())
-        return combined.localCheckpoint(eager=True)
+        # the verify gates read the doc count and Σn_sh (see
+        # _verify_payload_bytes) off this checkpoint's own job
+        return observed_checkpoint(combined, nh=F.col("n_sh"))
 
     if not memo:
         return build()
@@ -610,22 +613,23 @@ def lsh_candidate_pairs(
     and every near-dup/cluster/pipeline query need exactly this frame;
     signatures built from the memoized profile hash to the same key)."""
     def build() -> DataFrame:
-        buckets = signatures.select(
+        buckets = observed_checkpoint(signatures.select(
             F.col(id_col),
             F.posexplode(F.array(*[F.col(f"band{b}") for b in range(bands)])).alias(
                 "band_idx", "bucket"
             ),
-        ).localCheckpoint(eager=True)
+        ))
         # bucket rows are (id, 4B idx, 32B digest) — measure and
         # broadcast one self-join side when bounded (checkpoints carry
         # no stats, so the planner alone would shuffle both sides)
-        buckets_bytes = buckets.count() * 64
+        buckets_bytes = observed(buckets) * 64
         left = buckets.select(F.col(id_col).alias("id_a"), "bucket", "band_idx")
         right = size_hinted(
             buckets.select(F.col(id_col).alias("id_b"), "bucket", "band_idx"),
             buckets_bytes)
         pairs = left.join(right, ["bucket", "band_idx"]).filter(F.col("id_a") < F.col("id_b"))
-        return pairs.select("id_a", "id_b").distinct().localCheckpoint(eager=True)
+        # observed: minhash_near_dups sizes its verify from the count
+        return observed_checkpoint(pairs.select("id_a", "id_b").distinct())
 
     if not memo:
         return build()
@@ -634,6 +638,211 @@ def lsh_candidate_pairs(
 
 
 MIN_EST_MATCHES = 5  # of NUM_HASHES — MinHash-estimate prefilter floor
+
+
+def _verify_payload_bytes(combined: DataFrame, words: list[str]) -> tuple[int, int, int]:
+    """(docs, minima bytes, verify payload bytes) of a
+    :func:`_shared_build` frame, from the sizes its checkpoint observed
+    — no job. Payload: W bitmap longs + n_sh per doc in the bitmap
+    regime, ~4 B per hash plus per-row overhead in the array regime."""
+    n_docs = observed(combined)
+    if words:
+        pay_bytes = n_docs * (len(words) + 1) * 8 + n_docs * 24
+    else:
+        pay_bytes = observed(combined, "nh") * 4 + n_docs * 32
+    return n_docs, n_docs * (NUM_HASHES * 8 + 24), pay_bytes
+
+
+def _bitmap_table(frame: DataFrame, id_col: str, bits: list[str] | str,
+                  extra: list[str]):
+    """Driver-side side table of the Arrow verify kernels (the fused
+    MinHash band verify and the containment gather), collected in one
+    job: ``(ids, bitmaps, extras)`` — doc ids ascending, per-doc shingle
+    bitmaps as a uint64 [docs, words] matrix, and the ``extra`` integer
+    columns as an int64 [docs, len(extra)] matrix, rows aligned.
+
+    ``bits`` names either the bitmap word columns of a
+    :func:`_shared_build` frame, or ONE hash-array column: then every
+    distinct hash in the corpus gets its own bit (its rank among the
+    distinct hashes), so popcount(a & b) = |a ∩ b| EXACTLY, the arrays
+    being sets. Returns None when those bitmaps would pass
+    ``BROADCAST_BYTES_CAP`` (the caller keeps its JVM verify)."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    words = bits if isinstance(bits, list) else []
+    t = frame.select(id_col, *extra, *(words or [bits])).toArrow()
+    ids = t.column(id_col).to_numpy().astype(np.int64)
+    order = np.argsort(ids, kind="stable")
+    extras = np.column_stack(
+        [t.column(c).to_numpy().astype(np.int64) for c in extra])
+    if words:
+        wbits = np.column_stack(
+            [t.column(w).to_numpy().astype(np.int64) for w in words]
+        ).view(np.uint64)
+    else:
+        arrays = t.column(bits)
+        lens = pc.list_value_length(arrays).to_numpy().astype(np.int64)
+        vocab, bit = np.unique(
+            pc.list_flatten(arrays).to_numpy().astype(np.int64),
+            return_inverse=True)
+        n_words = (len(vocab) + 63) // 64
+        if len(ids) * n_words * 8 >= BROADCAST_BYTES_CAP:
+            return None
+        wbits = np.zeros((len(ids), n_words), np.uint64)
+        np.bitwise_or.at(
+            wbits, (np.repeat(np.arange(len(ids)), lens), bit >> 6),
+            np.uint64(1) << (bit & 63).astype(np.uint64))
+    return (ids[order], np.ascontiguousarray(wbits[order]),
+            np.ascontiguousarray(extras[order]))
+
+
+def _fused_band_verify(spark, table, min_jaccard: float, min_est_matches: int,
+                       gens: int | None = None) -> DataFrame:
+    """FUSED BANDED VERIFY: (id_a, id_b, jaccard) for every pair sharing
+    an LSH band bucket that passes the estimate floor and the exact
+    Jaccard threshold, from a :func:`_bitmap_table` side table built
+    with extras ``[n_sh, m0..m15]``. With ``gens``, only pairs across
+    generations (``id % gens``, numpy's non-negative ``%`` = Spark's
+    ``pmod``), oriented so id_a is the HIGHER generation; otherwise
+    id_a < id_b.
+
+    Candidates are never materialized JVM-side at all. r8's first cut
+    still shipped the 2.3 M candidate pairs THROUGH Arrow into a numpy
+    gather, and the transfer itself — not the popcount math — turned
+    out to be the cost (measured: an IDENTITY mapInPandas/mapInArrow
+    over the candidate frame is ~18-24 CPU-s at sf0.1 under the C1
+    bench JIT; the numpy verify inside is ~2). Everything the banding
+    join derives is a pure function of the broadcast side table (16
+    minima per doc), so each task re-derives the LSH buckets it OWNS
+    from the broadcast minima instead: lexsort the band's 4 minima
+    columns, split groups, keep buckets hashing to this task id,
+    enumerate pairs per bucket (vectorized per bucket-size class), drop
+    pairs that already share an EARLIER band (exact min-band dedup — a
+    pair is emitted by exactly one bucket globally, so no JVM-side
+    distinct), then screen + popcount-verify in the same array pass.
+    Input: one row per task id; output: verified integers only.
+
+    Bucket semantics match :func:`lsh_candidate_pairs` exactly: two
+    docs share band b iff their 4 minima tuples are equal (the md5 band
+    digest is injective on the tuple), and the oracle's DISTINCT-pair +
+    estimate-floor + exact-Jaccard contract is evaluated on the same
+    integers. The UDF emits only exact integers (|∩| and na+nb)
+    screened by the exact integer estimate floor and a CONSERVATIVE
+    raw-ratio screen (margin 1e-6 > the 5e-7 half-ulp a rounded value
+    can move); the authoritative round-then-threshold runs JVM-side
+    with the identical double expression as :func:`jaccard_projection`
+    and :func:`jaccard_words_projection`.
+
+    100 TB note: this regime is, by construction, the bounded-corpus
+    one (the whole side table must fit the broadcast cap); past the cap
+    the callers' JVM paths are unchanged and fully distributed."""
+    import numpy as np
+
+    ids, wbits, extras = table
+    bc = spark.sparkContext.broadcast((
+        ids, np.ascontiguousarray(extras[:, 0]), wbits,
+        np.ascontiguousarray(extras[:, 1:])))
+    raw_floor = float(min_jaccard) - 1e-6
+    est_floor = int(min_est_matches)
+    # tasks scale with corpus size (each re-derives the banding over
+    # the broadcast minima — trivial next to enumeration), NOT fixed at
+    # full parallelism: a fresh python worker costs ~0.7-2.5 CPU-s of
+    # interpreter+import spin-up, which at 32 tasks would dwarf the
+    # ~3 CPU-s of actual numpy work on a 5k-doc corpus
+    n_parts = max(1, min(spark.sparkContext.defaultParallelism, len(ids) // 600 + 1))
+    bands, rpb = 4, NUM_HASHES // 4  # lsh_candidate_pairs defaults
+
+    def gen(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        ids, nsz, wbits, mins = bc.value
+        gen_of = None if gens is None else ids % gens
+        pop8 = np.unpackbits(
+            np.arange(256, dtype=np.uint8)[:, None], axis=1
+        ).sum(axis=1).astype(np.int64)
+        CHUNK = 1 << 19  # pairs per enumeration slice (memory cap)
+
+        def band_pairs(pid):
+            if len(mins) < 2:
+                return
+            for band in range(bands):
+                sub = mins[:, band * rpb:(band + 1) * rpb]
+                order = np.lexsort(sub.T[::-1])
+                srt = sub[order]
+                brk = np.flatnonzero(np.any(srt[1:] != srt[:-1], axis=1)) + 1
+                starts = np.concatenate(([0], brk))
+                sizes = np.diff(np.concatenate((starts, [len(srt)])))
+                # deterministic bucket -> task assignment (FNV-style mix
+                # of the band minima; only balance depends on it, never
+                # correctness)
+                key = srt[starts].astype(np.uint64)
+                hsh = np.full(len(starts), 0xcbf29ce484222325, np.uint64)
+                for j in range(rpb):
+                    hsh = (hsh ^ key[:, j]) * np.uint64(0x100000001b3)
+                sel = ((hsh % np.uint64(n_parts)).astype(np.int64) == pid) & (sizes >= 2)
+                sel_starts, sel_sizes = starts[sel], sizes[sel]
+                for sz in np.unique(sel_sizes):
+                    gs = sel_starts[sel_sizes == sz]
+                    mat = order[gs[:, None] + np.arange(sz)[None, :]]
+                    iu0, iu1 = np.triu_indices(sz, 1)
+                    gpc = max(1, CHUNK // len(iu0))
+                    for g0 in range(0, len(gs), gpc):
+                        m = mat[g0:g0 + gpc]
+                        A = m[:, iu0].ravel()
+                        B = m[:, iu1].ravel()
+                        if gen_of is None:
+                            # table index order == id order
+                            A, B = np.minimum(A, B), np.maximum(A, B)
+                        else:
+                            cross = gen_of[A] != gen_of[B]
+                            A, B = A[cross], B[cross]
+                            swap = gen_of[A] < gen_of[B]
+                            A, B = np.where(swap, B, A), np.where(swap, A, B)
+                        if band and len(A):
+                            # min-band dedup: an earlier shared band
+                            # already emitted this pair
+                            dup = np.zeros(len(A), bool)
+                            for j in range(band):
+                                dup |= (
+                                    mins[A, j * rpb:(j + 1) * rpb]
+                                    == mins[B, j * rpb:(j + 1) * rpb]
+                                ).all(axis=1)
+                            A, B = A[~dup], B[~dup]
+                        if not len(A):
+                            continue
+                        ok = (mins[A] == mins[B]).sum(axis=1) >= est_floor
+                        A, B = A[ok], B[ok]
+                        if not len(A):
+                            continue
+                        inter = (
+                            pop8[(wbits[A] & wbits[B]).view(np.uint8)]
+                            .reshape(len(A), -1)
+                            .sum(axis=1, dtype=np.int64)
+                        )
+                        tot = nsz[A] + nsz[B]
+                        keep = inter >= raw_floor * (tot - inter)
+                        if keep.any():
+                            yield ids[A[keep]], ids[B[keep]], inter[keep], tot[keep]
+
+        for batch in batches:
+            for pid in batch.column(0).to_numpy(zero_copy_only=False):
+                for ia, ib, ii, tt in band_pairs(int(pid)):
+                    yield pa.RecordBatch.from_arrays(
+                        [pa.array(ia), pa.array(ib), pa.array(ii), pa.array(tt)],
+                        names=["id_a", "id_b", "__i", "__t"],
+                    )
+
+    pre = spark.range(0, n_parts, 1, numPartitions=n_parts).mapInArrow(
+        gen, schema="id_a long, id_b long, __i long, __t long")
+    jac = F.round(
+        F.col("__i").cast("double")
+        / (F.col("__t").cast("double") - F.col("__i").cast("double")),
+        6,
+    )
+    return pre.select("id_a", "id_b", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= min_jaccard)
 
 
 def minhash_near_dups(
@@ -670,64 +879,70 @@ def minhash_near_dups(
     (:func:`_shared_build`) yields the narrow MinHash profile
     (signatures + prefilter) AND the verification payload — bitmap
     words when the shingle universe fits, hash arrays otherwise. The
-    verify strategy is then ADAPTIVE on the runtime-measured side
-    sizes (checkpoints carry no Catalyst stats, so the operator
-    measures with one cheap agg and decides itself):
+    verify strategy is then ADAPTIVE on the side sizes the build's
+    checkpoint observed (checkpoints carry no Catalyst stats, so the
+    operator decides itself; no extra job):
 
-    - **fused** (sides fit ``BROADCAST_BYTES_CAP``): one codegen stage
-      — candidates repartitioned to ~100k pairs/task, both sides'
-      payloads attached via two broadcast hash joins, prefilter and
-      exact Jaccard evaluated in the same stage (on the bitmap path
-      the cheap popcount threshold runs before the 16-term estimate;
-      on the array path the estimate screens first so rejected pairs
-      never evaluate the hash-set intersect). Screened-out pairs cost
-      only in-stage CPU, never a materialization (2.3 M candidates at
-      sf0.1, 99.95 % of which pass the screen — a prefilter
-      materialization buys nothing when the candidate set is this
-      dense).
+    - **fused** (sides fit ``BROADCAST_BYTES_CAP``, in EITHER payload
+      regime): :func:`_fused_band_verify` — no candidate frame at all;
+      each task re-derives its LSH buckets from the broadcast minima
+      and popcount-verifies in numpy. The side table's bitmaps are the
+      build's words, or in the array regime one bit per distinct hash
+      of the corpus (:func:`_bitmap_table`; exact, the arrays being
+      sets) while those bitmaps also fit the cap.
+    - **broadcast join** (array regime whose bitmaps would pass the
+      cap, sides still under it): one codegen stage over the
+      checkpointed :func:`lsh_candidate_pairs` — candidates
+      repartitioned to ~100k pairs/task, both sides' payloads attached
+      via two broadcast hash joins, the estimate screening before the
+      hash-set intersect. Screened-out pairs cost only in-stage CPU,
+      never a materialization.
     - **two-phase** (sides exceed the cap — the 100 TB regime, where
       the sets frame is corpus-sized and every join shuffles): screen
       the candidates against the NARROW mins first (16 longs/doc
-      through the shuffle, not KB arrays), checkpoint + count the
-      survivors, then pay the array-attaching shuffle join only for
-      them. When the screen is selective (sparse corpora — the
-      production case, unlike the dense synthetic sf0.1 corpus) this
-      avoids shuffling shingle arrays for pairs the estimate already
-      rejects.
+      through the shuffle, not KB arrays), checkpoint the survivors,
+      then pay the array-attaching shuffle join only for them. When
+      the screen is selective (sparse corpora — the production case,
+      unlike the dense synthetic sf0.1 corpus) this avoids shuffling
+      shingle arrays for pairs the estimate already rejects.
 
-    Both branches size the pair-stream repartition to the measured
-    pair count (fused: ~100k light bitmap pairs/task; two-phase: ~20k
+    Both JVM branches size the pair-stream repartition to the observed
+    pair count (broadcast join: ~100k pairs/task; two-phase: ~20k
     array-carrying pairs/task; both capped at 8× parallelism) — the
     pair frame otherwise inherits ~10 post-join partitions from
     upstream (measured 12.2 s vs 3.0 s at sf0.1).
 
     With ``memo=True`` the verified pair set itself is session-memoized
-    (eager checkpoint, re-partitioned to data-sized width so downstream
-    consumers don't inherit the verify job's task count):
+    (eager observed checkpoint, re-partitioned to data-sized width so
+    downstream consumers don't inherit the verify job's task count;
+    its observed row count sizes :func:`.clustering.connected_components`):
     ``dedup_clusters``, ``llm_data_pipeline`` and ``minhash_near_dups``
     all need exactly this frame."""
 
     def build() -> DataFrame:
         combined = _shared_build(docs, id_col, text_col, memo=memo)
         words = _build_words(combined)
-        prof = combined.select(id_col, *[f"m{i}" for i in range(NUM_HASHES)])
         par = docs.sparkSession.sparkContext.defaultParallelism
-        # one cheap agg over the materialized build checkpoint: ~8 B per
-        # hash + per-row overhead; drives both the broadcast decision
-        # and the per-doc payload size estimate
-        stats = combined.select(
-            F.count(F.lit(1)).alias("n"), F.sum("n_sh").alias("nh")
-        ).collect()[0]
-        n_docs = stats["n"]
-        mins_bytes = n_docs * (NUM_HASHES * 8 + 24)
-        if words:
-            # bitmap payload: W longs + n_sh per doc
-            pay_cols = [F.col("n_sh"), *[F.col(w) for w in words]]
-            pay_bytes = n_docs * (len(words) + 1) * 8 + n_docs * 24
-        else:
-            pay_cols = [F.col("n_sh"), F.col("sh")]
-            pay_bytes = (stats["nh"] or 0) * 4 + n_docs * 32
+        n_docs, mins_bytes, pay_bytes = _verify_payload_bytes(combined, words)
+        table = None
+        if pay_bytes + mins_bytes < BROADCAST_BYTES_CAP:
+            table = _bitmap_table(
+                combined, id_col, words or "sh",
+                ["n_sh", *[f"m{i}" for i in range(NUM_HASHES)]])
+        if table is not None:
+            verified = _fused_band_verify(
+                docs.sparkSession, table, min_jaccard, min_est_matches)
+            if not memo:
+                return verified
+            # store at data-sized width (the verified set scales with
+            # the corpus, not the candidate count — which this path
+            # never materializes); downstream consumers (CC, span
+            # stats) re-scan this frame, and the CC gate reads its
+            # observed row count
+            store_width = max(1, min(n_docs // 1_000 + 1, par))
+            return observed_checkpoint(verified.repartition(store_width))
 
+        prof = combined.select(id_col, *[f"m{i}" for i in range(NUM_HASHES)])
         mins_arr = minhash_mins_array()
         est = minhash_est("mins_a", "mins_b")
 
@@ -745,183 +960,18 @@ def minhash_near_dups(
             return jaccard_projection(
                 pairs, "id_a", "id_b", "sh_a", "sh_b", min_jaccard)
 
+        pay_cols = [F.col("n_sh"), *([F.col(w) for w in words] if words else [F.col("sh")])]
         side = combined.select(F.col(id_col), mins_arr.alias("mins"), *pay_cols)
-        if words and pay_bytes + mins_bytes < BROADCAST_BYTES_CAP:
-            # FUSED BANDED VERIFY (r8, bitmap regime): candidates are
-            # never materialized JVM-side at all. r8's first cut still
-            # shipped the 2.3 M candidate pairs THROUGH Arrow into the
-            # numpy gather, and the transfer itself — not the popcount
-            # math — turned out to be the cost (measured: an IDENTITY
-            # mapInPandas/mapInArrow over the candidate frame is ~18-24
-            # CPU-s at sf0.1 under the C1 bench JIT; the numpy verify
-            # inside is ~2). Everything the banding join derives is a
-            # pure function of the broadcast side table (16 minima per
-            # doc), so each task re-derives the LSH buckets it OWNS
-            # from the broadcast minima instead: lexsort the band's 4
-            # minima columns, split groups, keep buckets hashing to
-            # this task id, enumerate id_a < id_b pairs per bucket
-            # (vectorized per bucket-size class), drop pairs that
-            # already share an EARLIER band (exact min-band dedup — a
-            # pair is emitted by exactly one bucket globally, so no
-            # JVM-side distinct), then screen + popcount-verify in the
-            # same array pass. Input: one row per task id; output:
-            # verified integers only.
-            #
-            # Bucket semantics match lsh_candidate_pairs exactly: two
-            # docs share band b iff their 4 minima tuples are equal
-            # (the md5 band digest is injective on the tuple), and the
-            # oracle's DISTINCT-pair + estimate-floor + exact-Jaccard
-            # contract is evaluated on the same integers. EXACTNESS of
-            # the emitted rows is the r8 gather argument verbatim: the
-            # UDF emits only exact integers (|∩| and na+nb) screened by
-            # the exact integer estimate floor and a CONSERVATIVE
-            # raw-ratio screen (margin 1e-6 > the 5e-7 half-ulp a
-            # rounded value can move); the authoritative
-            # round-then-threshold runs JVM-side with the identical
-            # double expression as jaccard_words_projection.
-            #
-            # 100 TB note: this regime is, by construction, the
-            # bounded-corpus one (the whole side table must fit the
-            # broadcast cap); past the cap the two-phase JVM path below
-            # is unchanged and fully distributed.
-            import numpy as np
-
-            mcols = [f"m{i}" for i in range(NUM_HASHES)]
-            pside = (
-                combined.select(F.col(id_col), F.col("n_sh"), *words, *mcols)
-                .toPandas()
-                .sort_values(id_col)
-            )
-            ids_np = np.ascontiguousarray(pside[id_col].to_numpy(np.int64))
-            n_np = np.ascontiguousarray(pside["n_sh"].to_numpy(np.int64))
-            words_np = np.ascontiguousarray(
-                pside[list(words)].to_numpy(np.int64)
-            ).view(np.uint64)
-            mins_np = np.ascontiguousarray(pside[mcols].to_numpy(np.int64))
-            bc = docs.sparkSession.sparkContext.broadcast(
-                (ids_np, n_np, words_np, mins_np)
-            )
-            raw_floor = float(min_jaccard) - 1e-6
-            est_floor = int(min_est_matches)
-            # tasks scale with corpus size (each re-derives the banding
-            # over the broadcast minima — trivial next to enumeration),
-            # NOT fixed at full parallelism: a fresh python worker
-            # costs ~0.7-2.5 CPU-s of interpreter+import spin-up, which
-            # at 32 tasks would dwarf the ~3 CPU-s of actual numpy work
-            # on a 5k-doc corpus
-            n_parts = max(1, min(par, n_docs // 600 + 1))
-            bands, rpb = 4, NUM_HASHES // 4  # lsh_candidate_pairs defaults
-
-            def gen(batches):
-                import numpy as np
-                import pyarrow as pa
-
-                ids, nsz, wbits, mins = bc.value
-                pop8 = np.unpackbits(
-                    np.arange(256, dtype=np.uint8)[:, None], axis=1
-                ).sum(axis=1).astype(np.int64)
-                CHUNK = 1 << 19  # pairs per enumeration slice (memory cap)
-
-                def band_pairs(pid):
-                    if len(mins) < 2:
-                        return
-                    for band in range(bands):
-                        sub = mins[:, band * rpb:(band + 1) * rpb]
-                        order = np.lexsort(sub.T[::-1])
-                        srt = sub[order]
-                        brk = np.flatnonzero(
-                            np.any(srt[1:] != srt[:-1], axis=1)) + 1
-                        starts = np.concatenate(([0], brk))
-                        sizes = np.diff(np.concatenate((starts, [len(srt)])))
-                        # deterministic bucket -> task assignment (FNV-
-                        # style mix of the band minima; only balance
-                        # depends on it, never correctness)
-                        key = srt[starts].astype(np.uint64)
-                        hsh = np.full(len(starts), 0xcbf29ce484222325,
-                                      np.uint64)
-                        for j in range(rpb):
-                            hsh = (hsh ^ key[:, j]) * np.uint64(0x100000001b3)
-                        sel = ((hsh % np.uint64(n_parts)).astype(np.int64)
-                               == pid) & (sizes >= 2)
-                        sel_starts, sel_sizes = starts[sel], sizes[sel]
-                        for sz in np.unique(sel_sizes):
-                            gs = sel_starts[sel_sizes == sz]
-                            mat = order[gs[:, None] + np.arange(sz)[None, :]]
-                            mat.sort(axis=1)  # table index asc == id asc
-                            iu0, iu1 = np.triu_indices(sz, 1)
-                            gpc = max(1, CHUNK // len(iu0))
-                            for g0 in range(0, len(gs), gpc):
-                                m = mat[g0:g0 + gpc]
-                                A = m[:, iu0].ravel()
-                                B = m[:, iu1].ravel()
-                                if band:
-                                    # min-band dedup: an earlier shared
-                                    # band already emitted this pair
-                                    dup = np.zeros(len(A), bool)
-                                    for j in range(band):
-                                        dup |= (
-                                            mins[A, j * rpb:(j + 1) * rpb]
-                                            == mins[B, j * rpb:(j + 1) * rpb]
-                                        ).all(axis=1)
-                                    A, B = A[~dup], B[~dup]
-                                if not len(A):
-                                    continue
-                                est_np = (mins[A] == mins[B]).sum(axis=1)
-                                ok = est_np >= est_floor
-                                A, B = A[ok], B[ok]
-                                if not len(A):
-                                    continue
-                                inter = (
-                                    pop8[(wbits[A] & wbits[B]).view(np.uint8)]
-                                    .reshape(len(A), -1)
-                                    .sum(axis=1, dtype=np.int64)
-                                )
-                                tot = nsz[A] + nsz[B]
-                                keep = inter >= raw_floor * (tot - inter)
-                                if keep.any():
-                                    yield (ids[A[keep]], ids[B[keep]],
-                                           inter[keep], tot[keep])
-
-                for batch in batches:
-                    for pid in batch.column(0).to_numpy(
-                            zero_copy_only=False):
-                        for ia, ib, ii, tt in band_pairs(int(pid)):
-                            yield pa.RecordBatch.from_arrays(
-                                [pa.array(ia), pa.array(ib),
-                                 pa.array(ii), pa.array(tt)],
-                                names=["id_a", "id_b", "__i", "__t"],
-                            )
-
-            pre = docs.sparkSession.range(
-                0, n_parts, 1, numPartitions=n_parts
-            ).mapInArrow(gen, schema="id_a long, id_b long, __i long, __t long")
-            jac = F.round(
-                F.col("__i").cast("double")
-                / (F.col("__t").cast("double") - F.col("__i").cast("double")),
-                6,
-            )
-            verified = pre.select(
-                "id_a", "id_b", jac.alias("jaccard")
-            ).filter(F.col("jaccard") >= min_jaccard)
-            if not memo:
-                return verified
-            # store at data-sized width (the verified set scales with
-            # the corpus, not the candidate count — which this path
-            # never materializes); downstream consumers (CC loop,
-            # span stats) re-scan this frame many times
-            store_width = max(1, min(n_docs // 1_000 + 1, par))
-            return verified.repartition(store_width).localCheckpoint(eager=True)
-
         sigs = minhash_signatures(id_col=id_col, profile=prof)
         cand = lsh_candidate_pairs(sigs, id_col, memo=memo)
         if pay_bytes + mins_bytes < BROADCAST_BYTES_CAP:
-            n_cand = cand.count()  # cheap: cand is checkpointed
+            n_cand = observed(cand)
             width = max(par, min(n_cand // 100_000 + 1, 8 * par))
-            # array path (huge shingle universes, sides still under
-            # the cap): fused single-stage codegen verify — mins +
-            # set payload per side in one broadcast frame; the
-            # estimate screen runs before the per-pair hash-set
-            # intersect that dominates here
+            # array path whose shingle universe is too wide for per-doc
+            # bitmaps, sides still under the cap: fused single-stage
+            # codegen verify — mins + set payload per side in one
+            # broadcast frame; the estimate screen runs before the
+            # per-pair hash-set intersect that dominates here
             a = F.broadcast(side.select(
                 F.col(id_col).alias("id_a"), F.col("mins").alias("mins_a"),
                 *sided("_a")))
@@ -933,21 +983,20 @@ def minhash_near_dups(
             if not memo:
                 return verified
             store_width = max(1, min(n_cand // 500_000 + 1, par))
-            return verified.repartition(store_width).localCheckpoint(eager=True)
+            return observed_checkpoint(verified.repartition(store_width))
         else:
             # two-phase: narrow screen, then the payload-attaching join
             # only for survivors
             prof_m = combined.select(F.col(id_col), mins_arr.alias("mins"))
             mins_a = prof_m.select(F.col(id_col).alias("id_a"), F.col("mins").alias("mins_a"))
             mins_b = prof_m.select(F.col(id_col).alias("id_b"), F.col("mins").alias("mins_b"))
-            screened = (
+            screened = observed_checkpoint(
                 cand.join(size_hinted(mins_a, mins_bytes), "id_a")
                 .join(size_hinted(mins_b, mins_bytes), "id_b")
                 .filter(est >= min_est_matches)
                 .select("id_a", "id_b")
-                .localCheckpoint(eager=True)
             )
-            n_pairs = screened.count()
+            n_pairs = observed(screened)
             width = max(par, min(n_pairs // 20_000 + 1, 8 * par))
             sa = size_hinted(
                 side.select(F.col(id_col).alias("id_a"), *sided("_a")), pay_bytes)
@@ -965,7 +1014,7 @@ def minhash_near_dups(
             # (measured: the CC's symmetric-edge build dropped 14 → 2
             # CPU-s at sf0.1)
             store_width = max(1, min(n_pairs // 500_000 + 1, par))
-            return verified.repartition(store_width).localCheckpoint(eager=True)
+            return observed_checkpoint(verified.repartition(store_width))
 
     if not memo:
         return build()
@@ -1083,167 +1132,48 @@ def incremental_band_dedup(
     - the per-batch verify attaches payloads for CANDIDATES only
       (batch-bounded), with the estimate screen cutting the
       set-attaching join's input first.
+
+    Bounded corpora skip that per-generation chain: when the per-doc
+    minima and payload (sizes observed by the build's checkpoint) and
+    the side table's bitmaps fit ``BROADCAST_BYTES_CAP`` — in either
+    payload regime, as in :func:`minhash_near_dups` — every cross-
+    generation pair is verified in one :func:`_fused_band_verify`
+    pass, and the generations are elected from that one pair table.
     """
     combined = _shared_build(docs, id_col, text_col, memo=memo)
     words = _build_words(combined)
     all_ids = docs.select(
         F.col(id_col), F.pmod(id_col, gens).cast("long").alias("gen"))
+    n_docs, mins_bytes, pay_bytes = _verify_payload_bytes(combined, words)
+    table = None
+    if pay_bytes + mins_bytes < BROADCAST_BYTES_CAP:
+        table = _bitmap_table(
+            combined, id_col, words or "sh",
+            ["n_sh", *[f"m{i}" for i in range(NUM_HASHES)]])
 
-    if words:
-        n_docs = combined.count()
-        mins_bytes = n_docs * (NUM_HASHES * 8 + 24)
-        pay_bytes = n_docs * (len(words) + 1) * 8 + n_docs * 24
-    else:
-        n_docs = mins_bytes = pay_bytes = None
-
-    if words and pay_bytes + mins_bytes < BROADCAST_BYTES_CAP:
-        # FUSED ALL-GENERATIONS VERIFY (r13, bitmap regime - the
-        # minhash_near_dups fused template applied to the incremental
-        # chain): the per-generation JVM chain below serializes two
-        # (band join -> distinct -> screen+verify joins -> agg ->
-        # checkpoint) rounds, ~2.5-3.5 s each at sf0.1 for 523 k+
-        # candidates/gen, almost all of it exchange + AQE latency.
-        # Every cross-generation candidate is instead derived and
-        # verified in ONE mapInArrow pass over the broadcast minima
-        # (pair oriented so id_a is the HIGHER generation - the batch
-        # doc probing the index; same-generation pairs are never
-        # emitted, preserving the batch-vs-index contract), and the
-        # "removed docs never join the index" rule moves to an
-        # anti-join on the VERIFIED pair table: per-pair verification
-        # is deterministic, so filtering removed partners after the
-        # verify yields exactly the pair set the per-generation probe
-        # would have produced (the excluded pairs' numpy popcounts are
-        # wasted work bounded by the dup rate - microseconds against
-        # two saved exchange rounds). Exactness is the fused
-        # near-dups argument verbatim: the UDF emits exact integers
-        # screened by the exact estimate floor and a conservative
-        # raw-ratio screen; the authoritative round-then-threshold
-        # runs JVM-side. Past the broadcast cap the per-generation
-        # probe below is unchanged - the 100 TB crawl-vs-persisted-
-        # index regime.
-        import numpy as np
-
-        mcols = [f"m{i}" for i in range(NUM_HASHES)]
-        pside = (
-            combined.select(F.col(id_col), F.col("n_sh"), *words, *mcols)
-            .toPandas()
-            .sort_values(id_col)
-        )
-        ids_np = np.ascontiguousarray(pside[id_col].to_numpy(np.int64))
-        n_np = np.ascontiguousarray(pside["n_sh"].to_numpy(np.int64))
-        words_np = np.ascontiguousarray(
-            pside[list(words)].to_numpy(np.int64)
-        ).view(np.uint64)
-        mins_np = np.ascontiguousarray(pside[mcols].to_numpy(np.int64))
-        bc = docs.sparkSession.sparkContext.broadcast(
-            (ids_np, n_np, words_np, mins_np)
-        )
-        raw_floor = float(min_jaccard) - 1e-6
-        est_floor = int(min_est_matches)
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        n_parts = max(1, min(par, n_docs // 600 + 1))
-        bands, rpb = 4, NUM_HASHES // 4
-        n_gens = int(gens)
-
-        def gen_fn(batches):
-            import numpy as np
-            import pyarrow as pa
-
-            ids, nsz, wbits, mins = bc.value
-            gen_of = (ids % n_gens).astype(np.int64)
-            pop8 = np.unpackbits(
-                np.arange(256, dtype=np.uint8)[:, None], axis=1
-            ).sum(axis=1).astype(np.int64)
-            CHUNK = 1 << 19
-
-            def band_pairs(pid):
-                if len(mins) < 2:
-                    return
-                for band in range(bands):
-                    sub = mins[:, band * rpb:(band + 1) * rpb]
-                    order = np.lexsort(sub.T[::-1])
-                    srt = sub[order]
-                    brk = np.flatnonzero(
-                        np.any(srt[1:] != srt[:-1], axis=1)) + 1
-                    starts = np.concatenate(([0], brk))
-                    sizes = np.diff(np.concatenate((starts, [len(srt)])))
-                    key = srt[starts].astype(np.uint64)
-                    hsh = np.full(len(starts), 0xcbf29ce484222325,
-                                  np.uint64)
-                    for j in range(rpb):
-                        hsh = (hsh ^ key[:, j]) * np.uint64(0x100000001b3)
-                    sel = ((hsh % np.uint64(n_parts)).astype(np.int64)
-                           == pid) & (sizes >= 2)
-                    sel_starts, sel_sizes = starts[sel], sizes[sel]
-                    for sz in np.unique(sel_sizes):
-                        gs = sel_starts[sel_sizes == sz]
-                        mat = order[gs[:, None] + np.arange(sz)[None, :]]
-                        iu0, iu1 = np.triu_indices(sz, 1)
-                        gpc = max(1, CHUNK // len(iu0))
-                        for g0 in range(0, len(gs), gpc):
-                            m = mat[g0:g0 + gpc]
-                            A = m[:, iu0].ravel()
-                            B = m[:, iu1].ravel()
-                            # cross-generation pairs only; orient so
-                            # id_a carries the HIGHER generation (the
-                            # probing batch doc)
-                            cross = gen_of[A] != gen_of[B]
-                            A, B = A[cross], B[cross]
-                            if not len(A):
-                                continue
-                            swap = gen_of[A] < gen_of[B]
-                            A, B = (np.where(swap, B, A),
-                                    np.where(swap, A, B))
-                            if band:
-                                # min-band dedup: an earlier shared
-                                # band already emitted this pair
-                                dup = np.zeros(len(A), bool)
-                                for j in range(band):
-                                    dup |= (
-                                        mins[A, j * rpb:(j + 1) * rpb]
-                                        == mins[B, j * rpb:(j + 1) * rpb]
-                                    ).all(axis=1)
-                                A, B = A[~dup], B[~dup]
-                            if not len(A):
-                                continue
-                            est_np = (mins[A] == mins[B]).sum(axis=1)
-                            ok = est_np >= est_floor
-                            A, B = A[ok], B[ok]
-                            if not len(A):
-                                continue
-                            inter = (
-                                pop8[(wbits[A] & wbits[B]).view(np.uint8)]
-                                .reshape(len(A), -1)
-                                .sum(axis=1, dtype=np.int64)
-                            )
-                            tot = nsz[A] + nsz[B]
-                            keep = inter >= raw_floor * (tot - inter)
-                            if keep.any():
-                                yield (ids[A[keep]], ids[B[keep]],
-                                       inter[keep], tot[keep])
-
-            for batch in batches:
-                for pid in batch.column(0).to_numpy(zero_copy_only=False):
-                    for ia, ib, ii, tt in band_pairs(int(pid)):
-                        yield pa.RecordBatch.from_arrays(
-                            [pa.array(ia), pa.array(ib),
-                             pa.array(ii), pa.array(tt)],
-                            names=["id_a", "id_b", "__i", "__t"],
-                        )
-
-        pre = docs.sparkSession.range(
-            0, n_parts, 1, numPartitions=n_parts
-        ).mapInArrow(gen_fn, schema="id_a long, id_b long, __i long, __t long")
-        jac = F.round(
-            F.col("__i").cast("double")
-            / (F.col("__t").cast("double") - F.col("__i").cast("double")),
-            6,
-        )
-        # the verified cross-gen pair table is bounded by the dup rate;
-        # checkpointed once, every generation's election reads it
+    if table is not None:
+        # FUSED ALL-GENERATIONS VERIFY (r13 - the minhash_near_dups
+        # fused kernel applied to the incremental chain): the per-
+        # generation JVM chain below serializes two (band join ->
+        # distinct -> screen+verify joins -> agg -> checkpoint) rounds,
+        # ~2.5-3.5 s each at sf0.1 for 523 k+ candidates/gen, almost
+        # all of it exchange + AQE latency. Every cross-generation
+        # candidate is instead derived and verified in ONE mapInArrow
+        # pass over the broadcast minima (pairs oriented so id_a is the
+        # HIGHER generation - the batch doc probing the index; same-
+        # generation pairs are never emitted, preserving the batch-vs-
+        # index contract), and the "removed docs never join the index"
+        # rule moves to an anti-join on the VERIFIED pair table: per-
+        # pair verification is deterministic, so filtering removed
+        # partners after the verify yields exactly the pair set the
+        # per-generation probe would have produced (the excluded
+        # pairs' numpy popcounts are wasted work bounded by the dup
+        # rate - microseconds against two saved exchange rounds). Past
+        # the broadcast cap the per-generation probe below is unchanged
+        # - the 100 TB crawl-vs-persisted-index regime.
         verified = (
-            pre.select("id_a", "id_b", jac.alias("jaccard"))
-            .filter(F.col("jaccard") >= min_jaccard)
+            _fused_band_verify(docs.sparkSession, table, min_jaccard,
+                               min_est_matches, gens=gens)
             .select("id_a", "id_b")
             .localCheckpoint(eager=True)
         )
@@ -2389,8 +2319,8 @@ def prefix_filtered_pairs(
         docs, min_jaccard, id_col, text_col, k, partition_cols
     )
     # verify strategy is adaptive on the measured shingle-table size
-    # (sh is checkpointed — the count is a cached-RDD read):
-    n_sh_rows = sh.count()
+    # (observed by the sets checkpoint, see _rarity_build):
+    n_sh_rows = observed(sh)
     if n_sh_rows * 8 < BROADCAST_BYTES_CAP:
         # broadcast regime: attach each side's full hash array via two
         # broadcast joins and count the intersect per pair directly.
@@ -2497,15 +2427,17 @@ def _rarity_build(
             F.col(id_col),
             F.xxhash64(F.col("__t").substr(F.col("__p"), F.lit(k))).alias("h"),
         )
-        return (
+        # n_h = Σ|set| = the (id, h) stream's row count, which the
+        # verify gates read
+        return observed_checkpoint(
             toks.groupBy(id_col).agg(
                 F.collect_set("h").alias("__hs"),
                 *[
                     F.min(F.xxhash64(F.col("h"), F.lit(j))).alias(f"__m{j}")
                     for j in range(_BAND_R * _BAND_B)
                 ],
-            )
-            .localCheckpoint(eager=True)
+            ),
+            n_h=F.size("__hs"),
         )
 
     if memo:
@@ -2515,8 +2447,11 @@ def _rarity_build(
         sets = build_sets()
 
     # (id, h) stream re-derived map-only from the per-doc checkpoint;
-    # shared by the df aggregate and the non-broadcast verify regimes
-    sh = sets.select(F.col(id_col), F.explode("__hs").alias("h"))
+    # shared by the df aggregate and the non-broadcast verify regimes.
+    # It carries its row count: counting it would re-run the explode.
+    sh = with_observed(
+        sets.select(F.col(id_col), F.explode("__hs").alias("h")),
+        rows=observed(sets, "n_h"))
 
     # r=4 rows per band, b=8 bands: sig_i = hash of the band's minima.
     # A J >= t pair agrees on a band iff all r minima match (P = J^r
@@ -2534,14 +2469,10 @@ def _rarity_build(
 
     def build_arrays() -> DataFrame:
         # vocabulary-sized (6k rows here, charset-bounded in general):
-        # checkpoint BEFORE counting so the size-hint count reads the
-        # materialized frame instead of re-running the explode+aggregate
-        # over the shingle stream (~3 CPU-s at sf0.1)
-        dfreq = (
-            sh.groupBy("h").agg(F.count(F.lit(1)).alias("df"))
-            .localCheckpoint(eager=True)
-        )
-        dfreq = size_hinted(dfreq, dfreq.count() * 16)
+        # the size hint reads the row count its checkpoint observed
+        dfreq = observed_checkpoint(
+            sh.groupBy("h").agg(F.count(F.lit(1)).alias("df")))
+        dfreq = size_hinted(dfreq, observed(dfreq) * 16)
         # bands ride the exploded rows into the per-doc aggregate (every
         # row of a doc carries the same array, F.first picks it) — a
         # docs×docs join here would SMJ two stat-less checkpoint frames,
@@ -2772,7 +2703,7 @@ def containment_pairs(
         # (0.25 at t=0.8, over half the index at t=0.5), at 56 B/row
         # plus 8 B per partition column; past the cap the hint
         # degrades to the planner's choice (the 100 TB regime).
-        n_sh_rows = sh.count()
+        n_sh_rows = observed(sh)
         prefix_frac = 1.0 - min_containment + 0.05
         prefix_a = size_hinted(
             prefix_a, int(n_sh_rows * prefix_frac * (56 + 8 * len(pcols))),
@@ -2809,53 +2740,38 @@ def containment_pairs(
             )
             .select("id_a", "id_b", "sa")
             .distinct()
-            .localCheckpoint(eager=True)
         )
+        # observed: the gather sizes its stage width from the count
+        cand = observed_checkpoint(cand)
         gathered = None
         if n_sh_rows * 8 < BROADCAST_BYTES_CAP:
-            # ARROW GATHER VERIFY (same move as the MinHash bitmap
-            # regime, minhash_near_dups above): the closed-vocabulary
+            # ARROW GATHER VERIFY (same move as the MinHash fused
+            # verify, minhash_near_dups above): the closed-vocabulary
             # corpus makes the candidate set ~60% of all in-source
             # pairs (390k at sf0.1 for 14 outputs — no exact filter
             # prunes it, see the positional-filter note), so per-pair
             # verify cost IS the operator's cost. array_intersect over
             # two broadcast joins measured ~47 CPU-s; the same
             # intersection as bitmap popcounts over the corpus
-            # vocabulary is vectorizable end-to-end: assign each
-            # distinct shingle hash its rank in the sorted vocab (bit
-            # index — injective, so popcount(AND) == |∩| EXACTLY),
-            # build per-doc bitmap words ONCE driver-side (bounded by
-            # this regime's gate), broadcast, and gather+AND+popcount
-            # per Arrow batch. The UDF emits only exact integers
-            # (c, sa) screened by the exact integer threshold; the
-            # authoritative filter + round run JVM-side on those
-            # integers, so results are bit-equal to the join verify.
-            import numpy as np
-
-            ha = (
+            # vocabulary is vectorizable end-to-end: per-doc bitmaps
+            # with one bit per distinct shingle hash, built ONCE
+            # driver-side by _bitmap_table (bounded by this regime's
+            # gate), broadcast, and gather+AND+popcount per Arrow
+            # batch. The UDF emits only exact integers (c, sa) screened
+            # by the exact integer threshold; the authoritative filter
+            # + round run JVM-side on those integers, so results are
+            # bit-equal to the join verify.
+            table = _bitmap_table(
                 arrays.select(
-                    F.col(id_col),
-                    F.transform("__arr", lambda x: x["h"]).alias("__ha"))
-                .toPandas()
-                .sort_values(id_col)
-            )
-            ids_np = np.ascontiguousarray(ha[id_col].to_numpy(np.int64))
-            lens = ha["__ha"].map(len).to_numpy(np.int64)
-            flat = np.concatenate(ha["__ha"].to_list()).astype(np.int64) \
-                if len(ha) else np.empty(0, np.int64)
-            vocab = np.unique(flat)
-            n_words = (len(vocab) + 63) // 64
-            if len(ids_np) * n_words * 8 < BROADCAST_BYTES_CAP:
-                bit = np.searchsorted(vocab, flat)
-                doc_idx = np.repeat(np.arange(len(ids_np)), lens)
-                wbits = np.zeros((len(ids_np), n_words), np.uint64)
-                np.bitwise_or.at(
-                    wbits, (doc_idx, bit >> 6),
-                    np.uint64(1) << (bit & 63).astype(np.uint64))
+                    F.col(id_col), "sz",
+                    F.transform("__arr", lambda x: x["h"]).alias("__ha")),
+                id_col, "__ha", ["sz"])
+            if table is not None:
+                ids_np, wbits, sizes = table
                 bc = cand.sparkSession.sparkContext.broadcast(
-                    (ids_np, lens, wbits))
+                    (ids_np, sizes[:, 0].copy(), wbits))
                 par = cand.sparkSession.sparkContext.defaultParallelism
-                n_cand = cand.count()  # cheap: cand is checkpointed
+                n_cand = observed(cand)
                 # ~100k pairs/task (each ~6 µs of numpy), capped at the
                 # session's width; no max(par, ...) floor — a fresh
                 # python worker costs ~0.5-2 CPU-s of interpreter +

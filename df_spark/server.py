@@ -217,7 +217,10 @@ class Engine:
         # (the frames passed here carry no pending group_by, so
         # df.schema reads the same DataFrame)
         return {
-            field.name: {_block_tag(field.dataType): cols[field.name]}
+            field.name: {
+                _block_tag(field.dataType):
+                    _block_values(field.dataType, cols[field.name])
+            }
             for field in df.schema.fields
         }
 
@@ -227,11 +230,25 @@ def _block_tag(dt: T.DataType) -> str:
         return _block_tag(dt.elementType) + "List"
     if isinstance(dt, T.BooleanType):
         return "Bool"
-    if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType)):
+    if isinstance(dt, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)):
         return "Int"
     if isinstance(dt, (T.DoubleType, T.FloatType, T.DecimalType)):
         return "Float"
     return "String"
+
+
+def _block_values(dt: T.DataType, values: list) -> list:
+    """A column's values in the JSON form of its block tag: decimals as
+    floats, and dates and timestamps as ISO-8601 strings (the
+    reference's AnyBlock has no date block). Nulls stay null."""
+    if isinstance(dt, T.ArrayType):
+        return [None if v is None else _block_values(dt.elementType, v)
+                for v in values]
+    if isinstance(dt, T.DecimalType):
+        return [None if v is None else float(v) for v in values]
+    if isinstance(dt, (T.DateType, T.TimestampType, T.TimestampNTZType)):
+        return [None if v is None else v.isoformat() for v in values]
+    return values
 
 
 def make_handler(engine: Engine):

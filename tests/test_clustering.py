@@ -6,6 +6,7 @@ import warnings
 
 import pytest
 
+from df_spark.operators import clustering
 from df_spark.operators.clustering import connected_components, dedup_groups
 
 
@@ -26,9 +27,10 @@ def test_components_chain_diameter(spark):
     assert len(comps) == n + 1
 
 
-def test_components_releases_intermediate_storage(spark):
+def test_components_releases_intermediate_storage(spark, monkeypatch):
     # each round's checkpoint must be freed: after the run, only the
     # final labels (plus anything the caller already held) may remain
+    monkeypatch.setattr(clustering, "BROADCAST_BYTES_CAP", 0)
     sc = spark.sparkContext
     before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     edges = spark.createDataFrame(
@@ -40,7 +42,9 @@ def test_components_releases_intermediate_storage(spark):
     assert labels.count() == 11
 
 
-def test_components_warns_without_convergence(spark):
+def test_components_warns_without_convergence(spark, monkeypatch):
+    # only the distributed loop has an iteration budget: force it
+    monkeypatch.setattr(clustering, "BROADCAST_BYTES_CAP", 0)
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(8)], "id_a long, id_b long"
     )
@@ -101,3 +105,42 @@ def test_components_match_union_find_on_random_graphs(spark):
         df = spark.createDataFrame(edges, "id_a long, id_b long")
         got = {r.node: r.comp for r in connected_components(df).collect()}
         assert got == expect, f"seed {seed}: {got} != {expect}"
+
+
+def test_components_driver_local_equals_loop(spark, monkeypatch):
+    """The driver-local regime returns exactly the distributed loop's
+    rows (and column types) on a graph with a long chain, several
+    components, negative ids, and duplicate and reversed edges."""
+    edges = (
+        [(i, i + 1) for i in range(-6, 9)]            # chain through 0
+        + [(-20, -21), (-21, -22), (-30, -31)]       # negative-only
+        + [(100, 101), (101, 100), (100, 101)]       # reversed + dup
+        + [(7, 200), (300, 301), (302, 301), (303, 302)]
+    )
+    df = spark.createDataFrame(edges, "id_a long, id_b long").localCheckpoint(eager=True)
+
+    local = connected_components(df)
+    monkeypatch.setattr(clustering, "BROADCAST_BYTES_CAP", 0)
+    loop = connected_components(df)
+
+    assert local.schema == loop.schema
+    assert sorted(local.collect()) == sorted(loop.collect())
+    comps = {r.node: r.comp for r in local.collect()}
+    assert comps[8] == comps[200] == -6
+    assert comps[-22] == -22 and comps[-30] == -31
+    assert comps[303] == 300 and comps[101] == 100
+
+
+def test_components_small_graph_runs_one_job(spark):
+    """Small graph: one collect job, no checkpoint rounds. The edge
+    count comes from the observation its checkpoint took."""
+    from df_spark.operators.observe import observed_checkpoint
+
+    edges = observed_checkpoint(spark.createDataFrame(
+        [(i, i + 1) for i in range(12)] + [(50, 51)], "id_a long, id_b long"))
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    labels = connected_components(edges)
+    assert len(set(tracker.getJobIdsForGroup(None)) - before) == 1
+    assert {r.node: r.comp for r in labels.collect()} == {
+        **{i: 0 for i in range(13)}, 50: 50, 51: 50}

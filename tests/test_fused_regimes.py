@@ -77,3 +77,36 @@ def test_incremental_negative_ids_both_regimes_match_oracle(
     jvm = _rows(D.incremental_band_dedup(docs, 0.6, memo=False))
     assert fused == want
     assert jvm == want
+
+
+@pytest.mark.parametrize("shift", [0, 250])
+def test_fused_array_regime_matches_jvm_and_bitmap(spark, sf_dir, monkeypatch, shift):
+    """With the shared build forced into the array regime
+    (BITMAP_MAX_WORDS = 0), the fused kernel still runs, on bitmaps
+    built from the hash arrays, and returns exactly the rows of the JVM
+    verify (cap 0) and of the bitmap-regime fused path. A hash the
+    array-side bitmap build dropped would shrink an intersection and
+    change a returned Jaccard. ``shift`` moves ids below zero, which
+    changes the incremental generations."""
+    docs = load_sdf(spark, sf_dir, "documents").withColumn(
+        "doc_id", F.col("doc_id") - shift).localCheckpoint(eager=True)
+    fused_calls = []
+    kernel = D._fused_band_verify
+    monkeypatch.setattr(D, "_fused_band_verify",
+                        lambda *a, **k: fused_calls.append(1) or kernel(*a, **k))
+
+    def run():
+        return (_rows(D.minhash_near_dups(docs, 0.6, memo=False)),
+                _rows(D.incremental_band_dedup(docs, 0.6, memo=False)))
+
+    bitmap = run()
+    monkeypatch.setattr(D, "BITMAP_MAX_WORDS", 0)
+    assert "sh" in D._shared_build(docs, memo=False).columns
+    fused_array = run()
+    assert len(fused_calls) == 4
+    monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
+    jvm = run()
+    assert len(fused_calls) == 4
+    assert fused_array == jvm == bitmap
+    assert len(bitmap[0]) > 0
+    assert any(r[3] > 0 for r in bitmap[1]), "no incremental dup"

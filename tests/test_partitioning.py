@@ -3,6 +3,8 @@ partition count — never a constant that would collapse a large scan."""
 
 from __future__ import annotations
 
+import pytest
+
 from df_spark.operators.partitioning import barrier_width
 
 
@@ -89,6 +91,37 @@ def test_observe_metrics_free_with_the_single_pass(spark, sf_dir):
     ).collect()[0]
     assert obs.get["rows"] == expected.rows
     assert obs.get["revenue"] == expected.revenue
+
+
+def test_observed_checkpoint_sizes_cost_no_job(spark, sf_dir):
+    """observed_checkpoint's row count and named sums equal count() and
+    agg over the same frame; reading them starts no job; a frame that
+    carries no observation falls back to count()."""
+    from pyspark.sql import functions as F
+
+    from df_spark.operators.observe import observed, observed_checkpoint
+    from df_spark.sources.tables import load_sdf
+
+    li = load_sdf(spark, sf_dir, "lineitem").filter(F.col("l_quantity") > 10)
+    grouped = li.groupBy("l_orderkey").agg(
+        F.sum(F.col("l_quantity").cast("long")).alias("q"))
+    ck = observed_checkpoint(grouped, q_sum=F.col("q"), keys=F.col("l_orderkey"))
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    got = (observed(ck), observed(ck, "q_sum"), observed(ck, "keys"))
+    assert set(tracker.getJobIdsForGroup(None)) == before
+
+    want = grouped.agg(F.count(F.lit(1)), F.sum("q"), F.sum("l_orderkey")).collect()[0]
+    assert got == tuple(want)
+    assert got[0] == ck.count() > 0
+
+    plain = grouped.localCheckpoint(eager=True)
+    before = set(tracker.getJobIdsForGroup(None))
+    assert observed(plain) == got[0]
+    assert set(tracker.getJobIdsForGroup(None)) != before
+    with pytest.raises(KeyError):
+        observed(plain, "q_sum")
 
 
 def test_runtime_bloom_filter_prunes_probe_side(spark, sf_dir):

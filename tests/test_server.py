@@ -347,3 +347,33 @@ def test_concurrent_requests_build_a_prefix_once(server, tmp_path, monkeypatch):
     assert errors == []
     assert sorted(b["count"]["Int"][0] for b in replies) == [1] * 4 + [2] * 4 + [3] * 4
     assert reads == [str(csv)]
+
+
+def test_date_timestamp_decimal_byte_replies(server, spark, tmp_path):
+    """Column types whose collected values JSON cannot encode reply as
+    their block's form: date and timestamp as ISO-8601 String, decimal
+    as Float, byte as Int."""
+    import datetime
+    import decimal
+
+    pqt = str(tmp_path / "typed.parquet")
+    spark.createDataFrame(
+        [
+            (datetime.date(2024, 1, 31), datetime.datetime(2024, 1, 31, 12, 30, 5),
+             decimal.Decimal("12.34"), 7),
+            (datetime.date(1998, 9, 2), datetime.datetime(1998, 9, 2, 0, 0, 0),
+             decimal.Decimal("-0.50"), -3),
+            (None, None, None, None),
+        ],
+        "d date, ts timestamp, amt decimal(15,2), b tinyint",
+    ).coalesce(1).write.parquet(pqt)
+    plan = call(None, {"Read": ["parquet", pqt, {"columns": []}]})["dataframe"]
+    plan = call(plan, {"Op": {"Select": [
+        {"Source": "d"}, {"Source": "ts"}, {"Source": "amt"}, {"Source": "b"}]}})["dataframe"]
+    blocks = call(plan, {"Action": {"Take": 2}})["blocks"]
+    assert blocks == {
+        "d": {"String": ["2024-01-31", "1998-09-02"]},
+        "ts": {"String": ["2024-01-31T12:30:05", "1998-09-02T00:00:00"]},
+        "amt": {"Float": [12.34, -0.5]},
+        "b": {"Int": [7, -3]},
+    }
