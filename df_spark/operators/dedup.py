@@ -362,12 +362,12 @@ def _shared_build(
             prof = hashes.groupBy(id_col).agg(
                 *[F.min(minhash_perm(F.col("h"), i)).alias(f"m{i}")
                   for i in range(NUM_HASHES)])
-            return observed_checkpoint(
+            return with_observed(observed_checkpoint(
                 sets.filter(F.size("sh") > 0)
                 .withColumn("n_sh", F.size("sh"))
                 .join(prof, id_col),
                 nh=F.col("n_sh"),
-            )
+            ), n_hashes=stats["n_hashes"])
 
         from pyspark.sql import Window
 
@@ -441,8 +441,11 @@ def _shared_build(
             plan_probe.append(
                 combined._jdf.queryExecution().executedPlan().toString())
         # the verify gates read the doc count and Σn_sh (see
-        # _verify_payload_bytes) off this checkpoint's own job
-        return observed_checkpoint(combined, nh=F.col("n_sh"))
+        # _verify_payload_bytes) off this checkpoint's own job, and the
+        # distinct-hash count (the array regime's bitmap width, see
+        # _fused_table) off the dictionary stats above
+        return with_observed(
+            observed_checkpoint(combined, nh=F.col("n_sh")), n_hashes=n_hashes)
 
     if not memo:
         return build()
@@ -628,8 +631,7 @@ def lsh_candidate_pairs(
             buckets.select(F.col(id_col).alias("id_b"), "bucket", "band_idx"),
             buckets_bytes)
         pairs = left.join(right, ["bucket", "band_idx"]).filter(F.col("id_a") < F.col("id_b"))
-        # observed: minhash_near_dups sizes its verify from the count
-        return observed_checkpoint(pairs.select("id_a", "id_b").distinct())
+        return pairs.select("id_a", "id_b").distinct().localCheckpoint(eager=True)
 
     if not memo:
         return build()
@@ -653,6 +655,28 @@ def _verify_payload_bytes(combined: DataFrame, words: list[str]) -> tuple[int, i
     return n_docs, n_docs * (NUM_HASHES * 8 + 24), pay_bytes
 
 
+def _bitmap_bytes(n_docs: int, n_hashes: int) -> int:
+    """Bytes of :func:`_bitmap_table`'s bitmaps: one bit per distinct
+    hash, rounded up to whole uint64 words per doc."""
+    return n_docs * ((n_hashes + 63) // 64) * 8
+
+
+def _fused_table(combined: DataFrame, id_col: str, words: list[str]):
+    """The :func:`_fused_band_verify` side table of a
+    :func:`_shared_build` frame (extras ``[n_sh, m0..m15]``), or None
+    when the per-doc minima and payload, or the bitmaps, would pass
+    ``BROADCAST_BYTES_CAP``. In the array regime the bitmaps take one
+    bit per distinct hash, counted by the build (``n_hashes``). Every
+    size is observed, so a None costs no job and collects nothing."""
+    n_docs, mins_bytes, pay_bytes = _verify_payload_bytes(combined, words)
+    n_bits = len(words) * 64 or observed(combined, "n_hashes")
+    if max(pay_bytes + mins_bytes,
+           _bitmap_bytes(n_docs, n_bits)) >= BROADCAST_BYTES_CAP:
+        return None
+    return _bitmap_table(combined, id_col, words or "sh",
+                         ["n_sh", *[f"m{i}" for i in range(NUM_HASHES)]])
+
+
 def _bitmap_table(frame: DataFrame, id_col: str, bits: list[str] | str,
                   extra: list[str]):
     """Driver-side side table of the Arrow verify kernels (the fused
@@ -665,8 +689,9 @@ def _bitmap_table(frame: DataFrame, id_col: str, bits: list[str] | str,
     :func:`_shared_build` frame, or ONE hash-array column: then every
     distinct hash in the corpus gets its own bit (its rank among the
     distinct hashes), so popcount(a & b) = |a ∩ b| EXACTLY, the arrays
-    being sets. Returns None when those bitmaps would pass
-    ``BROADCAST_BYTES_CAP`` (the caller keeps its JVM verify)."""
+    being sets. The caller gates on the bitmaps' size BEFORE calling
+    (``docs × ceil(distinct hashes / 64) × 8`` bytes, from observed
+    sizes): this collects the whole frame to the driver."""
     import numpy as np
     import pyarrow.compute as pc
 
@@ -686,10 +711,7 @@ def _bitmap_table(frame: DataFrame, id_col: str, bits: list[str] | str,
         vocab, bit = np.unique(
             pc.list_flatten(arrays).to_numpy().astype(np.int64),
             return_inverse=True)
-        n_words = (len(vocab) + 63) // 64
-        if len(ids) * n_words * 8 >= BROADCAST_BYTES_CAP:
-            return None
-        wbits = np.zeros((len(ids), n_words), np.uint64)
+        wbits = np.zeros((len(ids), (len(vocab) + 63) // 64), np.uint64)
         np.bitwise_or.at(
             wbits, (np.repeat(np.arange(len(ids)), lens), bit >> 6),
             np.uint64(1) << (bit & 63).astype(np.uint64))
@@ -734,12 +756,20 @@ def _fused_band_verify(spark, table, min_jaccard: float, min_est_matches: int,
     with the identical double expression as :func:`jaccard_projection`
     and :func:`jaccard_words_projection`.
 
+    Pairs are enumerated in slices whose numpy temporaries stay near
+    128 MB whatever the bitmap width: per pair, two 16-minima
+    gathers, two bitmap-row gathers, their AND and its byte popcounts,
+    and the index arrays. A bucket larger than a slice is split across
+    slices, so the array regime's wider bitmaps and a dense boilerplate
+    bucket cannot blow a worker's memory up together.
+
     100 TB note: this regime is, by construction, the bounded-corpus
     one (the whole side table must fit the broadcast cap); past the cap
     the callers' JVM paths are unchanged and fully distributed."""
     import numpy as np
 
     ids, wbits, extras = table
+    chunk = max(1, (1 << 27) // (32 * wbits.shape[1] + 8 * (2 * NUM_HASHES + 8)))
     bc = spark.sparkContext.broadcast((
         ids, np.ascontiguousarray(extras[:, 0]), wbits,
         np.ascontiguousarray(extras[:, 1:])))
@@ -759,10 +789,11 @@ def _fused_band_verify(spark, table, min_jaccard: float, min_est_matches: int,
 
         ids, nsz, wbits, mins = bc.value
         gen_of = None if gens is None else ids % gens
+        # per-byte popcounts as uint8: the lookup result is then no
+        # larger than the AND it reads
         pop8 = np.unpackbits(
             np.arange(256, dtype=np.uint8)[:, None], axis=1
-        ).sum(axis=1).astype(np.int64)
-        CHUNK = 1 << 19  # pairs per enumeration slice (memory cap)
+        ).sum(axis=1).astype(np.uint8)
 
         def band_pairs(pid):
             if len(mins) < 2:
@@ -784,14 +815,23 @@ def _fused_band_verify(spark, table, min_jaccard: float, min_est_matches: int,
                 sel = ((hsh % np.uint64(n_parts)).astype(np.int64) == pid) & (sizes >= 2)
                 sel_starts, sel_sizes = starts[sel], sizes[sel]
                 for sz in np.unique(sel_sizes):
+                    # every pair of every bucket of this size, numbered
+                    # bucket-major then row-major over the upper
+                    # triangle, and decoded a slice at a time: one
+                    # boilerplate bucket of thousands of docs is split
+                    # like many small ones
                     gs = sel_starts[sel_sizes == sz]
-                    mat = order[gs[:, None] + np.arange(sz)[None, :]]
-                    iu0, iu1 = np.triu_indices(sz, 1)
-                    gpc = max(1, CHUNK // len(iu0))
-                    for g0 in range(0, len(gs), gpc):
-                        m = mat[g0:g0 + gpc]
-                        A = m[:, iu0].ravel()
-                        B = m[:, iu1].ravel()
+                    per_row = np.arange(sz - 1, 0, -1)
+                    row_end = np.cumsum(per_row)
+                    row_start = row_end - per_row
+                    n_pair = int(row_end[-1])
+                    total = len(gs) * n_pair
+                    for c0 in range(0, total, chunk):
+                        g, r = np.divmod(
+                            np.arange(c0, min(c0 + chunk, total)), n_pair)
+                        i = np.searchsorted(row_end, r, side="right")
+                        A = order[gs[g] + i]
+                        B = order[gs[g] + i + 1 + r - row_start[i]]
                         if gen_of is None:
                             # table index order == id order
                             A, B = np.minimum(A, B), np.maximum(A, B)
@@ -889,28 +929,21 @@ def minhash_near_dups(
       and popcount-verifies in numpy. The side table's bitmaps are the
       build's words, or in the array regime one bit per distinct hash
       of the corpus (:func:`_bitmap_table`; exact, the arrays being
-      sets) while those bitmaps also fit the cap.
-    - **broadcast join** (array regime whose bitmaps would pass the
-      cap, sides still under it): one codegen stage over the
-      checkpointed :func:`lsh_candidate_pairs` — candidates
-      repartitioned to ~100k pairs/task, both sides' payloads attached
-      via two broadcast hash joins, the estimate screening before the
-      hash-set intersect. Screened-out pairs cost only in-stage CPU,
-      never a materialization.
-    - **two-phase** (sides exceed the cap — the 100 TB regime, where
-      the sets frame is corpus-sized and every join shuffles): screen
-      the candidates against the NARROW mins first (16 longs/doc
-      through the shuffle, not KB arrays), checkpoint the survivors,
-      then pay the array-attaching shuffle join only for them. When
-      the screen is selective (sparse corpora — the production case,
-      unlike the dense synthetic sf0.1 corpus) this avoids shuffling
-      shingle arrays for pairs the estimate already rejects.
-
-    Both JVM branches size the pair-stream repartition to the observed
-    pair count (broadcast join: ~100k pairs/task; two-phase: ~20k
-    array-carrying pairs/task; both capped at 8× parallelism) — the
-    pair frame otherwise inherits ~10 post-join partitions from
-    upstream (measured 12.2 s vs 3.0 s at sf0.1).
+      sets) while those bitmaps also fit the cap — checked from the
+      build's observed hash count before anything is collected.
+    - **two-phase** (the minima and payload, or the bitmaps, exceed
+      the cap — the 100 TB regime, where the sets frame is corpus-
+      sized and every join shuffles): screen the checkpointed
+      :func:`lsh_candidate_pairs` against the NARROW mins first (16
+      longs/doc through the shuffle, not KB arrays), checkpoint the
+      survivors, then pay the payload-attaching join only for them.
+      When the screen is selective (sparse corpora — the production
+      case, unlike the dense synthetic sf0.1 corpus) this avoids
+      shuffling shingle arrays for pairs the estimate already rejects.
+      The pair-stream repartition is sized to the observed survivor
+      count (~20k payload-carrying pairs/task, capped at 8×
+      parallelism) — the pair frame otherwise inherits ~10 post-join
+      partitions from upstream (measured 12.2 s vs 3.0 s at sf0.1).
 
     With ``memo=True`` the verified pair set itself is session-memoized
     (eager observed checkpoint, re-partitioned to data-sized width so
@@ -924,11 +957,7 @@ def minhash_near_dups(
         words = _build_words(combined)
         par = docs.sparkSession.sparkContext.defaultParallelism
         n_docs, mins_bytes, pay_bytes = _verify_payload_bytes(combined, words)
-        table = None
-        if pay_bytes + mins_bytes < BROADCAST_BYTES_CAP:
-            table = _bitmap_table(
-                combined, id_col, words or "sh",
-                ["n_sh", *[f"m{i}" for i in range(NUM_HASHES)]])
+        table = _fused_table(combined, id_col, words)
         if table is not None:
             verified = _fused_band_verify(
                 docs.sparkSession, table, min_jaccard, min_est_matches)
@@ -960,61 +989,39 @@ def minhash_near_dups(
             return jaccard_projection(
                 pairs, "id_a", "id_b", "sh_a", "sh_b", min_jaccard)
 
-        pay_cols = [F.col("n_sh"), *([F.col(w) for w in words] if words else [F.col("sh")])]
-        side = combined.select(F.col(id_col), mins_arr.alias("mins"), *pay_cols)
+        side = combined.select(F.col(id_col), "n_sh", *(words or ["sh"]))
         sigs = minhash_signatures(id_col=id_col, profile=prof)
         cand = lsh_candidate_pairs(sigs, id_col, memo=memo)
-        if pay_bytes + mins_bytes < BROADCAST_BYTES_CAP:
-            n_cand = observed(cand)
-            width = max(par, min(n_cand // 100_000 + 1, 8 * par))
-            # array path whose shingle universe is too wide for per-doc
-            # bitmaps, sides still under the cap: fused single-stage
-            # codegen verify — mins + set payload per side in one
-            # broadcast frame; the estimate screen runs before the
-            # per-pair hash-set intersect that dominates here
-            a = F.broadcast(side.select(
-                F.col(id_col).alias("id_a"), F.col("mins").alias("mins_a"),
-                *sided("_a")))
-            b = F.broadcast(side.select(
-                F.col(id_col).alias("id_b"), F.col("mins").alias("mins_b"),
-                *sided("_b")))
-            joined = cand.repartition(width).join(a, "id_a").join(b, "id_b")
-            verified = verify(joined.filter(est >= min_est_matches))
-            if not memo:
-                return verified
-            store_width = max(1, min(n_cand // 500_000 + 1, par))
-            return observed_checkpoint(verified.repartition(store_width))
-        else:
-            # two-phase: narrow screen, then the payload-attaching join
-            # only for survivors
-            prof_m = combined.select(F.col(id_col), mins_arr.alias("mins"))
-            mins_a = prof_m.select(F.col(id_col).alias("id_a"), F.col("mins").alias("mins_a"))
-            mins_b = prof_m.select(F.col(id_col).alias("id_b"), F.col("mins").alias("mins_b"))
-            screened = observed_checkpoint(
-                cand.join(size_hinted(mins_a, mins_bytes), "id_a")
-                .join(size_hinted(mins_b, mins_bytes), "id_b")
-                .filter(est >= min_est_matches)
-                .select("id_a", "id_b")
-            )
-            n_pairs = observed(screened)
-            width = max(par, min(n_pairs // 20_000 + 1, 8 * par))
-            sa = size_hinted(
-                side.select(F.col(id_col).alias("id_a"), *sided("_a")), pay_bytes)
-            sb = size_hinted(
-                side.select(F.col(id_col).alias("id_b"), *sided("_b")), pay_bytes)
-            pairs = screened.repartition(width).join(sa, "id_a").join(sb, "id_b")
+        # two-phase: narrow screen, then the payload-attaching join
+        # only for survivors
+        prof_m = combined.select(F.col(id_col), mins_arr.alias("mins"))
+        mins_a = prof_m.select(F.col(id_col).alias("id_a"), F.col("mins").alias("mins_a"))
+        mins_b = prof_m.select(F.col(id_col).alias("id_b"), F.col("mins").alias("mins_b"))
+        screened = observed_checkpoint(
+            cand.join(size_hinted(mins_a, mins_bytes), "id_a")
+            .join(size_hinted(mins_b, mins_bytes), "id_b")
+            .filter(est >= min_est_matches)
+            .select("id_a", "id_b")
+        )
+        n_pairs = observed(screened)
+        width = max(par, min(n_pairs // 20_000 + 1, 8 * par))
+        sa = size_hinted(
+            side.select(F.col(id_col).alias("id_a"), *sided("_a")), pay_bytes)
+        sb = size_hinted(
+            side.select(F.col(id_col).alias("id_b"), *sided("_b")), pay_bytes)
+        pairs = screened.repartition(width).join(sa, "id_a").join(sb, "id_b")
 
-            verified = verify(pairs)
-            if not memo:
-                return verified
-            # store the memoized pair set at data-sized width: consumers
-            # (the CC loop, the pipeline) re-scan this frame many times,
-            # and inheriting the verify job's compute width (~100+
-            # partitions) makes every downstream job pay that task count
-            # (measured: the CC's symmetric-edge build dropped 14 → 2
-            # CPU-s at sf0.1)
-            store_width = max(1, min(n_pairs // 500_000 + 1, par))
-            return observed_checkpoint(verified.repartition(store_width))
+        verified = verify(pairs)
+        if not memo:
+            return verified
+        # store the memoized pair set at data-sized width: consumers
+        # (the CC loop, the pipeline) re-scan this frame many times,
+        # and inheriting the verify job's compute width (~100+
+        # partitions) makes every downstream job pay that task count
+        # (measured: the CC's symmetric-edge build dropped 14 → 2
+        # CPU-s at sf0.1)
+        store_width = max(1, min(n_pairs // 500_000 + 1, par))
+        return observed_checkpoint(verified.repartition(store_width))
 
     if not memo:
         return build()
@@ -1144,13 +1151,7 @@ def incremental_band_dedup(
     words = _build_words(combined)
     all_ids = docs.select(
         F.col(id_col), F.pmod(id_col, gens).cast("long").alias("gen"))
-    n_docs, mins_bytes, pay_bytes = _verify_payload_bytes(combined, words)
-    table = None
-    if pay_bytes + mins_bytes < BROADCAST_BYTES_CAP:
-        table = _bitmap_table(
-            combined, id_col, words or "sh",
-            ["n_sh", *[f"m{i}" for i in range(NUM_HASHES)]])
-
+    table = _fused_table(combined, id_col, words)
     if table is not None:
         # FUSED ALL-GENERATIONS VERIFY (r13 - the minhash_near_dups
         # fused kernel applied to the incremental chain): the per-
@@ -1243,7 +1244,7 @@ def incremental_band_dedup(
     # In the bitmap regime a side is n_docs·(mins + words + n_sh)
     # bytes; past the cap this degrades back to the shuffle join.
     if words:
-        side_bytes = n_docs * (16 * 8 + (len(words) + 1) * 8 + 24)
+        side_bytes = observed(combined) * (16 * 8 + (len(words) + 1) * 8 + 24)
     else:
         side_bytes = None  # array regime: unbounded payload, no hint
     def hinted(df: DataFrame) -> DataFrame:
@@ -2491,8 +2492,12 @@ def _rarity_build(
         )
         if pcols:
             arr = arr.join(base.select(id_col, *pcols), id_col)
-        # bounded: one row per doc (arr ≈ the doc's shingle set)
-        return arr.localCheckpoint(eager=True)
+        # bounded: one row per doc (arr ≈ the doc's shingle set). The
+        # doc and distinct-hash counts size containment's gather
+        # bitmaps before it collects anything.
+        return with_observed(
+            arr.localCheckpoint(eager=True),
+            n_docs=observed(sets), n_hashes=observed(dfreq))
 
     if memo:
         arrays = DEDUP_MEMO.get_or_build(
@@ -2760,14 +2765,15 @@ def containment_pairs(
             # batch. The UDF emits only exact integers (c, sa) screened
             # by the exact integer threshold; the authoritative filter
             # + round run JVM-side on those integers, so results are
-            # bit-equal to the join verify.
-            table = _bitmap_table(
-                arrays.select(
-                    F.col(id_col), "sz",
-                    F.transform("__arr", lambda x: x["h"]).alias("__ha")),
-                id_col, "__ha", ["sz"])
-            if table is not None:
-                ids_np, wbits, sizes = table
+            # bit-equal to the join verify. The bitmaps' size is known
+            # from the arrays build before anything is collected.
+            if _bitmap_bytes(observed(arrays, "n_docs"),
+                             observed(arrays, "n_hashes")) < BROADCAST_BYTES_CAP:
+                ids_np, wbits, sizes = _bitmap_table(
+                    arrays.select(
+                        F.col(id_col), "sz",
+                        F.transform("__arr", lambda x: x["h"]).alias("__ha")),
+                    id_col, "__ha", ["sz"])
                 bc = cand.sparkSession.sparkContext.broadcast(
                     (ids_np, sizes[:, 0].copy(), wbits))
                 par = cand.sparkSession.sparkContext.defaultParallelism
@@ -2794,8 +2800,12 @@ def containment_pairs(
                     ids, nsz, words = bc.value
                     pop8 = np.unpackbits(
                         np.arange(256, dtype=np.uint8)[:, None], axis=1
-                    ).sum(axis=1).astype(np.int64)
+                    ).sum(axis=1).astype(np.uint8)
                     n_ids = len(ids)
+                    # pairs per popcount slice: two gathered bitmap
+                    # rows, their AND and its byte popcounts stay near
+                    # 128 MB however wide the vocabulary
+                    step = max(1, (1 << 27) // (32 * words.shape[1] + 64))
                     for batch in batches:
                         ia = batch.column(0).to_numpy(
                             zero_copy_only=False).astype(np.int64)
@@ -2813,11 +2823,14 @@ def containment_pairs(
                                 "side table — candidates must come "
                                 "from the same corpus build"
                             )
-                        inter = (
-                            pop8[(words[a] & words[b]).view(np.uint8)]
-                            .reshape(len(ia), -1)
-                            .sum(axis=1, dtype=np.int64)
-                        )
+                        inter = np.empty(len(ia), np.int64)
+                        for s0 in range(0, len(ia), step):
+                            sa_, sb_ = a[s0:s0 + step], b[s0:s0 + step]
+                            inter[s0:s0 + step] = (
+                                pop8[(words[sa_] & words[sb_]).view(np.uint8)]
+                                .reshape(len(sa_), -1)
+                                .sum(axis=1, dtype=np.int64)
+                            )
                         sa = nsz[a]
                         keep = 20 * inter >= t20 * sa  # integer-exact
                         yield pa.RecordBatch.from_arrays(

@@ -50,8 +50,9 @@ def observed_checkpoint(df: DataFrame, **sums: Column) -> DataFrame:
 
 def with_observed(df: DataFrame, **values: int) -> DataFrame:
     """Attach already-known sizes (``rows`` and named sums) to ``df``
-    for :func:`observed` — for frames built from driver-side data."""
-    df._observed = values
+    for :func:`observed` — for frames built from driver-side data, or
+    sizes known from another job. Adds to any values ``df`` carries."""
+    df._observed = {**getattr(df, "_observed", {}), **values}
     return df
 
 

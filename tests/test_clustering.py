@@ -7,7 +7,9 @@ import warnings
 import pytest
 
 from df_spark.operators import clustering
-from df_spark.operators.clustering import connected_components, dedup_groups
+from df_spark.operators.clustering import (
+    _local_components, connected_components, dedup_groups)
+from df_spark.operators.partitioning import BROADCAST_BYTES_CAP
 
 
 def test_components_basic(spark):
@@ -18,13 +20,28 @@ def test_components_basic(spark):
     assert comps == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5, 10: 10, 11: 10, 12: 10, 13: 10}
 
 
-def test_components_chain_diameter(spark):
+def _both_regimes(monkeypatch):
+    """Yield once per connected-components regime: the default cap (the
+    driver-local path on these small graphs), then cap 0 (the
+    distributed loop); each time check that the expected path ran."""
+    calls = []
+    monkeypatch.setattr(clustering, "_local_components",
+                        lambda *a: calls.append(1) or _local_components(*a))
+    for name, cap in (("driver_local", BROADCAST_BYTES_CAP), ("loop", 0)):
+        monkeypatch.setattr(clustering, "BROADCAST_BYTES_CAP", cap)
+        calls.clear()
+        yield name
+        assert bool(calls) == (name == "driver_local"), name
+
+
+def test_components_chain_diameter(spark, monkeypatch):
     # a long chain stresses the iteration count (diameter = n-1)
     n = 12
     edges = spark.createDataFrame([(i, i + 1) for i in range(n)], "id_a long, id_b long")
-    comps = {r.node: r.comp for r in connected_components(edges).collect()}
-    assert set(comps.values()) == {0}
-    assert len(comps) == n + 1
+    for regime in _both_regimes(monkeypatch):
+        comps = {r.node: r.comp for r in connected_components(edges).collect()}
+        assert set(comps.values()) == {0}, regime
+        assert len(comps) == n + 1, regime
 
 
 def test_components_releases_intermediate_storage(spark, monkeypatch):
@@ -70,11 +87,11 @@ def test_dedup_groups_with_singletons(spark):
     }
 
 
-def test_components_match_union_find_on_random_graphs(spark):
-    """Star-contraction CC must equal a reference union-find on random
-    graphs of varying density — chains, cliques, singleton-heavy mixes
-    all emerge from the generator. Deterministic seeds: same graphs
-    every run."""
+def test_components_match_union_find_on_random_graphs(spark, monkeypatch):
+    """Both regimes (driver-local propagation and the star-contraction
+    loop) must equal a reference union-find on random graphs of varying
+    density — chains, cliques, singleton-heavy mixes all emerge from
+    the generator. Deterministic seeds: same graphs every run."""
     import random
 
     for seed, n_nodes, n_edges in [(1, 30, 15), (2, 40, 80), (3, 25, 5), (4, 60, 60)]:
@@ -103,8 +120,9 @@ def test_components_match_union_find_on_random_graphs(spark):
         expect = {x: find(x) for x in touched}
 
         df = spark.createDataFrame(edges, "id_a long, id_b long")
-        got = {r.node: r.comp for r in connected_components(df).collect()}
-        assert got == expect, f"seed {seed}: {got} != {expect}"
+        for regime in _both_regimes(monkeypatch):
+            got = {r.node: r.comp for r in connected_components(df).collect()}
+            assert got == expect, f"{regime}, seed {seed}: {got} != {expect}"
 
 
 def test_components_driver_local_equals_loop(spark, monkeypatch):

@@ -110,3 +110,109 @@ def test_fused_array_regime_matches_jvm_and_bitmap(spark, sf_dir, monkeypatch, s
     assert fused_array == jvm == bitmap
     assert len(bitmap[0]) > 0
     assert any(r[3] > 0 for r in bitmap[1]), "no incremental dup"
+
+
+def _letters(rng, n):
+    return "".join(rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(n))
+
+
+def _boilerplate_docs(spark, n_docs, seed=7):
+    """Docs sharing one random-letter body, each with its own random
+    tail: ~15k distinct trigrams (the array regime with ~230 bitmap
+    words) and, per LSH band, one bucket of ~70% of the docs."""
+    import random
+
+    rng = random.Random(seed)
+    body = _letters(rng, 3000)
+    return spark.createDataFrame(
+        [(i, body + " " + _letters(rng, 300)) for i in range(n_docs)],
+        "doc_id long, text string").localCheckpoint(eager=True)
+
+
+def test_fused_wide_bitmaps_dense_bucket_match_jvm(spark, monkeypatch):
+    """Wide array-regime bitmaps and one dense bucket together: the
+    fused kernel returns the JVM verify's rows for both operators.
+    (How the kernel slices a bucket is checked on its own below.)"""
+    from df_spark.operators.observe import observed
+
+    docs = _boilerplate_docs(spark, 100)
+    combined = D._shared_build(docs, memo=False)
+    assert "sh" in combined.columns
+    assert (observed(combined, "n_hashes") + 63) // 64 > 3 * D.BITMAP_MAX_WORDS
+    fused_calls = []
+    kernel = D._fused_band_verify
+    monkeypatch.setattr(D, "_fused_band_verify",
+                        lambda *a, **k: fused_calls.append(1) or kernel(*a, **k))
+
+    def run():
+        return (_rows(D.minhash_near_dups(docs, 0.6, memo=False)),
+                _rows(D.incremental_band_dedup(docs, 0.6, memo=False)))
+
+    fused = run()
+    assert len(fused_calls) == 2
+    monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
+    assert run() == fused
+    assert len(fused[0]) > 4_000
+    assert sum(r[3] for r in fused[1]) > 1_000
+
+
+def test_fused_kernel_slices_wide_bitmaps(spark):
+    """The kernel sizes its pair slices by the bitmap width. Padding the
+    bitmaps with 13k zero words leaves every popcount as it was but
+    cuts slices to ~300 pairs, so each dense bucket is split mid-row
+    and across buckets; both orientations return the unpadded rows."""
+    import numpy as np
+
+    combined = D._shared_build(_boilerplate_docs(spark, 200, seed=3), memo=False)
+    ids, wbits, extras = table = D._fused_table(combined, "doc_id", [])
+    padded = (ids, np.hstack([wbits, np.zeros((len(ids), 13_000), np.uint64)]),
+              extras)
+    _, counts = np.unique(extras[:, 1:5], axis=0, return_counts=True)
+    assert counts.max() * (counts.max() - 1) // 2 > 3_000
+    for gens in (None, 3):
+        whole = _rows(D._fused_band_verify(spark, table, 0.6, 5, gens=gens))
+        sliced = _rows(D._fused_band_verify(spark, padded, 0.6, 5, gens=gens))
+        assert sliced == whole
+        assert len(whole) > 1_000
+
+
+def test_array_regime_bitmap_gate_collects_nothing(spark, monkeypatch):
+    """Short docs over a wide vocabulary: the minima and hash payload
+    fit a cap that the one-bit-per-hash bitmaps would pass. The gate
+    reads the build's observed hash count, so nothing is collected for
+    a side table, and both operators take their JVM path and return its
+    rows."""
+    import random
+
+    rng = random.Random(5)
+    base = [_letters(rng, 200) for _ in range(150)]
+    rows = [(i, t) for i, t in enumerate(base)]
+    for i, t in enumerate(base):
+        chars = list(t)
+        for p in rng.sample(range(len(chars)), 4):
+            chars[p] = rng.choice("abcdefghijklmnopqrstuvwxyz")
+        rows.append((1000 + i, "".join(chars)))
+    docs = spark.createDataFrame(rows, "doc_id long, text string").localCheckpoint(eager=True)
+    from df_spark.operators.observe import observed
+
+    combined = D._shared_build(docs, memo=False)
+    assert "sh" in combined.columns
+    n_docs, mins_bytes, pay_bytes = D._verify_payload_bytes(combined, [])
+    bitmap_bytes = D._bitmap_bytes(n_docs, observed(combined, "n_hashes"))
+    assert pay_bytes + mins_bytes < bitmap_bytes
+
+    def run():
+        return (_rows(D.minhash_near_dups(docs, 0.6, memo=False)),
+                _rows(D.incremental_band_dedup(docs, 0.6, memo=False)))
+
+    monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
+    jvm = run()
+    monkeypatch.setattr(D, "BROADCAST_BYTES_CAP",
+                        (pay_bytes + mins_bytes + bitmap_bytes) // 2)
+
+    def no_collect(*a, **k):
+        raise AssertionError("side table collected past the bitmap cap")
+
+    monkeypatch.setattr(D, "_bitmap_table", no_collect)
+    assert run() == jvm
+    assert len(jvm[0]) > 100

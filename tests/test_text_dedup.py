@@ -354,12 +354,14 @@ def test_containment_completeness_and_planted_subset(spark, sf_dir):
     assert all(3 not in pair and 4 not in pair for pair in out)
 
 
-def test_bitmap_verify_matches_array_verify(spark, sf_dir):
+def test_bitmap_verify_matches_array_verify(spark, sf_dir, monkeypatch):
     """The bitmap (popcount) exact-Jaccard path must be bit-identical to
     the array (hash-set intersect) path — bits are assigned per distinct
     h32 value, so popcounts equal set cardinalities even under shingle
     hash collisions. Force the array path by capping the bitmap width
-    to zero."""
+    to zero, and its JVM hash-set verify by capping the broadcast at
+    zero (under the cap the array regime also runs the popcount kernel,
+    see tests/test_fused_regimes.py)."""
     from df_spark.sources.tables import load_sdf
 
     docs = load_sdf(spark, sf_dir, "documents")
@@ -367,15 +369,13 @@ def test_bitmap_verify_matches_array_verify(spark, sf_dir):
         (r.id_a, r.id_b, r.jaccard)
         for r in D.minhash_near_dups(docs, 0.6, memo=False).collect()
     }
-    orig = D.BITMAP_MAX_WORDS
-    D.BITMAP_MAX_WORDS = 0
-    try:
-        with_arrays = {
-            (r.id_a, r.id_b, r.jaccard)
-            for r in D.minhash_near_dups(docs, 0.6, memo=False).collect()
-        }
-    finally:
-        D.BITMAP_MAX_WORDS = orig
+    monkeypatch.setattr(D, "BITMAP_MAX_WORDS", 0)
+    monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
+    assert "sh" in D._shared_build(docs, memo=False).columns
+    with_arrays = {
+        (r.id_a, r.id_b, r.jaccard)
+        for r in D.minhash_near_dups(docs, 0.6, memo=False).collect()
+    }
     assert with_words, "fixture corpus must contain near-dups"
     assert with_words == with_arrays
 
