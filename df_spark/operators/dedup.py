@@ -2473,7 +2473,8 @@ def _rarity_build(
         # the size hint reads the row count its checkpoint observed
         dfreq = observed_checkpoint(
             sh.groupBy("h").agg(F.count(F.lit(1)).alias("df")))
-        dfreq = size_hinted(dfreq, observed(dfreq) * 16)
+        n_hashes = observed(dfreq)  # size_hinted's frame carries none
+        dfreq = size_hinted(dfreq, n_hashes * 16)
         # bands ride the exploded rows into the per-doc aggregate (every
         # row of a doc carries the same array, F.first picks it) — a
         # docs×docs join here would SMJ two stat-less checkpoint frames,
@@ -2497,7 +2498,7 @@ def _rarity_build(
         # bitmaps before it collects anything.
         return with_observed(
             arr.localCheckpoint(eager=True),
-            n_docs=observed(sets), n_hashes=observed(dfreq))
+            n_docs=observed(sets), n_hashes=n_hashes)
 
     if memo:
         arrays = DEDUP_MEMO.get_or_build(

@@ -216,3 +216,19 @@ def test_array_regime_bitmap_gate_collects_nothing(spark, monkeypatch):
     monkeypatch.setattr(D, "_bitmap_table", no_collect)
     assert run() == jvm
     assert len(jvm[0]) > 100
+
+
+def test_rarity_build_observes_gate_sizes_without_count(docs, monkeypatch):
+    """The containment gather's bitmap gate reads the doc and distinct-
+    hash counts that the arrays build carries; the build takes them
+    from its checkpoints' observations and runs no count()."""
+    from df_spark.operators.observe import observed
+
+    def no_count(self):
+        raise AssertionError("count() in the rarity build")
+
+    with monkeypatch.context() as m:
+        m.setattr(type(docs), "count", no_count)
+        sh, arrays = D._rarity_build(docs, "doc_id", "text", 7, [], memo=False)
+    assert observed(arrays, "n_docs") == arrays.count()
+    assert observed(arrays, "n_hashes") == sh.select("h").distinct().count()
