@@ -1,10 +1,14 @@
 """Deduplication operators for large-scale corpus pipelines.
 
-Four families, all shuffle-conscious. Declarative JVM-side expressions
-(higher-order array functions + hash aggregates) by default; two
-measured hot paths run as Arrow-vectorized ``mapInPandas`` stages
-instead (the per-doc winnowing summary and the bounded-side MinHash
-verify), each with the bit-exact declarative twin documented inline:
+Declarative JVM-side expressions (higher-order array functions + hash
+aggregates) by default. Three measured hot paths run vectorized in
+Python workers, each with its bit-exact declarative twin documented
+inline: the per-doc winnowing summary (``mapInPandas``), and, while a
+broadcast side table fits the cap, two numpy ``mapInArrow`` kernels —
+the containment gather, and ONE LSH band verify
+(:func:`_fused_band_verify`) for ``minhash_near_dups``,
+``incremental_band_dedup`` and ``cross_near_dups_in_table``. Four
+families, all shuffle-conscious:
 
 - **exact**: hash-groupBy on a normalized-content fingerprint. One
   shuffle on the fingerprint; at 100 TB this is the standard
@@ -34,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import NUM_HASHES, h32, h32_sql, minhash_perm, minhash_perm_sql
-from ..plans.memo import FrameMemo, frame_key
+from ..plans.memo import Memo, frame_key
 from .observe import observed, observed_checkpoint, with_observed
 from .partitioning import (
     BROADCAST_BYTES_CAP,
@@ -67,7 +71,7 @@ from ..functions.text import (
 # wall 2.07 → 4.46 s, CPU 8.9 → 28). Entries are localCheckpoint'd
 # narrow intermediates; ContextCleaner frees evicted ones, so the cost
 # of a larger window is bounded storage references, not leaks.
-DEDUP_MEMO = FrameMemo(capacity=16)
+DEDUP_MEMO = Memo(capacity=16)
 
 # hashed shingle SETS are stored as 32-bit ints, shifted from the h32
 # domain [0, 2^32) by -2^31 (injective → Jaccard-invariant); profiles
@@ -661,20 +665,28 @@ def _bitmap_bytes(n_docs: int, n_hashes: int) -> int:
     return n_docs * ((n_hashes + 63) // 64) * 8
 
 
-def _fused_table(combined: DataFrame, id_col: str, words: list[str]):
+def _fused_table(combined: DataFrame, id_col: str, words: list[str],
+                 label: Column | None = None):
     """The :func:`_fused_band_verify` side table of a
-    :func:`_shared_build` frame (extras ``[n_sh, m0..m15]``), or None
-    when the per-doc minima and payload, or the bitmaps, would pass
-    ``BROADCAST_BYTES_CAP``. In the array regime the bitmaps take one
-    bit per distinct hash, counted by the build (``n_hashes``). Every
-    size is observed, so a None costs no job and collects nothing."""
+    :func:`_shared_build` frame (extras ``[n_sh, m0..m15]``, then
+    ``label`` cast to long when given; rows whose label is null are
+    left out), or None when the per-doc minima and payload, or the
+    bitmaps, would pass ``BROADCAST_BYTES_CAP``. In the array regime
+    the bitmaps take one bit per distinct hash, counted by the build
+    (``n_hashes``). Every size is observed on the whole build (an upper
+    bound when a label drops rows), so a None costs no job and collects
+    nothing."""
     n_docs, mins_bytes, pay_bytes = _verify_payload_bytes(combined, words)
     n_bits = len(words) * 64 or observed(combined, "n_hashes")
     if max(pay_bytes + mins_bytes,
            _bitmap_bytes(n_docs, n_bits)) >= BROADCAST_BYTES_CAP:
         return None
-    return _bitmap_table(combined, id_col, words or "sh",
-                         ["n_sh", *[f"m{i}" for i in range(NUM_HASHES)]])
+    extra = ["n_sh", *[f"m{i}" for i in range(NUM_HASHES)]]
+    if label is not None:
+        combined = combined.select(
+            "*", label.cast("long").alias("__side")).dropna(subset=["__side"])
+        extra.append("__side")
+    return _bitmap_table(combined, id_col, words or "sh", extra)
 
 
 def _bitmap_table(frame: DataFrame, id_col: str, bits: list[str] | str,
@@ -720,14 +732,15 @@ def _bitmap_table(frame: DataFrame, id_col: str, bits: list[str] | str,
 
 
 def _fused_band_verify(spark, table, min_jaccard: float, min_est_matches: int,
-                       gens: int | None = None) -> DataFrame:
-    """FUSED BANDED VERIFY: (id_a, id_b, jaccard) for every pair sharing
-    an LSH band bucket that passes the estimate floor and the exact
-    Jaccard threshold, from a :func:`_bitmap_table` side table built
-    with extras ``[n_sh, m0..m15]``. With ``gens``, only pairs across
-    generations (``id % gens``, numpy's non-negative ``%`` = Spark's
-    ``pmod``), oriented so id_a is the HIGHER generation; otherwise
-    id_a < id_b.
+                       side=None) -> DataFrame:
+    """FUSED BANDED VERIFY, the one LSH band kernel of
+    :func:`minhash_near_dups`, :func:`incremental_band_dedup` and
+    :func:`cross_near_dups_in_table`: (id_a, id_b, jaccard) for every
+    pair sharing an LSH band bucket that passes the estimate floor and
+    the exact Jaccard threshold, from a :func:`_fused_table` side table.
+    ``side``, an int64 label per table row (the generation
+    ``pmod(id, gens)``; the new-side predicate), keeps only pairs whose
+    labels differ, id_a the HIGHER label; otherwise id_a < id_b.
 
     Candidates are never materialized JVM-side at all. r8's first cut
     still shipped the 2.3 M candidate pairs THROUGH Arrow into a numpy
@@ -772,7 +785,8 @@ def _fused_band_verify(spark, table, min_jaccard: float, min_est_matches: int,
     chunk = max(1, (1 << 27) // (32 * wbits.shape[1] + 8 * (2 * NUM_HASHES + 8)))
     bc = spark.sparkContext.broadcast((
         ids, np.ascontiguousarray(extras[:, 0]), wbits,
-        np.ascontiguousarray(extras[:, 1:])))
+        np.ascontiguousarray(extras[:, 1:1 + NUM_HASHES]),
+        None if side is None else np.ascontiguousarray(side, np.int64)))
     raw_floor = float(min_jaccard) - 1e-6
     est_floor = int(min_est_matches)
     # tasks scale with corpus size (each re-derives the banding over
@@ -787,8 +801,7 @@ def _fused_band_verify(spark, table, min_jaccard: float, min_est_matches: int,
         import numpy as np
         import pyarrow as pa
 
-        ids, nsz, wbits, mins = bc.value
-        gen_of = None if gens is None else ids % gens
+        ids, nsz, wbits, mins, label = bc.value
         # per-byte popcounts as uint8: the lookup result is then no
         # larger than the AND it reads
         pop8 = np.unpackbits(
@@ -832,13 +845,13 @@ def _fused_band_verify(spark, table, min_jaccard: float, min_est_matches: int,
                         i = np.searchsorted(row_end, r, side="right")
                         A = order[gs[g] + i]
                         B = order[gs[g] + i + 1 + r - row_start[i]]
-                        if gen_of is None:
+                        if label is None:
                             # table index order == id order
                             A, B = np.minimum(A, B), np.maximum(A, B)
                         else:
-                            cross = gen_of[A] != gen_of[B]
+                            cross = label[A] != label[B]
                             A, B = A[cross], B[cross]
-                            swap = gen_of[A] < gen_of[B]
+                            swap = label[A] < label[B]
                             A, B = np.where(swap, B, A), np.where(swap, A, B)
                         if band and len(A):
                             # min-band dedup: an earlier shared band
@@ -1174,7 +1187,7 @@ def incremental_band_dedup(
         # - the 100 TB crawl-vs-persisted-index regime.
         verified = (
             _fused_band_verify(docs.sparkSession, table, min_jaccard,
-                               min_est_matches, gens=gens)
+                               min_est_matches, side=table[0] % gens)
             .select("id_a", "id_b")
             .localCheckpoint(eager=True)
         )
@@ -1874,8 +1887,12 @@ def _cross_verify(
     min_est_matches: int,
     words: list[str] | None = None,
 ) -> DataFrame:
-    """Shared tail of the cross-corpus pipeline: band buckets per side,
+    """The distributed cross-corpus verify: band buckets per side,
     cross-side candidate join, estimate screen, exact-Jaccard verify.
+    It serves the two-frame :func:`cross_near_dups`, and
+    :func:`cross_near_dups_in_table` past the broadcast cap (under it,
+    the in-table join runs the one fused kernel,
+    :func:`_fused_band_verify`).
 
     Each side is ONE frame carrying the MinHash minima (``m0..m15``)
     plus the verify payload — ``n_sh`` + bitmap word columns when both
@@ -1884,165 +1901,8 @@ def _cross_verify(
     pass ``words``), or a hash array ``sh`` for two independent builds
     (incompatible bit assignments). Single-frame sides mean the
     in-table path never self-joins its own build's slices."""
-    prof_n, prof_b = side_new, side_base
-
-    if words:
-        # FUSED CROSS-BANDED VERIFY (r8, in-table bitmap regime): the
-        # same move as minhash_near_dups' fused path — the cross band
-        # join, estimate screen, and popcount verify are all pure
-        # functions of the two bounded side tables, and shipping the
-        # candidate pairs through the JVM join pipeline (bucket join +
-        # distinct + two payload-attaching joins, ~60 columns per pair)
-        # was the cost. Each task re-derives the cross-band buckets it
-        # OWNS from the broadcast minima (lexsort both sides' band
-        # tuples together, split groups, new-side x base-side cross
-        # product per group via grouped-cartesian index arithmetic),
-        # drops pairs sharing an EARLIER band (exact min-band dedup —
-        # no distinct anywhere), then screens + popcount-verifies in
-        # the same array pass. Exactness contract identical to the
-        # fused in-corpus path: only exact integers leave the UDF and
-        # the authoritative round-then-threshold runs JVM-side.
-        # Size-gated like the JVM path below; past the cap (the 100 TB
-        # base corpus) the distributed join pipeline below runs
-        # unchanged.
-        n_new = side_new.count()
-        n_base = side_base.count()
-        per_doc = (len(words) + 1) * 8 + NUM_HASHES * 8 + 56
-        if (n_new + n_base) * per_doc < BROADCAST_BYTES_CAP:
-            import numpy as np
-
-            mcols = [f"m{i}" for i in range(NUM_HASHES)]
-
-            def np_side(side: DataFrame):
-                p = (
-                    side.select(
-                        F.col(id_col), F.col("n_sh"), *words, *mcols)
-                    .toPandas()
-                    .sort_values(id_col)
-                )
-                return (
-                    np.ascontiguousarray(p[id_col].to_numpy(np.int64)),
-                    np.ascontiguousarray(p["n_sh"].to_numpy(np.int64)),
-                    np.ascontiguousarray(
-                        p[list(words)].to_numpy(np.int64)).view(np.uint64),
-                    np.ascontiguousarray(p[mcols].to_numpy(np.int64)),
-                )
-
-            bc = side_new.sparkSession.sparkContext.broadcast(
-                (np_side(side_new), np_side(side_base)))
-            raw_floor = float(min_jaccard) - 1e-6
-            est_floor = int(min_est_matches)
-            par = side_new.sparkSession.sparkContext.defaultParallelism
-            n_parts = max(1, min(par, (n_new + n_base) // 600 + 1))
-            bands, rpb = 4, NUM_HASHES // 4
-
-            def gen(batches):
-                import numpy as np
-                import pyarrow as pa
-
-                (ids_n, nsz_n, w_n, m_n), (ids_b, nsz_b, w_b, m_b) = bc.value
-                nn = len(ids_n)
-                pop8 = np.unpackbits(
-                    np.arange(256, dtype=np.uint8)[:, None], axis=1
-                ).sum(axis=1).astype(np.int64)
-                CHUNK = 1 << 19
-
-                def cross_pairs(pid):
-                    if nn == 0 or len(ids_b) == 0:
-                        return
-                    for band in range(bands):
-                        sl = slice(band * rpb, (band + 1) * rpb)
-                        allm = np.concatenate([m_n[:, sl], m_b[:, sl]])
-                        order = np.lexsort(allm.T[::-1])
-                        srt = allm[order]
-                        brk = np.flatnonzero(
-                            np.any(srt[1:] != srt[:-1], axis=1)) + 1
-                        starts = np.concatenate(([0], brk))
-                        ends = np.concatenate((brk, [len(srt)]))
-                        # new-side members first within each group
-                        gid = np.zeros(len(srt), np.int64)
-                        gid[brk] = 1
-                        gid = np.cumsum(gid)
-                        is_new = order < nn
-                        pos2 = np.lexsort(
-                            (np.where(is_new, 0, 1), gid))
-                        members2 = order[pos2]
-                        csum = np.concatenate(
-                            ([0], np.cumsum(is_new[pos2])))
-                        cn = csum[ends] - csum[starts]
-                        cb = (ends - starts) - cn
-                        key = srt[starts].astype(np.uint64)
-                        hsh = np.full(len(starts), 0xcbf29ce484222325,
-                                      np.uint64)
-                        for j in range(rpb):
-                            hsh = ((hsh ^ key[:, j])
-                                   * np.uint64(0x100000001b3))
-                        sel = (((hsh % np.uint64(n_parts)).astype(np.int64)
-                                == pid) & (cn > 0) & (cb > 0))
-                        st2, gn, gb = starts[sel], cn[sel], cb[sel]
-                        if not len(st2):
-                            continue
-                        off = np.concatenate(([0], np.cumsum(gn * gb)))
-                        total = off[-1]
-                        for c0 in range(0, int(total), CHUNK):
-                            idx = np.arange(
-                                c0, min(c0 + CHUNK, int(total)))
-                            g = np.searchsorted(off, idx, "right") - 1
-                            r = idx - off[g]
-                            A = members2[st2[g] + r // gb[g]]
-                            Bm = members2[
-                                st2[g] + gn[g] + r % gb[g]] - nn
-                            if band:
-                                dup = np.zeros(len(A), bool)
-                                for j in range(band):
-                                    js = slice(j * rpb, (j + 1) * rpb)
-                                    dup |= (m_n[A, js]
-                                            == m_b[Bm, js]).all(axis=1)
-                                A, Bm = A[~dup], Bm[~dup]
-                            if not len(A):
-                                continue
-                            est_np = (m_n[A] == m_b[Bm]).sum(axis=1)
-                            ok = est_np >= est_floor
-                            A, Bm = A[ok], Bm[ok]
-                            if not len(A):
-                                continue
-                            inter = (
-                                pop8[(w_n[A] & w_b[Bm]).view(np.uint8)]
-                                .reshape(len(A), -1)
-                                .sum(axis=1, dtype=np.int64)
-                            )
-                            tot = nsz_n[A] + nsz_b[Bm]
-                            keep = inter >= raw_floor * (tot - inter)
-                            if keep.any():
-                                yield (ids_n[A[keep]], ids_b[Bm[keep]],
-                                       inter[keep], tot[keep])
-
-                for batch in batches:
-                    for pid in batch.column(0).to_numpy(
-                            zero_copy_only=False):
-                        for i_n, i_b, ii, tt in cross_pairs(int(pid)):
-                            yield pa.RecordBatch.from_arrays(
-                                [pa.array(i_n), pa.array(i_b),
-                                 pa.array(ii), pa.array(tt)],
-                                names=["id_new", "id_base", "__i", "__t"],
-                            )
-
-            pre = side_new.sparkSession.range(
-                0, n_parts, 1, numPartitions=n_parts
-            ).mapInArrow(
-                gen, schema="id_new long, id_base long, __i long, __t long")
-            jac = F.round(
-                F.col("__i").cast("double")
-                / (F.col("__t").cast("double")
-                   - F.col("__i").cast("double")),
-                6,
-            )
-            return pre.select(
-                "id_new", "id_base", jac.alias("jaccard")
-            ).filter(F.col("jaccard") >= min_jaccard)
-
-    sig_n = minhash_signatures(id_col=id_col, profile=prof_n)
-    sig_b = minhash_signatures(id_col=id_col, profile=prof_b)
+    sig_n = minhash_signatures(id_col=id_col, profile=side_new)
+    sig_b = minhash_signatures(id_col=id_col, profile=side_base)
 
     def buckets(sig: DataFrame, out_id: str) -> DataFrame:
         return sig.select(
@@ -2057,9 +1917,11 @@ def _cross_verify(
         .join(buckets(sig_b, "id_base"), ["bucket", "band_idx"])
         .select("id_new", "id_base")
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    n_cand = cand.count()
+    # the candidate count sizes the spread below, observed by the
+    # checkpoint's own job
+    cand = observed_checkpoint(cand)
+    n_cand = observed(cand)
     par = cand.sparkSession.sparkContext.defaultParallelism
     width = max(par, min(n_cand // 20_000 + 1, 8 * par))
     if width <= 2 * cand.rdd.getNumPartitions():
@@ -2172,13 +2034,27 @@ def cross_near_dups_in_table(
     per-doc sets/profile frames, which carry only ``id_col``).
 
     The full-corpus sets + MinHash profile are built ONCE (the same
-    session-memoized frames every other dedup query uses) and each
-    side is a filter over them — per-doc rows, so filtering commutes
-    with the build. Measured at sf0.1: 8.4s -> ~2s cold when the
-    dedup family has already run, and one corpus pass instead of two
-    either way."""
+    session-memoized frames every other dedup query uses). Measured at
+    sf0.1: 8.4s -> ~2s cold when the dedup family has already run, and
+    one corpus pass instead of two either way. While the build's side
+    table fits ``BROADCAST_BYTES_CAP`` (gated on the whole build's
+    observed sizes, no job), ``new_pred`` is each row's label in the
+    one fused kernel, :func:`_fused_band_verify`, which keeps the pairs
+    across labels; past the cap each side is a filter over the build
+    for :func:`_cross_verify`. Null-``new_pred`` rows are on neither
+    side."""
     combined = _shared_build(docs, id_col, text_col, memo=memo)
     words = _build_words(combined)
+    table = _fused_table(combined, id_col, words, label=new_pred)
+    if table is not None:
+        # the label is the table's last extra; new rows (label 1) come
+        # out as id_a
+        verified = _fused_band_verify(
+            docs.sparkSession, table, min_jaccard, min_est_matches,
+            side=table[2][:, -1])
+        return verified.select(
+            F.col("id_a").alias("id_new"), F.col("id_b").alias("id_base"),
+            "jaccard")
     return _cross_verify(
         combined.filter(new_pred), combined.filter(~new_pred),
         min_jaccard, id_col, min_est_matches,

@@ -220,7 +220,7 @@ def register(name: str, sql: str | None = None):
 # directive #2), closing the cumulative driver census at 100%. Rows
 # whose CODE or ORACLE changed this round keep/get slots so the driver
 # hash row proves the change: the BPE pair (oracle degenerate-round
-# guard + ScalarMemo rekey), the PQ trio (PQ_SCALARS rekey), and the
+# guard + BPE_SCALARS rekey), the PQ trio (PQ_SCALARS rekey), and the
 # two table_stats consumers minhash_est_audit / tfidf_top_terms
 # (TABLE_STATS rekey). containment_join, prefix_sim_join,
 # bloom_semi_join, bigram_lm_score, lm_quality_buckets stay as the

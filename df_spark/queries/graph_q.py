@@ -22,7 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..plans.memo import FrameMemo, frame_key
+from ..plans.memo import Memo, frame_key
 from ..sources.tables import load_sdf
 from . import register
 
@@ -32,7 +32,7 @@ from . import register
 # dense co-purchase edge list + degree table are pagerank's dominant
 # cost. bench.py clears this per pass alongside the dedup memo so
 # medians keep cold-session semantics.
-GRAPH_MEMO = FrameMemo(capacity=4)
+GRAPH_MEMO = Memo(capacity=4)
 
 _TOP_PAIRS = 100
 _PR_SCALE = 1_000_000  # fixed-point: rank 1.0 == 1e6

@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from ..multimodal import documents_as_media
-from ..plans.memo import FrameMemo, frame_key
+from ..plans.memo import Memo, frame_key
 from ..sources.tables import load_sdf
 from . import register
 
@@ -17,7 +17,7 @@ from . import register
 # consumed by its own near-dup query AND by multimodal_dedup_report,
 # so the blobs are scanned once per session. bench.py pins the cold
 # builds on the `_build_media` row.
-MEDIA_MEMO = FrameMemo(capacity=8)  # 3 feature frames + 3 pair sets
+MEDIA_MEMO = Memo(capacity=8)  # 3 feature frames + 3 pair sets
 
 
 @register(

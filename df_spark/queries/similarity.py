@@ -647,10 +647,10 @@ def _pq_sql(iters: int = _PQ_ITERS, k: int = _PQ_K) -> str:
 
 from pyspark.sql import Window as _W
 
-from ..plans.memo import FrameMemo, ScalarMemo, frame_key
+from ..plans.memo import Memo, frame_key
 
-PQ_MEMO = FrameMemo(capacity=4)
-PQ_SCALARS = ScalarMemo()
+PQ_MEMO = Memo(capacity=4)
+PQ_SCALARS = Memo()
 
 
 def _pq_pts(spark, sf_dir):

@@ -19,7 +19,7 @@ from ..functions.text import (
     normalized_sql,
 )
 from ..operators.partitioning import barrier_width
-from ..plans.memo import FrameMemo, frame_key
+from ..plans.memo import Memo, frame_key
 from ..sources.tables import load_sdf, table_stats
 from . import register
 
@@ -36,7 +36,7 @@ _DOC_LIMIT = 20
 # every later pass in the family is a storage read. At 100 TB the same
 # shape materializes the token table to a parquet temp once per
 # pipeline run — the memo is the session-scoped stand-in.
-TOKEN_MEMO = FrameMemo(capacity=6)
+TOKEN_MEMO = Memo(capacity=6)
 
 
 def _tokens_sdf(spark, sf_dir):
@@ -353,9 +353,9 @@ _BPE_K = 6  # merges to learn — bounded driver-side merge table
 
 # merge tables are K-row scalars; the final symbol-sequence frame is
 # vocab-sized and lives in TOKEN_MEMO next to the token checkpoint
-from ..plans.memo import ScalarMemo
+from ..plans.memo import Memo
 
-BPE_SCALARS = ScalarMemo()
+BPE_SCALARS = Memo()
 
 
 def _bpe_seq0(col):

@@ -49,7 +49,7 @@ from .expr import Aggregator, Comparator, Expr, Predicate, Value, c, v
 from .frame import Df
 from .plans.cache import PlanCache
 from .plans.fingerprint import fingerprint_op, fingerprint_source
-from .plans.memo import ScalarMemo
+from .plans.memo import Memo
 
 _TYPE_MAP = {
     "Bool": T.BooleanType(),
@@ -133,7 +133,7 @@ class Engine:
         self.cache = PlanCache(capacity=cache_capacity)
         # prefix key -> built Df; its per-key in-flight marker makes
         # concurrent requests for one new prefix build it once
-        self.nodes = ScalarMemo()
+        self.nodes = Memo()
         self._snapshots: dict[str, str] = {}  # path -> last source fingerprint read
         self._read_lock = threading.Lock()
 

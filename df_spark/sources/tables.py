@@ -79,9 +79,9 @@ def _ensure_ntz_conf(spark: SparkSession) -> None:
 # query in the suite — judge r10 flagged a per-run `per_doc.count()`
 # whose only purpose was sizing a broadcast gate as an avoidable extra
 # job on one of the most expensive queries.
-from ..plans.memo import ScalarMemo, frame_key
+from ..plans.memo import Memo, frame_key
 
-TABLE_STATS = ScalarMemo()
+TABLE_STATS = Memo()
 
 
 def table_stats(
@@ -103,7 +103,7 @@ def table_stats(
         return (row["n"], row["s"])
 
     # frame_key of the source read rides in the key (same invalidation
-    # contract as the FrameMemos that consume these scalars)
+    # contract as the frame memos that consume these scalars)
     return TABLE_STATS.get_or_build(
         ("table_stats", sf_dir, name, sum_col,
          frame_key(load_sdf(spark, sf_dir, name))),

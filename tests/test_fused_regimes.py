@@ -34,10 +34,26 @@ def test_minhash_fused_vs_two_phase_identical(docs, monkeypatch):
 
 
 def test_cross_fused_vs_jvm_identical(docs, monkeypatch):
+    """The in-table cross join gates its fused path on the sizes the
+    shared build observed, so it runs no count(); it takes the one
+    fused kernel with the new-side predicate as each row's label, and
+    returns the rows of the distributed path (cap 0)."""
     pred = F.expr("doc_id % 3 = 0")
-    fused = _rows(D.cross_near_dups_in_table(docs, pred, memo=False))
+    fused_calls = []
+    kernel = D._fused_band_verify
+    monkeypatch.setattr(D, "_fused_band_verify",
+                        lambda *a, **k: fused_calls.append(1) or kernel(*a, **k))
+
+    def no_count(self):
+        raise AssertionError("count() in the in-table cross join")
+
+    with monkeypatch.context() as m:
+        m.setattr(type(docs), "count", no_count)
+        fused = _rows(D.cross_near_dups_in_table(docs, pred, memo=False))
+    assert len(fused_calls) == 1
     monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
     jvm = _rows(D.cross_near_dups_in_table(docs, pred, memo=False))
+    assert len(fused_calls) == 1
     assert fused == jvm
     assert len(fused) > 0
 
@@ -84,9 +100,9 @@ def test_fused_array_regime_matches_jvm_and_bitmap(spark, sf_dir, monkeypatch, s
     """With the shared build forced into the array regime
     (BITMAP_MAX_WORDS = 0), the fused kernel still runs, on bitmaps
     built from the hash arrays, and returns exactly the rows of the JVM
-    verify (cap 0) and of the bitmap-regime fused path. A hash the
-    array-side bitmap build dropped would shrink an intersection and
-    change a returned Jaccard. ``shift`` moves ids below zero, which
+    verify (cap 0) and of the bitmap-regime fused path, for all three
+    operators. A hash the array-side bitmap build dropped would shrink
+    an intersection and change a returned Jaccard. ``shift`` moves ids below zero, which
     changes the incremental generations."""
     docs = load_sdf(spark, sf_dir, "documents").withColumn(
         "doc_id", F.col("doc_id") - shift).localCheckpoint(eager=True)
@@ -97,19 +113,22 @@ def test_fused_array_regime_matches_jvm_and_bitmap(spark, sf_dir, monkeypatch, s
 
     def run():
         return (_rows(D.minhash_near_dups(docs, 0.6, memo=False)),
-                _rows(D.incremental_band_dedup(docs, 0.6, memo=False)))
+                _rows(D.incremental_band_dedup(docs, 0.6, memo=False)),
+                _rows(D.cross_near_dups_in_table(
+                    docs, F.expr("doc_id % 3 = 0"), memo=False)))
 
     bitmap = run()
     monkeypatch.setattr(D, "BITMAP_MAX_WORDS", 0)
     assert "sh" in D._shared_build(docs, memo=False).columns
     fused_array = run()
-    assert len(fused_calls) == 4
+    assert len(fused_calls) == 6
     monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
     jvm = run()
-    assert len(fused_calls) == 4
+    assert len(fused_calls) == 6
     assert fused_array == jvm == bitmap
     assert len(bitmap[0]) > 0
     assert any(r[3] > 0 for r in bitmap[1]), "no incremental dup"
+    assert len(bitmap[2]) > 0
 
 
 def _letters(rng, n):
@@ -131,7 +150,7 @@ def _boilerplate_docs(spark, n_docs, seed=7):
 
 def test_fused_wide_bitmaps_dense_bucket_match_jvm(spark, monkeypatch):
     """Wide array-regime bitmaps and one dense bucket together: the
-    fused kernel returns the JVM verify's rows for both operators.
+    fused kernel returns the JVM verify's rows for all three operators.
     (How the kernel slices a bucket is checked on its own below.)"""
     from df_spark.operators.observe import observed
 
@@ -146,21 +165,26 @@ def test_fused_wide_bitmaps_dense_bucket_match_jvm(spark, monkeypatch):
 
     def run():
         return (_rows(D.minhash_near_dups(docs, 0.6, memo=False)),
-                _rows(D.incremental_band_dedup(docs, 0.6, memo=False)))
+                _rows(D.incremental_band_dedup(docs, 0.6, memo=False)),
+                _rows(D.cross_near_dups_in_table(
+                    docs, F.expr("doc_id % 3 = 0"), memo=False)))
 
     fused = run()
-    assert len(fused_calls) == 2
+    assert len(fused_calls) == 3
     monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
     assert run() == fused
     assert len(fused[0]) > 4_000
     assert sum(r[3] for r in fused[1]) > 1_000
+    assert len(fused[2]) > 1_000
 
 
 def test_fused_kernel_slices_wide_bitmaps(spark):
     """The kernel sizes its pair slices by the bitmap width. Padding the
     bitmaps with 13k zero words leaves every popcount as it was but
     cuts slices to ~300 pairs, so each dense bucket is split mid-row
-    and across buckets; both orientations return the unpadded rows."""
+    and across buckets; with no side label, the incremental
+    generations and a two-valued label, the padded table returns the
+    unpadded rows."""
     import numpy as np
 
     combined = D._shared_build(_boilerplate_docs(spark, 200, seed=3), memo=False)
@@ -169,9 +193,9 @@ def test_fused_kernel_slices_wide_bitmaps(spark):
               extras)
     _, counts = np.unique(extras[:, 1:5], axis=0, return_counts=True)
     assert counts.max() * (counts.max() - 1) // 2 > 3_000
-    for gens in (None, 3):
-        whole = _rows(D._fused_band_verify(spark, table, 0.6, 5, gens=gens))
-        sliced = _rows(D._fused_band_verify(spark, padded, 0.6, 5, gens=gens))
+    for side in (None, ids % 3, (ids % 3 == 0).astype(np.int64)):
+        whole = _rows(D._fused_band_verify(spark, table, 0.6, 5, side=side))
+        sliced = _rows(D._fused_band_verify(spark, padded, 0.6, 5, side=side))
         assert sliced == whole
         assert len(whole) > 1_000
 
@@ -180,8 +204,8 @@ def test_array_regime_bitmap_gate_collects_nothing(spark, monkeypatch):
     """Short docs over a wide vocabulary: the minima and hash payload
     fit a cap that the one-bit-per-hash bitmaps would pass. The gate
     reads the build's observed hash count, so nothing is collected for
-    a side table, and both operators take their JVM path and return its
-    rows."""
+    a side table, and all three operators take their JVM path and return
+    its rows."""
     import random
 
     rng = random.Random(5)
@@ -203,7 +227,9 @@ def test_array_regime_bitmap_gate_collects_nothing(spark, monkeypatch):
 
     def run():
         return (_rows(D.minhash_near_dups(docs, 0.6, memo=False)),
-                _rows(D.incremental_band_dedup(docs, 0.6, memo=False)))
+                _rows(D.incremental_band_dedup(docs, 0.6, memo=False)),
+                _rows(D.cross_near_dups_in_table(
+                    docs, F.expr("doc_id % 3 = 0"), memo=False)))
 
     monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
     jvm = run()
@@ -216,6 +242,7 @@ def test_array_regime_bitmap_gate_collects_nothing(spark, monkeypatch):
     monkeypatch.setattr(D, "_bitmap_table", no_collect)
     assert run() == jvm
     assert len(jvm[0]) > 100
+    assert len(jvm[2]) > 0
 
 
 def test_rarity_build_observes_gate_sizes_without_count(docs, monkeypatch):
@@ -232,3 +259,4 @@ def test_rarity_build_observes_gate_sizes_without_count(docs, monkeypatch):
         sh, arrays = D._rarity_build(docs, "doc_id", "text", 7, [], memo=False)
     assert observed(arrays, "n_docs") == arrays.count()
     assert observed(arrays, "n_hashes") == sh.select("h").distinct().count()
+
