@@ -67,25 +67,34 @@ def bpe_token_count_sql(expr: str) -> str:
     return f"len(regexp_extract_all(lower({expr}), '[a-z]+|[0-9]+|[^a-z0-9\\s]'))::BIGINT"
 
 
+def char_kgrams(t: Column, k: int) -> Column:
+    """The k-character substring of ``t`` at every start position, in
+    order and with repeats (``substring(t, i, k)`` for i = 1 ..
+    len - k + 1), as an array; empty when ``t`` is shorter than ``k``,
+    null when ``t`` is null. Characters are code points, as in
+    ``substring``.
+
+    One regex scan with a k-character lookahead, so linear in the text:
+    a ``substring`` per position walks the UTF-8 bytes from byte 0 on
+    every call, O(len²) per document (measured at k=7 over ~390k
+    characters: 13.6 s of executor CPU for 8k-character documents
+    against 0.25 s for this form)."""
+    return F.regexp_extract_all(t, F.lit(f"(?s)(?=(.{{{k}}}))."), F.lit(1))
+
+
 def char_shingles_of_normalized(t: Column, k: int = 3) -> Column:
-    """Shingles of an ALREADY-normalized column. Pass a plain attribute
-    (materialized behind a barrier) — passing a computed expression here
-    re-evaluates it once per array element inside the HOF lambda."""
-    idx = F.sequence(F.lit(1), F.length(t) - (k - 1))
-    shingles = F.array_distinct(F.transform(idx, lambda i: F.substring(t, i, k)))
+    """Shingles of an ALREADY-normalized column."""
+    shingles = F.array_distinct(char_kgrams(t, k))
     return F.when(F.length(t) >= k, shingles).otherwise(F.array().cast("array<string>"))
 
 
 def char_shingles(col: Column, k: int = 3) -> Column:
     """Distinct k-character shingles of the normalized text (JVM-side:
-    sequence + transform + array_distinct; no UDF).
+    :func:`char_kgrams` + array_distinct; no UDF).
 
-    Guard for len < k: Spark's ``sequence(1, 0)`` yields a DESCENDING
-    [1, 0] rather than the empty list DuckDB's generate_series gives —
-    short texts must produce an explicitly empty array."""
+    Texts shorter than ``k``, and null texts, give an empty array."""
     s = normalized(col)
-    idx = F.sequence(F.lit(1), F.length(s) - (k - 1))
-    shingles = F.array_distinct(F.transform(idx, lambda i: F.substring(s, i, k)))
+    shingles = F.array_distinct(char_kgrams(s, k))
     return F.when(F.length(s) >= k, shingles).otherwise(
         F.array().cast("array<string>")
     )

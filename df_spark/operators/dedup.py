@@ -48,6 +48,7 @@ from .partitioning import (
     size_hinted,
 )
 from ..functions.text import (
+    char_kgrams,
     char_shingles_sql,
     fingerprint_md5,
     fingerprint_md5_sql,
@@ -214,8 +215,7 @@ def shingle_arrays(
         *[F.col(c) for c in keep_cols], normalized(F.col(text_col)).alias("__t")
     )
     norm = norm.repartition(parallelism or barrier_width(norm))
-    idx = F.sequence(F.lit(1), F.length("__t") - (k - 1))
-    shingles = F.array_distinct(F.transform(idx, lambda i: F.substring(F.col("__t"), i, k)))
+    shingles = F.array_distinct(char_kgrams(F.col("__t"), k))
     guarded = F.when(F.length("__t") >= k, shingles).otherwise(F.array().cast("array<string>"))
     return norm.select(*[F.col(c) for c in keep_cols], guarded.alias(out))
 
@@ -242,12 +242,9 @@ def shingle_hashes(
         F.col(id_col), normalized(F.col(text_col)).alias("__t")
     ).filter(F.length("__t") >= k)
     norm = norm.repartition(barrier_width(norm))
-    idx = F.sequence(F.lit(1), F.length("__t") - (k - 1))
     shingled = norm.select(
         F.col(id_col),
-        F.explode(
-            F.array_distinct(F.transform(idx, lambda i: F.substring(F.col("__t"), i, k)))
-        ).alias("__s"),
+        F.explode(F.array_distinct(char_kgrams(F.col("__t"), k))).alias("__s"),
     )
     return shingled.select(F.col(id_col), h32(F.col("__s")).alias("h"))
 
@@ -307,10 +304,10 @@ def _shared_build(
       aggregate). At 100 TB this materialization is ~input-sized; the
       alternative (recompute the normalize per pass) trades CPU for
       storage and stays a one-line change.
-    - shingle via ``posexplode of positions`` + ``substring`` AFTER the
-      explode — whole-stage codegen end to end; the old
-      ``transform``-lambda path evaluated substring+md5 interpreted,
-      per element.
+    - shingle by exploding :func:`char_kgrams` (one linear regex scan
+      per doc) — whole-stage codegen end to end, with no hash per
+      token; the old ``transform``-lambda path evaluated substring+md5
+      interpreted, per element.
     - h32 (md5) and the 16 permutations are computed once per DISTINCT
       shingle on a dictionary frame bounded by charset^k — broadcast
       back onto the token stream. Duplicate positions don't matter:
@@ -339,25 +336,19 @@ def _shared_build(
         # the whole normalized corpus)
         norm = checkpoint_spread(norm).localCheckpoint(eager=True)
         toks = norm.select(
-            F.col(id_col),
-            F.explode(F.sequence(F.lit(1), F.length("__t") - (k - 1))).alias("__p"),
-            "__t",
-        ).select(F.col(id_col), F.col("__t").substr(F.col("__p"), F.lit(k)).alias("__s"))
+            F.col(id_col), F.explode(char_kgrams(F.col("__t"), k)).alias("__s"))
 
         # ONE pass over the token stream builds the dictionary; the
-        # checkpoint makes every later dim read (stats agg, broadcast
-        # build) a bounded-table scan instead of a corpus re-explode
-        dim = (
+        # checkpoint makes every later dim read (bit ranks, broadcast
+        # build) a bounded-table scan instead of a corpus re-explode.
+        # Its observed row count, the distinct shingles, bounds the
+        # distinct h32 values and so the bitmap's dense-rank bits (a
+        # word past the last rank stays all zeros): no sizing job.
+        dim = observed_checkpoint(
             toks.select("__s").distinct()
-            .select("__s", h32(F.col("__s")).alias("__h"))
-            .localCheckpoint(eager=True)
-        )
-        stats = dim.agg(
-            F.count(F.lit(1)).alias("n_tri"),
-            F.countDistinct("__h").alias("n_hashes"),
-        ).collect()[0]
-        n_tri = stats["n_tri"]
-        if n_tri > DIM_MAX_ROWS:
+            .select("__s", h32(F.col("__s")).alias("__h")))
+        n_bits_max = observed(dim)
+        if n_bits_max > DIM_MAX_ROWS:
             # unbounded shingle universe: dictionary join stops paying —
             # per-row transform build, no bitmap
             sets = hashed_shingle_sets(docs, id_col, text_col, k=k)
@@ -371,20 +362,20 @@ def _shared_build(
                 .withColumn("n_sh", F.size("sh"))
                 .join(prof, id_col),
                 nh=F.col("n_sh"),
-            ), n_hashes=stats["n_hashes"])
+            ), n_bits_max=n_bits_max)
 
         from pyspark.sql import Window
 
-        n_hashes = stats["n_hashes"]
         n_words = (
-            (n_hashes + 63) // 64 if n_hashes <= BITMAP_MAX_WORDS * 64 else 0
+            (n_bits_max + 63) // 64 if n_bits_max <= BITMAP_MAX_WORDS * 64 else 0
         )
         dim_cols = [
             "__s",
             *[minhash_perm(F.col("__h"), i).alias(f"p{i}") for i in range(NUM_HASHES)],
         ]
         if n_words:
-            # single-partition window is fine: the dim is charset^k-bounded
+            # single-partition window is fine: this regime caps the dim
+            # at BITMAP_MAX_WORDS * 64 rows
             dim_cols.append(
                 (F.dense_rank().over(Window.orderBy("__h")) - 1).alias("__bit"))
         else:
@@ -446,10 +437,10 @@ def _shared_build(
                 combined._jdf.queryExecution().executedPlan().toString())
         # the verify gates read the doc count and Σn_sh (see
         # _verify_payload_bytes) off this checkpoint's own job, and the
-        # distinct-hash count (the array regime's bitmap width, see
-        # _fused_table) off the dictionary stats above
+        # bound on distinct hashes (the array regime's bitmap width, see
+        # _fused_table) off the dictionary's
         return with_observed(
-            observed_checkpoint(combined, nh=F.col("n_sh")), n_hashes=n_hashes)
+            observed_checkpoint(combined, nh=F.col("n_sh")), n_bits_max=n_bits_max)
 
     if not memo:
         return build()
@@ -534,9 +525,8 @@ def hashed_shingle_sets(
     materialized column instead."""
     norm = docs.select(F.col(id_col), normalized(F.col(text_col)).alias("__t"))
     norm = norm.repartition(barrier_width(norm))
-    idx = F.sequence(F.lit(1), F.length("__t") - (k - 1))
     hashed = F.array_distinct(F.transform(
-        idx, lambda i: (h32(F.substring(F.col("__t"), i, k)) - H32_INT_SHIFT).cast("int")
+        char_kgrams(F.col("__t"), k), lambda s: (h32(s) - H32_INT_SHIFT).cast("int")
     ))
     guarded = F.when(F.length("__t") >= k, hashed).otherwise(F.array().cast("array<int>"))
     return norm.select(F.col(id_col), guarded.alias("sh"))
@@ -672,12 +662,12 @@ def _fused_table(combined: DataFrame, id_col: str, words: list[str],
     ``label`` cast to long when given; rows whose label is null are
     left out), or None when the per-doc minima and payload, or the
     bitmaps, would pass ``BROADCAST_BYTES_CAP``. In the array regime
-    the bitmaps take one bit per distinct hash, counted by the build
-    (``n_hashes``). Every size is observed on the whole build (an upper
-    bound when a label drops rows), so a None costs no job and collects
-    nothing."""
+    the bitmaps take one bit per distinct hash, at most the build's
+    distinct shingles (``n_bits_max``). Every size is observed on the
+    whole build (an upper bound when a label drops rows), so a None
+    costs no job and collects nothing."""
     n_docs, mins_bytes, pay_bytes = _verify_payload_bytes(combined, words)
-    n_bits = len(words) * 64 or observed(combined, "n_hashes")
+    n_bits = len(words) * 64 or observed(combined, "n_bits_max")
     if max(pay_bytes + mins_bytes,
            _bitmap_bytes(n_docs, n_bits)) >= BROADCAST_BYTES_CAP:
         return None
@@ -1723,16 +1713,11 @@ def winnow_selected(
 
     norm = docs.select(F.col(id_col), normalized(F.col(text_col)).alias("__t"))
     norm = norm.repartition(barrier_width(norm), F.col(id_col))
-    idx = F.sequence(F.lit(1), F.greatest(F.length("__t") - (k - 1), F.lit(0)))
     toks = norm.select(
         F.col(id_col),
         (F.length("__t") - (k - 1)).alias("n_grams"),
-        F.col("__t"),
-        F.explode(idx).alias("pos"),
-    ).select(
-        id_col, "n_grams", "pos",
-        F.col("__t").substr(F.col("pos"), F.lit(k)).alias("__s"),
-    )
+        F.posexplode(char_kgrams(F.col("__t"), k)).alias("pos", "__s"),
+    ).select(id_col, "n_grams", (F.col("pos") + 1).alias("pos"), "__s")
     dim = (
         toks.select("__s").distinct()
         .select("__s", h32(F.col("__s")).alias("h"))
@@ -1900,7 +1885,9 @@ def _cross_verify(
     incremental case: shared bit universe, verify = popcounts of ANDs;
     pass ``words``), or a hash array ``sh`` for two independent builds
     (incompatible bit assignments). Single-frame sides mean the
-    in-table path never self-joins its own build's slices."""
+    in-table path never self-joins its own build's slices. Each side
+    carries its observed rows and Σ|set| (``nh``), upper bounds that
+    size its join side with no job."""
     sig_n = minhash_signatures(id_col=id_col, profile=side_new)
     sig_b = minhash_signatures(id_col=id_col, profile=side_base)
 
@@ -1934,17 +1921,13 @@ def _cross_verify(
     # size-gated like minhash_near_dups' verify: the base corpus at
     # 100 TB will NOT fit a broadcast — size_hinted degrades each side
     # independently to a shuffle join past the cap instead of dying on
-    # Spark's broadcast limit. Bytes are measured, not assumed: rows x
+    # Spark's broadcast limit. Bytes are observed, not assumed: rows x
     # (16 minima + avg set payload).
     def side_bytes(side: DataFrame) -> int:
+        n_docs = observed(side)
         if words:
-            n_docs = side.count()
             return n_docs * ((len(words) + 1) * 8 + NUM_HASHES * 8 + 56)
-        stats = side.select(
-            F.count(F.lit(1)).alias("n"), F.sum(F.size("sh")).alias("nh")
-        ).collect()[0]
-        n_docs = stats["n"] or 0
-        return (stats["nh"] or 0) * 4 + n_docs * (NUM_HASHES * 8 + 56)
+        return observed(side, "nh") * 4 + n_docs * (NUM_HASHES * 8 + 56)
 
     def payload(suffix: str) -> list:
         if words:
@@ -2009,14 +1992,18 @@ def cross_near_dups(
     At 100 TB the base side's signatures/sets would persist as tables
     between crawls; the per-crawl cost is the new side's map-side
     shingle pass plus the bucket equi-join."""
-    prof_n = shared_profile(new_docs, id_col, text_col, memo=memo)
-    prof_b = shared_profile(base_docs, id_col, text_col, memo=memo)
-    sets_n = shared_sets(new_docs, id_col, text_col, memo=memo)
-    sets_b = shared_sets(base_docs, id_col, text_col, memo=memo)
+    def side(docs: DataFrame) -> DataFrame:
+        build = _shared_build(docs, id_col, text_col, memo=memo)
+        sets = (build.select(id_col, "sh") if "sh" in build.columns
+                else shared_sets(docs, id_col, text_col, memo=memo))
+        # the join keeps the build's rows, so its observed sizes hold
+        return with_observed(
+            build.select(id_col, *[f"m{i}" for i in range(NUM_HASHES)])
+            .join(sets, id_col),
+            rows=observed(build), nh=observed(build, "nh"))
+
     return _cross_verify(
-        prof_n.join(sets_n, id_col), prof_b.join(sets_b, id_col),
-        min_jaccard, id_col, min_est_matches,
-    )
+        side(new_docs), side(base_docs), min_jaccard, id_col, min_est_matches)
 
 
 def cross_near_dups_in_table(
@@ -2055,8 +2042,11 @@ def cross_near_dups_in_table(
         return verified.select(
             F.col("id_a").alias("id_new"), F.col("id_b").alias("id_base"),
             "jaccard")
+    # each side's sizes are bounded by the whole build's
+    sizes = {"rows": observed(combined), "nh": observed(combined, "nh")}
     return _cross_verify(
-        combined.filter(new_pred), combined.filter(~new_pred),
+        with_observed(combined.filter(new_pred), **sizes),
+        with_observed(combined.filter(~new_pred), **sizes),
         min_jaccard, id_col, min_est_matches,
         words=words or None,
     )
@@ -2297,13 +2287,8 @@ def _rarity_build(
         ).filter(F.length("__t") >= k)
         norm = norm.repartition(barrier_width(norm))
         toks = norm.select(
-            F.col(id_col),
-            F.explode(F.sequence(F.lit(1), F.length("__t") - (k - 1))).alias("__p"),
-            "__t",
-        ).select(
-            F.col(id_col),
-            F.xxhash64(F.col("__t").substr(F.col("__p"), F.lit(k))).alias("h"),
-        )
+            F.col(id_col), F.explode(char_kgrams(F.col("__t"), k)).alias("__s"),
+        ).select(F.col(id_col), F.xxhash64(F.col("__s")).alias("h"))
         # n_h = Σ|set| = the (id, h) stream's row count, which the
         # verify gates read
         return observed_checkpoint(

@@ -11,8 +11,9 @@ reproduces the behavior above Catalyst: each ``Df`` node carries a
 sha256 fingerprint of (parent fingerprint, op repr), with source
 fingerprints including the file modification time (fixing the
 reference's staleness bug: it hashes only path + column name, so an
-edited file serves stale cache — we include mtime+size).
-``plans.cache.PlanCache`` maps fingerprints to persisted DataFrames.
+edited file serves stale cache — we include mtime+size). The wire
+server (``df_spark.server``) keys its memoized plan nodes and action
+replies with these functions.
 """
 
 from __future__ import annotations

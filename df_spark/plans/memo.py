@@ -52,14 +52,15 @@ class Memo:
     """Thread-safe LRU of session values: materialized frames (eager
     localCheckpoint) or small driver-side values (row counts, size
     estimates, bounded merge tables, the wire server's built ``Df``
-    nodes); unbounded data never lands here. The builder runs OUTSIDE
-    the lock (it executes Spark jobs); concurrent first callers on the
-    same key coordinate through a per-key in-flight marker, so the
-    expensive multi-job build runs exactly once — the waiters block on
-    the marker and read the winner's entry instead of racing a
-    duplicate build whose result would be discarded. If the build
-    raises, the marker is released and one waiter becomes the new
-    builder (retry semantics, no poisoned key)."""
+    nodes and the encoded replies it sends, each already held whole on
+    the driver to send it); no distributed frame is collected here.
+    ``build`` runs OUTSIDE the lock (it executes Spark jobs); concurrent
+    first callers on the same key coordinate through a per-key
+    in-flight marker, so the expensive multi-job build runs exactly
+    once — the waiters block on the marker and read the winner's entry
+    instead of racing a duplicate build whose result would be
+    discarded. If the build raises, the marker is released and one
+    waiter builds in its place (retry semantics, no poisoned key)."""
 
     def __init__(self, capacity: int = 64) -> None:
         self.capacity = capacity

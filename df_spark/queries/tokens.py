@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 from ..functions.text import (
     bpe_token_count,
     bpe_token_count_sql,
+    char_kgrams,
     normalized,
     normalized_sql,
 )
@@ -253,13 +254,8 @@ def _bigram_scored(spark, sf_dir):
             "doc_id", normalized(F.col("text")).alias("__t")
         ).filter(F.length("__t") >= 2)
         base = base.repartition(barrier_width(base))
-        idx = F.sequence(F.lit(1), F.length("__t") - 1)
         occ = base.select(
-            "doc_id",
-            F.explode(
-                F.transform(idx, lambda i: F.substring(F.col("__t"), i, 2))
-            ).alias("bg"),
-        )
+            "doc_id", F.explode(char_kgrams(F.col("__t"), 2)).alias("bg"))
         # the (doc_id, bigram) aggregate feeds three consumers (scorer,
         # bigram model, context marginals) — materialize it once so the
         # corpus is exploded/aggregated a single time, not per consumer

@@ -27,12 +27,15 @@ and declared schema for ``Read``; the parent's key and the op's
 canonical JSON for every other node), and ``Engine.build`` looks the
 whole plan up by that key, building only the missing suffix. An ``Op``
 request on a known prefix therefore validates just its one new step,
-and a rewritten source file gets a new key, so it is re-read. Actions
-additionally persist the frame under its ``Df`` fingerprint
-(``PlanCache``), so a re-submitted plan reads the persisted partitions.
+and a rewritten source file gets a new key, so it is re-read. Like the
+reference's ``as_blocks`` (``src/api.rs:74-85``), an action's reply is
+memoized too: its encoded ``blocks`` are kept under the plan's key and
+the action's canonical JSON, so a re-submitted action (even from a new
+client) is served without building the plan or running a Spark job.
 Results reach the reply through Arrow (``Df.collect_columns``).
 ``Count``/``Take`` are implemented (the reference declares them but
-panics — ``src/api.rs:78``).
+panics — ``src/api.rs:78``); ``Take n`` runs on ``limit(n)``, so each
+task stops once it has ``n`` rows.
 """
 
 from __future__ import annotations
@@ -47,7 +50,6 @@ from pyspark.sql import types as T
 
 from .expr import Aggregator, Comparator, Expr, Predicate, Value, c, v
 from .frame import Df
-from .plans.cache import PlanCache
 from .plans.fingerprint import fingerprint_op, fingerprint_source
 from .plans.memo import Memo
 
@@ -126,11 +128,19 @@ def _canonical(obj: Any) -> str:
 
 class Engine:
     """Builds wire plans through the fluent Df, one memoized node per
-    plan prefix; caches action results by fingerprint."""
+    plan prefix, and memoizes each action's encoded reply blocks.
+
+    Replies, not Spark frames, are what an action keeps: nothing is
+    ``persist()``-ed, so a plan that extends an already-actioned plan
+    recomputes that plan's rows (``nodes`` still spares it the
+    re-planning). The reply memo holds up to ``cache_capacity`` encoded
+    replies on the driver, each one the server has already built in
+    full to send it."""
 
     def __init__(self, spark: SparkSession, cache_capacity: int = 32) -> None:
         self.spark = spark
-        self.cache = PlanCache(capacity=cache_capacity)
+        # (plan key, canonical action JSON) -> the reply's blocks as JSON
+        self.replies = Memo(capacity=cache_capacity)
         # prefix key -> built Df; its per-key in-flight marker makes
         # concurrent requests for one new prefix build it once
         self.nodes = Memo()
@@ -162,6 +172,25 @@ class Engine:
     def build(self, plan: list[dict]) -> Df:
         keys = self._prefix_keys(plan)
         return self._node(plan, keys, len(keys))
+
+    def action(self, plan: list[dict], action: Any) -> str:
+        """The reply blocks of ``action`` on ``plan`` as encoded JSON,
+        memoized: a hit builds nothing and runs no Spark job."""
+        keys = self._prefix_keys(plan)
+
+        def run() -> str:
+            df = self._node(plan, keys, len(keys))
+            if action == "Collect":
+                blocks = self.blocks(df)
+            elif action == "Count":
+                blocks = {"count": {"Int": [df.count()]}}
+            elif isinstance(action, dict) and "Take" in action:
+                blocks = self.blocks(df.limit(int(action["Take"])))
+            else:
+                raise ValueError(f"unknown action {action!r}")
+            return json.dumps(blocks)
+
+        return self.replies.get_or_build((keys[-1], _canonical(action)), run)
 
     def _node(self, plan: list[dict], keys: list[str], n: int) -> Df:
         """The Df of ``plan[:n]``: memoized, else the memoized parent
@@ -264,9 +293,9 @@ def make_handler(engine: Engine):
                 return
             payload = json.dumps(
                 {
-                    "size": len(engine.cache),
-                    "hits": engine.cache.hits,
-                    "misses": engine.cache.misses,
+                    "size": len(engine.replies),
+                    "hits": engine.replies.hits,
+                    "misses": engine.replies.misses,
                 }
             ).encode()
             self.send_response(200)
@@ -283,7 +312,7 @@ def make_handler(engine: Engine):
                 body = json.loads(self.rfile.read(length))
                 plan = body.get("dataframe") or []
                 fn = body["function"]
-                blocks: dict = {}
+                blocks = "{}"
                 if "Read" in fn:
                     plan = [{"Read": fn["Read"]}]
                 elif "Op" in fn:
@@ -292,23 +321,14 @@ def make_handler(engine: Engine):
                     plan = plan + [fn["Op"]]
                     engine.build(plan)
                 elif "Action" in fn:
-                    action = fn["Action"]
                     # content-addressed memoization (reference Pool,
-                    # src/pool.rs:25-94): a re-submitted plan — even
-                    # rebuilt from scratch by a new client — hits the
-                    # persisted frame instead of recomputing
-                    df = engine.cache.get(engine.build(plan))
-                    if action == "Collect":
-                        blocks = engine.blocks(df)
-                    elif action == "Count":
-                        blocks = {"count": {"Int": [df.count()]}}
-                    elif isinstance(action, dict) and "Take" in action:
-                        blocks = engine.blocks(df.limit(int(action["Take"])))
-                    else:
-                        raise ValueError(f"unknown action {action!r}")
+                    # src/pool.rs:25-94): a re-submitted action — even
+                    # on a plan rebuilt from scratch by a new client —
+                    # is served its memoized reply
+                    blocks = engine.action(plan, fn["Action"])
                 else:
                     raise ValueError(f"unknown function {fn!r}")
-                payload = json.dumps({"dataframe": plan, "blocks": blocks})
+                payload = f'{{"dataframe": {json.dumps(plan)}, "blocks": {blocks}}}'
                 self.send_response(200)
                 self.send_header("Content-Type", "application/json")
                 self.end_headers()

@@ -224,7 +224,7 @@ def load_sdf(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> Df:
     # content-addressed fingerprint (path+mtime, plus the ts normalization
-    # step) so a rebuilt plan over the same table hits the PlanCache
+    # step): a rebuilt plan over the same table gets the same one
     path = f"{sf_dir}/{name}.parquet"
     fp = fingerprint_source("parquet", path)
     if name == "events":

@@ -37,7 +37,10 @@ def test_cross_fused_vs_jvm_identical(docs, monkeypatch):
     """The in-table cross join gates its fused path on the sizes the
     shared build observed, so it runs no count(); it takes the one
     fused kernel with the new-side predicate as each row's label, and
-    returns the rows of the distributed path (cap 0)."""
+    returns the rows of the distributed path (cap 0). That path sizes
+    its join sides from the same observed sizes, so it counts nothing
+    either, in the bitmap and the array regime, nor does the two-frame
+    cross join, which returns the same rows."""
     pred = F.expr("doc_id % 3 = 0")
     fused_calls = []
     kernel = D._fused_band_verify
@@ -45,16 +48,20 @@ def test_cross_fused_vs_jvm_identical(docs, monkeypatch):
                         lambda *a, **k: fused_calls.append(1) or kernel(*a, **k))
 
     def no_count(self):
-        raise AssertionError("count() in the in-table cross join")
+        raise AssertionError("count() in the cross join")
 
     with monkeypatch.context() as m:
         m.setattr(type(docs), "count", no_count)
         fused = _rows(D.cross_near_dups_in_table(docs, pred, memo=False))
+        assert len(fused_calls) == 1
+        m.setattr(D, "BROADCAST_BYTES_CAP", 0)
+        jvm = _rows(D.cross_near_dups_in_table(docs, pred, memo=False))
+        two_frame = _rows(D.cross_near_dups(
+            docs.filter(pred), docs.filter(~pred), memo=False))
+        m.setattr(D, "BITMAP_MAX_WORDS", 0)
+        jvm_arrays = _rows(D.cross_near_dups_in_table(docs, pred, memo=False))
     assert len(fused_calls) == 1
-    monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
-    jvm = _rows(D.cross_near_dups_in_table(docs, pred, memo=False))
-    assert len(fused_calls) == 1
-    assert fused == jvm
+    assert fused == jvm == jvm_arrays == two_frame
     assert len(fused) > 0
 
 
@@ -157,7 +164,7 @@ def test_fused_wide_bitmaps_dense_bucket_match_jvm(spark, monkeypatch):
     docs = _boilerplate_docs(spark, 100)
     combined = D._shared_build(docs, memo=False)
     assert "sh" in combined.columns
-    assert (observed(combined, "n_hashes") + 63) // 64 > 3 * D.BITMAP_MAX_WORDS
+    assert (observed(combined, "n_bits_max") + 63) // 64 > 3 * D.BITMAP_MAX_WORDS
     fused_calls = []
     kernel = D._fused_band_verify
     monkeypatch.setattr(D, "_fused_band_verify",
@@ -222,7 +229,7 @@ def test_array_regime_bitmap_gate_collects_nothing(spark, monkeypatch):
     combined = D._shared_build(docs, memo=False)
     assert "sh" in combined.columns
     n_docs, mins_bytes, pay_bytes = D._verify_payload_bytes(combined, [])
-    bitmap_bytes = D._bitmap_bytes(n_docs, observed(combined, "n_hashes"))
+    bitmap_bytes = D._bitmap_bytes(n_docs, observed(combined, "n_bits_max"))
     assert pay_bytes + mins_bytes < bitmap_bytes
 
     def run():

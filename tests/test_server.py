@@ -232,7 +232,7 @@ def test_pool_memoization_and_introspection(server, small_csv):
 def test_rewritten_sources_are_reread(server, spark, tmp_path):
     """A source file rewritten with new content and a new size gets a
     new key (fingerprint_source hashes mtime and size), so a resubmitted
-    plan returns the new rows, not the persisted or memoized old ones."""
+    plan returns the new rows, not the memoized old reply."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -377,3 +377,80 @@ def test_date_timestamp_decimal_byte_replies(server, spark, tmp_path):
         "amt": {"Float": [12.34, -0.5]},
         "b": {"Int": [7, -3]},
     }
+
+
+def _pool() -> dict:
+    with urllib.request.urlopen(f"http://127.0.0.1:{PORT}/pool") as resp:
+        return json.loads(resp.read())
+
+
+def _orders_plan(sf_dir: str, status: str) -> list:
+    plan = call(None, {"Read": ["parquet", f"{sf_dir}/orders.parquet", {"columns": []}]})
+    plan = call(plan["dataframe"], {"Op": {"Filter": ["o_orderstatus", {
+        "comparator": "Equal", "value": {"String": status}}]}})
+    return call(plan["dataframe"], {"Op": {"Select": [
+        {"Source": "o_orderkey"}, {"Source": "o_totalprice"}]}})["dataframe"]
+
+
+def test_identical_rebuilt_plan_replies_start_no_job(server, spark, sf_dir, monkeypatch):
+    """An action on a plan rebuilt from scratch, request by request,
+    hits the reply memo (the reference's content-addressed Pool,
+    src/pool.rs:25-94): Collect, Take and Count are each served without
+    building the plan or starting a Spark job."""
+    from df_spark.server import Engine
+
+    actions = ["Collect", {"Take": 5}, "Count"]
+    first = [call(_orders_plan(sf_dir, "O"), {"Action": a})["blocks"] for a in actions]
+    assert first[2]["count"]["Int"][0] == len(first[0]["o_orderkey"]["Int"]) > 5
+    assert len(first[1]["o_orderkey"]["Int"]) == 5
+
+    plan = _orders_plan(sf_dir, "O")
+    nodes = []
+    node = Engine._node
+    monkeypatch.setattr(Engine, "_node", lambda *a: nodes.append(1) or node(*a))
+    before, pool = _last_job_id(spark), _pool()
+    again = [call(plan, {"Action": a})["blocks"] for a in actions]
+    assert _last_job_id(spark) == before
+    assert nodes == []
+    assert again == first
+    after = _pool()
+    assert after["hits"] == pool["hits"] + 3
+    assert (after["misses"], after["size"]) == (pool["misses"], pool["size"])
+
+
+def test_different_constants_make_separate_entries(server, sf_dir):
+    pool = _pool()
+    for status in ["F", "P"]:
+        call(_orders_plan(sf_dir, status), {"Action": "Count"})
+    after = _pool()
+    assert after["misses"] - pool["misses"] == 2
+    assert after["size"] - pool["size"] == 2
+
+
+def test_take_and_collect_of_one_plan_are_separate_entries(server, sf_dir):
+    plan = _orders_plan(sf_dir, "P")
+    pool = _pool()
+    taken = call(plan, {"Action": {"Take": 2}})["blocks"]
+    collected = call(plan, {"Action": "Collect"})["blocks"]
+    assert len(taken["o_orderkey"]["Int"]) == 2
+    assert len(collected["o_orderkey"]["Int"]) > 2
+    assert call(plan, {"Action": {"Take": 3}})["blocks"]["o_orderkey"]["Int"] != \
+        taken["o_orderkey"]["Int"]
+    after = _pool()
+    assert (after["misses"] - pool["misses"], after["hits"] - pool["hits"]) == (3, 0)
+
+
+def test_fingerprint_changes_when_source_changes(spark, tmp_path):
+    import time
+
+    from df_spark import Df
+
+    p = str(tmp_path / "t.parquet")
+    Df.from_vecs(spark, [("x", [1, 2])]).write_parquet(p)
+    fp1 = Df.from_parquet(spark, p).fingerprint
+    time.sleep(0.05)
+    Df.from_vecs(spark, [("x", [3, 4])]).write_parquet(p)
+    fp2 = Df.from_parquet(spark, p).fingerprint
+    # the reference hashes only path+column and would serve stale cache
+    # (src/reader.rs:92-97); our fingerprint includes the file snapshot
+    assert fp1 != fp2

@@ -42,6 +42,25 @@ def test_char_shingles_short_text(spark):
     assert out[3] == []
 
 
+
+def test_char_kgrams_match_python_slicing(spark):
+    """``char_kgrams`` is ``substring(t, i, k)`` at every position, in
+    code points: non-BMP emoji and CJK, combining marks, line
+    terminators the regex ``.`` would skip without DOTALL, and texts
+    empty or shorter than ``k``."""
+    texts = [
+        "", "ab", "abcdef", "a\U0001F600b\U0001F680cd\U0001D11Eef",
+        "e\u0301te\u0301\u0300 cafe\u0301", "line\u0085next\rret\nnl\u2028sep",
+        "\u4e2d\u6587\u7684\u6587\u672c\u662f\u4e0d\u4e86", "\U0001F600" * 9, "abc",
+    ]
+    df = docs_df(spark, [*enumerate(texts), (len(texts), None)])
+    for k in (3, 7):
+        got = {r.doc_id: r.g for r in df.select(
+            "doc_id", X.char_kgrams(F.col("text"), k).alias("g")).collect()}
+        assert got.pop(len(texts)) is None
+        assert got == {i: [t[j:j + k] for j in range(len(t) - k + 1)]
+                       for i, t in enumerate(texts)}
+
 def test_lang_id_markers(spark):
     df = docs_df(spark, [
         (1, "the cat and the dog of the house"),
