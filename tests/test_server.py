@@ -440,6 +440,35 @@ def test_take_and_collect_of_one_plan_are_separate_entries(server, sf_dir):
     assert (after["misses"] - pool["misses"], after["hits"] - pool["hits"]) == (3, 0)
 
 
+def test_reply_memo_evicts_least_recently_used_plan(spark, sf_dir):
+    """At capacity the engine's reply memo drops its oldest reply: that
+    plan's action runs again, while the newest is still served without
+    a Spark job. Nothing was persisted, so eviction frees no storage."""
+    from df_spark.server import Engine
+
+    engine = Engine(spark, cache_capacity=2)
+
+    def plan(status: str) -> list:
+        return [
+            {"Read": ["parquet", f"{sf_dir}/orders.parquet", {"columns": []}]},
+            {"Filter": ["o_orderstatus", {
+                "comparator": "Equal", "value": {"String": status}}]},
+        ]
+
+    replies = [engine.action(plan(s), "Count") for s in ["O", "F", "P"]]
+    assert len(engine.replies) == 2
+    assert (engine.replies.hits, engine.replies.misses) == (0, 3)
+
+    before = _last_job_id(spark)
+    assert engine.action(plan("P"), "Count") == replies[2]
+    assert _last_job_id(spark) == before
+    assert engine.action(plan("O"), "Count") == replies[0]  # evicted: runs again
+    assert _last_job_id(spark) > before
+    assert (engine.replies.hits, engine.replies.misses) == (1, 4)
+    engine.replies.clear()
+    engine.nodes.clear()
+
+
 def test_fingerprint_changes_when_source_changes(spark, tmp_path):
     import time
 
