@@ -1,14 +1,15 @@
 """Deduplication operators for large-scale corpus pipelines.
 
 Declarative JVM-side expressions (higher-order array functions + hash
-aggregates) by default. Three measured hot paths run vectorized in
-Python workers, each with its bit-exact declarative twin documented
-inline: the per-doc winnowing summary (``mapInPandas``), and, while a
-broadcast side table fits the cap, two numpy ``mapInArrow`` kernels —
-the containment gather, and ONE LSH band verify
+aggregates) by default. Three measured hot paths are vectorized, each
+with its bit-exact declarative twin documented inline: the per-doc
+winnowing summary (``mapInPandas``), and, while a driver-side table of
+per-doc bitmaps fits the broadcast cap, the two :mod:`.lsh_kernel`
+numpy kernels — the containment gather, and ONE LSH band verify
 (:func:`_fused_band_verify`) for ``minhash_near_dups``,
-``incremental_band_dedup`` and ``cross_near_dups_in_table``. Four
-families, all shuffle-conscious:
+``incremental_band_dedup`` and ``cross_near_dups_in_table``. A kernel
+stage of one task runs on the driver, which holds the table; wider
+ones in ``mapInArrow`` tasks. Four families, all shuffle-conscious:
 
 - **exact**: hash-groupBy on a normalized-content fingerprint. One
   shuffle on the fingerprint; at 100 TB this is the standard
@@ -33,12 +34,14 @@ north-star extensions.
 
 from __future__ import annotations
 
+from pyspark import cloudpickle
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.hashing import NUM_HASHES, h32, h32_sql, minhash_perm, minhash_perm_sql
 from ..plans.memo import Memo, frame_key
+from . import lsh_kernel as K
 from .observe import observed, observed_checkpoint, with_observed
 from .partitioning import (
     BROADCAST_BYTES_CAP,
@@ -55,6 +58,10 @@ from ..functions.text import (
     normalized,
     normalized_sql,
 )
+
+# mapInArrow closures call the kernels: ship the module's code with
+# them, so a Python worker need not import this package
+cloudpickle.register_pickle_by_value(K)
 
 # Session-scoped memo of the expensive shared intermediates (the
 # reference's Pool, src/pool.rs:25-94, at operator granularity): the
@@ -665,27 +672,32 @@ def _fused_table(combined: DataFrame, id_col: str, words: list[str],
     the bitmaps take one bit per distinct hash, at most the build's
     distinct shingles (``n_bits_max``). Every size is observed on the
     whole build (an upper bound when a label drops rows), so a None
-    costs no job and collects nothing."""
+    costs no job and collects nothing.
+
+    The unlabelled table is collected once per build and kept on the
+    build's frame object, like its observed sizes, so the MinHash
+    operators share it until the memo evicts the build."""
     n_docs, mins_bytes, pay_bytes = _verify_payload_bytes(combined, words)
     n_bits = len(words) * 64 or observed(combined, "n_bits_max")
     if max(pay_bytes + mins_bytes,
            _bitmap_bytes(n_docs, n_bits)) >= BROADCAST_BYTES_CAP:
         return None
     extra = ["n_sh", *[f"m{i}" for i in range(NUM_HASHES)]]
-    if label is not None:
-        combined = combined.select(
-            "*", label.cast("long").alias("__side")).dropna(subset=["__side"])
-        extra.append("__side")
-    return _bitmap_table(combined, id_col, words or "sh", extra)
+    if label is None:
+        if not hasattr(combined, "_fused_side"):
+            combined._fused_side = _bitmap_table(combined, id_col, words or "sh", extra)
+        return combined._fused_side
+    labelled = combined.select(
+        "*", label.cast("long").alias("__side")).dropna(subset=["__side"])
+    return _bitmap_table(labelled, id_col, words or "sh", [*extra, "__side"])
 
 
 def _bitmap_table(frame: DataFrame, id_col: str, bits: list[str] | str,
                   extra: list[str]):
-    """Driver-side side table of the Arrow verify kernels (the fused
-    MinHash band verify and the containment gather), collected in one
-    job: ``(ids, bitmaps, extras)`` — doc ids ascending, per-doc shingle
-    bitmaps as a uint64 [docs, words] matrix, and the ``extra`` integer
-    columns as an int64 [docs, len(extra)] matrix, rows aligned.
+    """Driver-side side table of the :mod:`.lsh_kernel` verifies,
+    collected in one job: ``(ids, bitmaps, extras)`` — doc ids
+    ascending, uint64 [docs, words] shingle bitmaps and the ``extra``
+    integer columns as int64 [docs, len(extra)], rows aligned.
 
     ``bits`` names either the bitmap word columns of a
     :func:`_shared_build` frame, or ONE hash-array column: then every
@@ -721,6 +733,12 @@ def _bitmap_table(frame: DataFrame, id_col: str, bits: list[str] | str,
             np.ascontiguousarray(extras[order]))
 
 
+def _kernel_width(n: int, per_task: int) -> int:
+    """Tasks of a :mod:`.lsh_kernel` stage over ``n`` docs or pairs,
+    before the session's cap. One means the driver runs the kernel."""
+    return n // per_task + 1
+
+
 def _fused_band_verify(spark, table, min_jaccard: float, min_est_matches: int,
                        side=None) -> DataFrame:
     """FUSED BANDED VERIFY, the one LSH band kernel of
@@ -732,153 +750,46 @@ def _fused_band_verify(spark, table, min_jaccard: float, min_est_matches: int,
     ``pmod(id, gens)``; the new-side predicate), keeps only pairs whose
     labels differ, id_a the HIGHER label; otherwise id_a < id_b.
 
-    Candidates are never materialized JVM-side at all. r8's first cut
-    still shipped the 2.3 M candidate pairs THROUGH Arrow into a numpy
-    gather, and the transfer itself — not the popcount math — turned
-    out to be the cost (measured: an IDENTITY mapInPandas/mapInArrow
-    over the candidate frame is ~18-24 CPU-s at sf0.1 under the C1
-    bench JIT; the numpy verify inside is ~2). Everything the banding
-    join derives is a pure function of the broadcast side table (16
-    minima per doc), so each task re-derives the LSH buckets it OWNS
-    from the broadcast minima instead: lexsort the band's 4 minima
-    columns, split groups, keep buckets hashing to this task id,
-    enumerate pairs per bucket (vectorized per bucket-size class), drop
-    pairs that already share an EARLIER band (exact min-band dedup — a
-    pair is emitted by exactly one bucket globally, so no JVM-side
-    distinct), then screen + popcount-verify in the same array pass.
-    Input: one row per task id; output: verified integers only.
+    No candidate frame is ever materialized JVM-side: shipping sf0.1's
+    2.3 M candidates through Arrow measured ~18-24 CPU-s against ~2 for
+    the numpy verify, and every bucket is a pure function of the side
+    table's minima, so :func:`.lsh_kernel.band_pairs` re-derives them
+    and emits only screened exact integers. Buckets match
+    :func:`lsh_candidate_pairs` (two docs share band b iff their 4
+    minima are equal; the md5 band digest is injective on them), and
+    the authoritative round-then-threshold runs JVM-side with the
+    double expression of :func:`jaccard_projection`, on either path.
 
-    Bucket semantics match :func:`lsh_candidate_pairs` exactly: two
-    docs share band b iff their 4 minima tuples are equal (the md5 band
-    digest is injective on the tuple), and the oracle's DISTINCT-pair +
-    estimate-floor + exact-Jaccard contract is evaluated on the same
-    integers. The UDF emits only exact integers (|∩| and na+nb)
-    screened by the exact integer estimate floor and a CONSERVATIVE
-    raw-ratio screen (margin 1e-6 > the 5e-7 half-ulp a rounded value
-    can move); the authoritative round-then-threshold runs JVM-side
-    with the identical double expression as :func:`jaccard_projection`
-    and :func:`jaccard_words_projection`.
-
-    Pairs are enumerated in slices whose numpy temporaries stay near
-    128 MB whatever the bitmap width: per pair, two 16-minima
-    gathers, two bitmap-row gathers, their AND and its byte popcounts,
-    and the index arrays. A bucket larger than a slice is split across
-    slices, so the array regime's wider bitmaps and a dense boilerplate
-    bucket cannot blow a worker's memory up together.
-
-    100 TB note: this regime is, by construction, the bounded-corpus
-    one (the whole side table must fit the broadcast cap); past the cap
-    the callers' JVM paths are unchanged and fully distributed."""
+    A stage of one task (:func:`_kernel_width`) runs on the driver, which
+    holds the side table already: its pairs come back as a local
+    relation and no Python worker starts. Wider ones broadcast the
+    table to that many ``mapInArrow`` tasks (capped at the session's
+    parallelism), each verifying the buckets it owns. This is the
+    bounded-corpus regime by construction (the side table fits the
+    broadcast cap); past it the callers' JVM paths are distributed."""
     import numpy as np
 
     ids, wbits, extras = table
-    chunk = max(1, (1 << 27) // (32 * wbits.shape[1] + 8 * (2 * NUM_HASHES + 8)))
-    bc = spark.sparkContext.broadcast((
-        ids, np.ascontiguousarray(extras[:, 0]), wbits,
-        np.ascontiguousarray(extras[:, 1:1 + NUM_HASHES]),
-        None if side is None else np.ascontiguousarray(side, np.int64)))
-    raw_floor = float(min_jaccard) - 1e-6
-    est_floor = int(min_est_matches)
-    # tasks scale with corpus size (each re-derives the banding over
-    # the broadcast minima — trivial next to enumeration), NOT fixed at
-    # full parallelism: a fresh python worker costs ~0.7-2.5 CPU-s of
-    # interpreter+import spin-up, which at 32 tasks would dwarf the
-    # ~3 CPU-s of actual numpy work on a 5k-doc corpus
-    n_parts = max(1, min(spark.sparkContext.defaultParallelism, len(ids) // 600 + 1))
-    bands, rpb = 4, NUM_HASHES // 4  # lsh_candidate_pairs defaults
+    args = (ids, np.ascontiguousarray(extras[:, 0]), wbits,
+            np.ascontiguousarray(extras[:, 1:1 + NUM_HASHES]),
+            None if side is None else np.ascontiguousarray(side, np.int64))
+    kw = {"min_jaccard": min_jaccard, "min_est_matches": int(min_est_matches)}
+    cols = ["id_a", "id_b", "__i", "__t"]
+    width = _kernel_width(len(ids), 600)  # docs per task
+    if width == 1:
+        pre = spark.createDataFrame(K.table(cols, K.band_pairs(*args, **kw)))
+    else:
+        n_parts = min(spark.sparkContext.defaultParallelism, width)
+        bc = spark.sparkContext.broadcast(args)
 
-    def gen(batches):
-        import numpy as np
-        import pyarrow as pa
+        def gen(batches):
+            for batch in batches:
+                for pid in batch.column(0).to_numpy(zero_copy_only=False):
+                    yield from K.batches(cols, K.band_pairs(
+                        *bc.value, **kw, part=int(pid), n_parts=n_parts))
 
-        ids, nsz, wbits, mins, label = bc.value
-        # per-byte popcounts as uint8: the lookup result is then no
-        # larger than the AND it reads
-        pop8 = np.unpackbits(
-            np.arange(256, dtype=np.uint8)[:, None], axis=1
-        ).sum(axis=1).astype(np.uint8)
-
-        def band_pairs(pid):
-            if len(mins) < 2:
-                return
-            for band in range(bands):
-                sub = mins[:, band * rpb:(band + 1) * rpb]
-                order = np.lexsort(sub.T[::-1])
-                srt = sub[order]
-                brk = np.flatnonzero(np.any(srt[1:] != srt[:-1], axis=1)) + 1
-                starts = np.concatenate(([0], brk))
-                sizes = np.diff(np.concatenate((starts, [len(srt)])))
-                # deterministic bucket -> task assignment (FNV-style mix
-                # of the band minima; only balance depends on it, never
-                # correctness)
-                key = srt[starts].astype(np.uint64)
-                hsh = np.full(len(starts), 0xcbf29ce484222325, np.uint64)
-                for j in range(rpb):
-                    hsh = (hsh ^ key[:, j]) * np.uint64(0x100000001b3)
-                sel = ((hsh % np.uint64(n_parts)).astype(np.int64) == pid) & (sizes >= 2)
-                sel_starts, sel_sizes = starts[sel], sizes[sel]
-                for sz in np.unique(sel_sizes):
-                    # every pair of every bucket of this size, numbered
-                    # bucket-major then row-major over the upper
-                    # triangle, and decoded a slice at a time: one
-                    # boilerplate bucket of thousands of docs is split
-                    # like many small ones
-                    gs = sel_starts[sel_sizes == sz]
-                    per_row = np.arange(sz - 1, 0, -1)
-                    row_end = np.cumsum(per_row)
-                    row_start = row_end - per_row
-                    n_pair = int(row_end[-1])
-                    total = len(gs) * n_pair
-                    for c0 in range(0, total, chunk):
-                        g, r = np.divmod(
-                            np.arange(c0, min(c0 + chunk, total)), n_pair)
-                        i = np.searchsorted(row_end, r, side="right")
-                        A = order[gs[g] + i]
-                        B = order[gs[g] + i + 1 + r - row_start[i]]
-                        if label is None:
-                            # table index order == id order
-                            A, B = np.minimum(A, B), np.maximum(A, B)
-                        else:
-                            cross = label[A] != label[B]
-                            A, B = A[cross], B[cross]
-                            swap = label[A] < label[B]
-                            A, B = np.where(swap, B, A), np.where(swap, A, B)
-                        if band and len(A):
-                            # min-band dedup: an earlier shared band
-                            # already emitted this pair
-                            dup = np.zeros(len(A), bool)
-                            for j in range(band):
-                                dup |= (
-                                    mins[A, j * rpb:(j + 1) * rpb]
-                                    == mins[B, j * rpb:(j + 1) * rpb]
-                                ).all(axis=1)
-                            A, B = A[~dup], B[~dup]
-                        if not len(A):
-                            continue
-                        ok = (mins[A] == mins[B]).sum(axis=1) >= est_floor
-                        A, B = A[ok], B[ok]
-                        if not len(A):
-                            continue
-                        inter = (
-                            pop8[(wbits[A] & wbits[B]).view(np.uint8)]
-                            .reshape(len(A), -1)
-                            .sum(axis=1, dtype=np.int64)
-                        )
-                        tot = nsz[A] + nsz[B]
-                        keep = inter >= raw_floor * (tot - inter)
-                        if keep.any():
-                            yield ids[A[keep]], ids[B[keep]], inter[keep], tot[keep]
-
-        for batch in batches:
-            for pid in batch.column(0).to_numpy(zero_copy_only=False):
-                for ia, ib, ii, tt in band_pairs(int(pid)):
-                    yield pa.RecordBatch.from_arrays(
-                        [pa.array(ia), pa.array(ib), pa.array(ii), pa.array(tt)],
-                        names=["id_a", "id_b", "__i", "__t"],
-                    )
-
-    pre = spark.range(0, n_parts, 1, numPartitions=n_parts).mapInArrow(
-        gen, schema="id_a long, id_b long, __i long, __t long")
+        pre = spark.range(0, n_parts, 1, numPartitions=n_parts).mapInArrow(
+            gen, schema="id_a long, id_b long, __i long, __t long")
     jac = F.round(
         F.col("__i").cast("double")
         / (F.col("__t").cast("double") - F.col("__i").cast("double")),
@@ -886,6 +797,24 @@ def _fused_band_verify(spark, table, min_jaccard: float, min_est_matches: int,
     )
     return pre.select("id_a", "id_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= min_jaccard)
+
+
+def _payload(words: list[str], suffix: str) -> list[Column]:
+    """A :func:`_shared_build` row's exact-Jaccard payload, suffixed."""
+    return [
+        F.col("n_sh").alias(f"n{suffix}"),
+        *([F.col(w).alias(f"{w}{suffix}") for w in words] if words
+          else [F.col("sh").alias(f"sh{suffix}")]),
+    ]
+
+
+def _exact_jaccard(pairs: DataFrame, words: list[str], min_jaccard: float) -> DataFrame:
+    """(id_a, id_b, jaccard ≥ threshold) of ``pairs`` carrying both
+    sides' :func:`_payload` (suffixes ``_a``/``_b``)."""
+    if words:
+        return jaccard_words_projection(
+            pairs, "id_a", "id_b", "_a", "_b", words, min_jaccard)
+    return jaccard_projection(pairs, "id_a", "id_b", "sh_a", "sh_b", min_jaccard)
 
 
 def minhash_near_dups(
@@ -928,12 +857,13 @@ def minhash_near_dups(
 
     - **fused** (sides fit ``BROADCAST_BYTES_CAP``, in EITHER payload
       regime): :func:`_fused_band_verify` — no candidate frame at all;
-      each task re-derives its LSH buckets from the broadcast minima
-      and popcount-verifies in numpy. The side table's bitmaps are the
-      build's words, or in the array regime one bit per distinct hash
-      of the corpus (:func:`_bitmap_table`; exact, the arrays being
-      sets) while those bitmaps also fit the cap — checked from the
-      build's observed hash count before anything is collected.
+      the kernel re-derives the LSH buckets from the minima and
+      popcount-verifies in numpy, on the driver for a one-task corpus.
+      The side table's bitmaps are the build's words, or in the array
+      regime one bit per distinct hash of the corpus
+      (:func:`_bitmap_table`; exact, the arrays being sets) while those
+      bitmaps also fit the cap — checked from the build's observed hash
+      count before anything is collected.
     - **two-phase** (the minima and payload, or the bitmaps, exceed
       the cap — the 100 TB regime, where the sets frame is corpus-
       sized and every join shuffles): screen the checkpointed
@@ -964,66 +894,43 @@ def minhash_near_dups(
         if table is not None:
             verified = _fused_band_verify(
                 docs.sparkSession, table, min_jaccard, min_est_matches)
-            if not memo:
-                return verified
-            # store at data-sized width (the verified set scales with
-            # the corpus, not the candidate count — which this path
-            # never materializes); downstream consumers (CC, span
-            # stats) re-scan this frame, and the CC gate reads its
-            # observed row count
+            # the verified set scales with the corpus, not with the
+            # candidate count, which this path never materializes
             store_width = max(1, min(n_docs // 1_000 + 1, par))
-            return observed_checkpoint(verified.repartition(store_width))
-
-        prof = combined.select(id_col, *[f"m{i}" for i in range(NUM_HASHES)])
-        mins_arr = minhash_mins_array()
-        est = minhash_est("mins_a", "mins_b")
-
-        def sided(suffix: str) -> list:
-            return [
-                F.col("n_sh").alias(f"n{suffix}"),
-                *([F.col(w).alias(f"{w}{suffix}") for w in words] if words
-                  else [F.col("sh").alias(f"sh{suffix}")]),
-            ]
-
-        def verify(pairs: DataFrame) -> DataFrame:
-            if words:
-                return jaccard_words_projection(
-                    pairs, "id_a", "id_b", "_a", "_b", words, min_jaccard)
-            return jaccard_projection(
-                pairs, "id_a", "id_b", "sh_a", "sh_b", min_jaccard)
-
-        side = combined.select(F.col(id_col), "n_sh", *(words or ["sh"]))
-        sigs = minhash_signatures(id_col=id_col, profile=prof)
-        cand = lsh_candidate_pairs(sigs, id_col, memo=memo)
-        # two-phase: narrow screen, then the payload-attaching join
-        # only for survivors
-        prof_m = combined.select(F.col(id_col), mins_arr.alias("mins"))
-        mins_a = prof_m.select(F.col(id_col).alias("id_a"), F.col("mins").alias("mins_a"))
-        mins_b = prof_m.select(F.col(id_col).alias("id_b"), F.col("mins").alias("mins_b"))
-        screened = observed_checkpoint(
-            cand.join(size_hinted(mins_a, mins_bytes), "id_a")
-            .join(size_hinted(mins_b, mins_bytes), "id_b")
-            .filter(est >= min_est_matches)
-            .select("id_a", "id_b")
-        )
-        n_pairs = observed(screened)
-        width = max(par, min(n_pairs // 20_000 + 1, 8 * par))
-        sa = size_hinted(
-            side.select(F.col(id_col).alias("id_a"), *sided("_a")), pay_bytes)
-        sb = size_hinted(
-            side.select(F.col(id_col).alias("id_b"), *sided("_b")), pay_bytes)
-        pairs = screened.repartition(width).join(sa, "id_a").join(sb, "id_b")
-
-        verified = verify(pairs)
+        else:
+            prof = combined.select(id_col, *[f"m{i}" for i in range(NUM_HASHES)])
+            est = minhash_est("mins_a", "mins_b")
+            side = combined.select(F.col(id_col), "n_sh", *(words or ["sh"]))
+            sigs = minhash_signatures(id_col=id_col, profile=prof)
+            cand = lsh_candidate_pairs(sigs, id_col, memo=memo)
+            # two-phase: narrow screen, then the payload-attaching join
+            # only for survivors
+            prof_m = combined.select(F.col(id_col), minhash_mins_array().alias("mins"))
+            mins_a = prof_m.select(F.col(id_col).alias("id_a"), F.col("mins").alias("mins_a"))
+            mins_b = prof_m.select(F.col(id_col).alias("id_b"), F.col("mins").alias("mins_b"))
+            screened = observed_checkpoint(
+                cand.join(size_hinted(mins_a, mins_bytes), "id_a")
+                .join(size_hinted(mins_b, mins_bytes), "id_b")
+                .filter(est >= min_est_matches)
+                .select("id_a", "id_b")
+            )
+            n_pairs = observed(screened)
+            width = max(par, min(n_pairs // 20_000 + 1, 8 * par))
+            sa = size_hinted(
+                side.select(F.col(id_col).alias("id_a"), *_payload(words, "_a")), pay_bytes)
+            sb = size_hinted(
+                side.select(F.col(id_col).alias("id_b"), *_payload(words, "_b")), pay_bytes)
+            pairs = screened.repartition(width).join(sa, "id_a").join(sb, "id_b")
+            verified = _exact_jaccard(pairs, words, min_jaccard)
+            store_width = max(1, min(n_pairs // 500_000 + 1, par))
         if not memo:
             return verified
         # store the memoized pair set at data-sized width: consumers
-        # (the CC loop, the pipeline) re-scan this frame many times,
-        # and inheriting the verify job's compute width (~100+
-        # partitions) makes every downstream job pay that task count
-        # (measured: the CC's symmetric-edge build dropped 14 → 2
-        # CPU-s at sf0.1)
-        store_width = max(1, min(n_pairs // 500_000 + 1, par))
+        # (the CC loop, span stats, the pipeline) re-scan this frame
+        # many times, and inheriting the verify job's compute width
+        # (~100+ partitions) makes every downstream job pay that task
+        # count (measured: the CC's symmetric-edge build dropped 14 → 2
+        # CPU-s at sf0.1); the CC gate reads its observed row count
         return observed_checkpoint(verified.repartition(store_width))
 
     if not memo:
@@ -1101,6 +1008,46 @@ def minhash_near_dups_sql(table: str = "documents", min_jaccard: float = 0.6,
 # ---------------------------------------------------------------------------
 
 
+def _generation_rows(batch: DataFrame, dups: DataFrame, id_col: str) -> DataFrame:
+    """:func:`incremental_band_dedup`'s rows for the batch docs
+    ``batch`` (id, gen), given their ``dups`` (id, n_dup_partners)."""
+    return batch.join(dups, [id_col], "left").select(
+        id_col,
+        F.col("gen"),
+        F.when(F.col("n_dup_partners").isNull(), F.lit(1))
+        .otherwise(F.lit(0)).cast("long").alias("is_novel"),
+        F.coalesce(F.col("n_dup_partners"), F.lit(0))
+        .cast("long").alias("n_dup_partners"),
+    )
+
+
+def _elect_generations(all_ids: DataFrame, verified: DataFrame, id_col: str,
+                       gens: int) -> DataFrame:
+    """:func:`incremental_band_dedup`'s generation election in numpy,
+    over its fused verified (id_a, id_b) pairs, collected through Arrow:
+    generation by generation, the batch docs with a verified partner
+    not removed before are dups and never join the index (``np.mod`` =
+    ``pmod`` for negative ids); then one (id, n_dup_partners) table is
+    joined onto every batch doc."""
+    import numpy as np
+    import pyarrow as pa
+
+    t = verified.toArrow()
+    a, b = (np.asarray(t.column(i), np.int64) for i in (0, 1))
+    gen_a = np.mod(a, gens)
+    removed = np.empty(0, np.int64)  # batch docs found to be dups
+    n_dup = np.empty(0, np.int64)  # their partner counts, aligned
+    for g in range(1, gens):
+        ids_g, n_g = np.unique(
+            a[(gen_a == g) & ~np.isin(b, removed)], return_counts=True)
+        removed = np.concatenate([removed, ids_g])
+        n_dup = np.concatenate([n_dup, n_g])
+    dups = all_ids.sparkSession.createDataFrame(pa.table({
+        id_col: pa.array(removed, pa.int64()),
+        "n_dup_partners": pa.array(n_dup, pa.int64())}))
+    return _generation_rows(all_ids.filter(F.col("gen") > 0), dups, id_col)
+
+
 def incremental_band_dedup(
     docs: DataFrame,
     min_jaccard: float = 0.6,
@@ -1156,61 +1103,18 @@ def incremental_band_dedup(
         F.col(id_col), F.pmod(id_col, gens).cast("long").alias("gen"))
     table = _fused_table(combined, id_col, words)
     if table is not None:
-        # FUSED ALL-GENERATIONS VERIFY (r13 - the minhash_near_dups
-        # fused kernel applied to the incremental chain): the per-
-        # generation JVM chain below serializes two (band join ->
-        # distinct -> screen+verify joins -> agg -> checkpoint) rounds,
-        # ~2.5-3.5 s each at sf0.1 for 523 k+ candidates/gen, almost
-        # all of it exchange + AQE latency. Every cross-generation
-        # candidate is instead derived and verified in ONE mapInArrow
-        # pass over the broadcast minima (pairs oriented so id_a is the
-        # HIGHER generation - the batch doc probing the index; same-
-        # generation pairs are never emitted, preserving the batch-vs-
-        # index contract), and the "removed docs never join the index"
-        # rule moves to an anti-join on the VERIFIED pair table: per-
-        # pair verification is deterministic, so filtering removed
-        # partners after the verify yields exactly the pair set the
-        # per-generation probe would have produced (the excluded
-        # pairs' numpy popcounts are wasted work bounded by the dup
-        # rate - microseconds against two saved exchange rounds). Past
-        # the broadcast cap the per-generation probe below is unchanged
-        # - the 100 TB crawl-vs-persisted-index regime.
-        verified = (
-            _fused_band_verify(docs.sparkSession, table, min_jaccard,
-                               min_est_matches, side=table[0] % gens)
-            .select("id_a", "id_b")
-            .localCheckpoint(eager=True)
-        )
-        outs_f: list[DataFrame] = []
-        removed_f: DataFrame | None = None
-        for g in range(1, gens):
-            vg = verified.filter(F.pmod("id_a", gens) == g)
-            if removed_f is not None:
-                vg = vg.join(
-                    removed_f.select(F.col(id_col).alias("id_b")),
-                    ["id_b"], "left_anti")
-            dups = vg.groupBy("id_a").agg(
-                F.count(F.lit(1)).cast("long").alias("n_dup_partners"))
-            outs_f.append(
-                all_ids.filter(F.col("gen") == g)
-                .join(dups.withColumnRenamed("id_a", id_col),
-                      [id_col], "left")
-                .select(
-                    id_col,
-                    F.col("gen"),
-                    F.when(F.col("n_dup_partners").isNull(), F.lit(1))
-                    .otherwise(F.lit(0)).cast("long").alias("is_novel"),
-                    F.coalesce(F.col("n_dup_partners"), F.lit(0))
-                    .cast("long").alias("n_dup_partners"),
-                )
-            )
-            newly = dups.select(F.col("id_a").alias(id_col))
-            removed_f = (newly if removed_f is None
-                         else removed_f.unionByName(newly))
-        out_f = outs_f[0]
-        for o in outs_f[1:]:
-            out_f = out_f.unionByName(o)
-        return out_f
+        # FUSED ALL-GENERATIONS VERIFY: one kernel pass verifies every
+        # cross-generation pair (id_a the HIGHER generation, the batch
+        # doc probing the index; same-generation pairs are never
+        # emitted) instead of the JVM chain's (band join -> verify ->
+        # agg) round per generation, ~2.5-3.5 s each at sf0.1, mostly
+        # exchange + AQE latency. Removed docs are dropped from the
+        # VERIFIED pairs: verification is per pair and deterministic,
+        # so this is the pair set the per-generation probe produces.
+        verified = _fused_band_verify(
+            docs.sparkSession, table, min_jaccard, min_est_matches,
+            side=table[0] % gens).select("id_a", "id_b")
+        return _elect_generations(all_ids, verified, id_col, gens)
 
     prof = combined.select(id_col, *[f"m{i}" for i in range(NUM_HASHES)])
     sigs = minhash_signatures(id_col=id_col, profile=prof)
@@ -1229,49 +1133,26 @@ def incremental_band_dedup(
 
     mins_arr = minhash_mins_array()
 
-    def sided(suffix: str) -> list:
-        return [
-            F.col("n_sh").alias(f"n{suffix}"),
-            *([F.col(w).alias(f"{w}{suffix}") for w in words] if words
-              else [F.col("sh").alias(f"sh{suffix}")]),
-        ]
-
     side = combined.select(
         F.col(id_col), mins_arr.alias("mins"), F.col("n_sh"),
         *(words if words else ["sh"]),
     )
-    # size-gated broadcast of the per-doc payload sides (r13, the
-    # minhash_est_audit pattern): the checkpointed build carries no
-    # Catalyst stats, so without the hint AQE assumes the sides are
-    # huge and plans a sort-merge join per verify — two per generation.
-    # In the bitmap regime a side is n_docs·(mins + words + n_sh)
-    # bytes; past the cap this degrades back to the shuffle join.
-    if words:
-        side_bytes = observed(combined) * (16 * 8 + (len(words) + 1) * 8 + 24)
-    else:
-        side_bytes = None  # array regime: unbounded payload, no hint
-    def hinted(df: DataFrame) -> DataFrame:
-        return size_hinted(df, side_bytes) if side_bytes else df
-    a_side = hinted(side.select(
-        F.col(id_col).alias("id_a"), F.col("mins").alias("mins_a"), *sided("_a")))
-    b_side = hinted(side.select(
-        F.col(id_col).alias("id_b"), F.col("mins").alias("mins_b"), *sided("_b")))
+    # size-gated broadcast of the per-doc payload sides: the
+    # checkpointed build carries no Catalyst stats, so AQE would plan a
+    # sort-merge join per verify. A bitmap-regime side is
+    # n_docs·(mins + words + n_sh) bytes; the array regime's payload is
+    # unbounded (no hint), and past the cap the join shuffles.
+    side_bytes = (observed(combined) * (16 * 8 + (len(words) + 1) * 8 + 24)
+                  if words else None)
+    a_side = size_hinted(side.select(
+        F.col(id_col).alias("id_a"), F.col("mins").alias("mins_a"), *_payload(words, "_a")),
+        side_bytes)
+    b_side = size_hinted(side.select(
+        F.col(id_col).alias("id_b"), F.col("mins").alias("mins_b"), *_payload(words, "_b")),
+        side_bytes)
     est = minhash_est("mins_a", "mins_b")
 
-    def verify(cand: DataFrame) -> DataFrame:
-        pairs = (
-            cand.join(a_side, "id_a").join(b_side, "id_b")
-            .filter(est >= min_est_matches)
-        )
-        if words:
-            return jaccard_words_projection(
-                pairs, "id_a", "id_b", "_a", "_b", words, min_jaccard)
-        return jaccard_projection(
-            pairs, "id_a", "id_b", "sh_a", "sh_b", min_jaccard)
-
-    outs: list[DataFrame] = []
-    removed: DataFrame | None = None  # dup ids never appended to the index
-    for g in range(1, gens):
+    def probe(g: int, removed: DataFrame | None) -> DataFrame:
         new_b = buckets.filter(F.col("gen") == g).select(
             F.col(id_col).alias("id_a"), "band_idx", "bucket")
         old_b = buckets.filter(F.col("gen") < g)
@@ -1286,31 +1167,26 @@ def incremental_band_dedup(
             .select("id_a", "id_b")
             .distinct()
         )
-        # (id_a, n_dup_partners): consumed twice (output row + the next
+        pairs = (cand.join(a_side, "id_a").join(b_side, "id_b")
+                 .filter(est >= min_est_matches))
+        return _exact_jaccard(pairs, words, min_jaccard)
+
+    # generation by generation, the batch docs with a verified index
+    # partner are dups, and never join the index
+    out: DataFrame | None = None
+    removed: DataFrame | None = None
+    for g in range(1, gens):
+        # (id, n_dup_partners): consumed twice (output row + the next
         # generation's index anti-join) — checkpoint the bounded frame
         dups = (
-            verify(cand)
-            .groupBy("id_a")
+            probe(g, removed).groupBy(F.col("id_a").alias(id_col))
             .agg(F.count(F.lit(1)).cast("long").alias("n_dup_partners"))
             .localCheckpoint(eager=True)
         )
-        outs.append(
-            all_ids.filter(F.col("gen") == g)
-            .join(dups.withColumnRenamed("id_a", id_col), [id_col], "left")
-            .select(
-                id_col,
-                F.col("gen"),
-                F.when(F.col("n_dup_partners").isNull(), F.lit(1))
-                .otherwise(F.lit(0)).cast("long").alias("is_novel"),
-                F.coalesce(F.col("n_dup_partners"), F.lit(0))
-                .cast("long").alias("n_dup_partners"),
-            )
-        )
-        newly = dups.select(F.col("id_a").alias(id_col))
+        rows = _generation_rows(all_ids.filter(F.col("gen") == g), dups, id_col)
+        out = rows if out is None else out.unionByName(rows)
+        newly = dups.select(id_col)
         removed = newly if removed is None else removed.unionByName(newly)
-    out = outs[0]
-    for o in outs[1:]:
-        out = out.unionByName(o)
     return out
 
 
@@ -1550,10 +1426,9 @@ def banded_ngram_jaccard(
                 "band_idx", "bucket"),
         )
         .join(meta, id_col)
-        .localCheckpoint(eager=True)
     )
-    n_buckets = buckets.count()
-    bucket_bytes = n_buckets * (48 + 16 * len(block_cols))
+    buckets = observed_checkpoint(buckets)
+    bucket_bytes = observed(buckets) * (48 + 16 * len(block_cols))
     keys = [*block_cols, "band_idx", "bucket"]
     left = buckets.select(F.col(id_col).alias("id_a"), *keys)
     right = size_hinted(
@@ -1564,7 +1439,8 @@ def banded_ngram_jaccard(
         .select("id_a", "id_b")
         .distinct()
     )
-    n_docs = combined.count()
+    # the shared build's checkpoint observed its rows and Σn_sh
+    n_docs = observed(combined)
     if words:
         pay = combined.select(F.col(id_col), "n_sh", *words)
         pay_bytes = n_docs * ((len(words) + 1) * 8 + 24)
@@ -1577,9 +1453,10 @@ def banded_ngram_jaccard(
         return jaccard_words_projection(
             cand.join(a, "id_a").join(b, "id_b"),
             "id_a", "id_b", "_a", "_b", words, 0.0)
+    # array regime: the sets are the build's own ``sh`` column, so
+    # Σn_sh is their summed size
     sets = shared_sets(docs, id_col, text_col, memo=memo)
-    nh = sets.select(F.sum(F.size("sh"))).collect()[0][0] or 0
-    sets_bytes = nh * 4 + n_docs * 32
+    sets_bytes = observed(combined, "nh") * 4 + n_docs * 32
     sa = size_hinted(sets.select(
         F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), sets_bytes)
     sb = size_hinted(sets.select(
@@ -1622,12 +1499,11 @@ def contamination_scores(
     # streaming query reuses it across restarts within the session
     bench_hashes = DEDUP_MEMO.get_or_build(
         ("bench_hashes", frame_key(bench_docs), id_col, text_col, k),
-        lambda: (
+        lambda: observed_checkpoint(
             shingle_hashes(bench_docs, id_col, text_col, k=k)
-            .select("h").distinct().localCheckpoint(eager=True)
-        ),
+            .select("h").distinct()),
     )
-    bh_bytes = bench_hashes.count() * 16
+    bh_bytes = observed(bench_hashes) * 16
     train_hashes = shingle_hashes(docs, id_col, text_col, k=k)
     return (
         train_hashes.join(size_hinted(bench_hashes, bh_bytes), "h")
@@ -1718,12 +1594,11 @@ def winnow_selected(
         (F.length("__t") - (k - 1)).alias("n_grams"),
         F.posexplode(char_kgrams(F.col("__t"), k)).alias("pos", "__s"),
     ).select(id_col, "n_grams", (F.col("pos") + 1).alias("pos"), "__s")
-    dim = (
+    # tiny; its observed rows gate the broadcast the checkpoint serves
+    dim = observed_checkpoint(
         toks.select("__s").distinct()
-        .select("__s", h32(F.col("__s")).alias("h"))
-        .localCheckpoint(eager=True)  # tiny; count + broadcast reuse it
-    )
-    if dim.count() <= DIM_MAX_ROWS:
+        .select("__s", h32(F.col("__s")).alias("h")))
+    if observed(dim) <= DIM_MAX_ROWS:
         pos_hashes = toks.join(F.broadcast(dim), "__s").select(
             id_col, "n_grams", "pos", "h")
     else:
@@ -2475,6 +2350,50 @@ def prefix_candidate_pairs(
     return sh, arrays, cand
 
 
+def _gather_verify(cand: DataFrame, table, t20: int) -> DataFrame:
+    """:func:`containment_pairs`' GATHER VERIFY: (id_a, id_b, sa, c) of
+    the candidates whose exact |a ∩ b| = c passes 20c ≥ t20·sa, from a
+    :func:`_bitmap_table` side table with extra ``sz``.
+
+    The closed-vocabulary corpus makes the candidate set ~60% of all
+    in-source pairs (390k at sf0.1 for 14 outputs), so per-pair verify
+    cost IS the operator's cost: array_intersect over two broadcast
+    joins measured ~47 CPU-s, and the same intersections as bitmap
+    popcounts (:func:`.lsh_kernel.gather_popcounts`) vectorize end to
+    end. Only exact integers come out; the caller's filter + round run
+    JVM-side, so results are bit-equal to the join verify. One task's
+    worth of candidates (:func:`_kernel_width`) is verified on the
+    driver, which holds the side table already, so no Python worker
+    starts for it."""
+    import numpy as np
+
+    ids, wbits, sizes = table
+    side = (ids, np.ascontiguousarray(sizes[:, 0]), wbits)
+    cols = ["id_a", "id_b", "sa", "c"]
+
+    def verified(side, pairs):
+        # pairs: Arrow (id_a, id_b) columns
+        ia, ib = (np.asarray(pairs.column(i), np.int64) for i in (0, 1))
+        sa, c = K.gather_popcounts(*side, ia, ib)
+        keep = 20 * c >= t20 * sa  # integer-exact
+        return ia[keep], ib[keep], sa[keep], c[keep]
+
+    spark = cand.sparkSession
+    pairs = cand.select("id_a", "id_b")
+    width = _kernel_width(observed(cand), 100_000)  # pairs per task
+    if width == 1:
+        return spark.createDataFrame(K.table(cols, [verified(side, pairs.toArrow())]))
+    bc = spark.sparkContext.broadcast(side)
+
+    def gen(batches):
+        for batch in batches:
+            yield from K.batches(cols, [verified(bc.value, batch)])
+
+    return pairs.repartition(
+        min(width, 8 * spark.sparkContext.defaultParallelism)).mapInArrow(
+        gen, schema="id_a long, id_b long, sa long, c long")
+
+
 def containment_pairs(
     docs: DataFrame,
     min_containment: float = 0.8,
@@ -2524,11 +2443,10 @@ def containment_pairs(
     the Jaccard and the containment join pays the corpus aggregate
     once; the candidate join keys on a's rarest content plus the
     partition columns; the b-side index is the rank-carrying explode
-    of the per-doc arrays, shuffled once on h. Verify is adaptive:
-    Arrow gather over broadcast per-doc bitmaps when the corpus fits
-    the gate (exact popcount intersections, see the inline note),
-    broadcast array-intersect when only the hash payload fits, and
-    the shingle-row count join at full scale."""
+    of the per-doc arrays, shuffled once on h. Verify is adaptive: a
+    numpy popcount gather over per-doc bitmaps when they fit the gate
+    (:func:`_gather_verify`), broadcast array-intersect when only the
+    hash payload fits, and the shingle-row count join at full scale."""
     t20 = int(round(min_containment * 20))
     assert abs(min_containment * 20 - t20) < 1e-9, (
         "min_containment must be a multiple of 0.05")
@@ -2610,117 +2528,27 @@ def containment_pairs(
         )
         # observed: the gather sizes its stage width from the count
         cand = observed_checkpoint(cand)
-        gathered = None
-        if n_sh_rows * 8 < BROADCAST_BYTES_CAP:
-            # ARROW GATHER VERIFY (same move as the MinHash fused
-            # verify, minhash_near_dups above): the closed-vocabulary
-            # corpus makes the candidate set ~60% of all in-source
-            # pairs (390k at sf0.1 for 14 outputs — no exact filter
-            # prunes it, see the positional-filter note), so per-pair
-            # verify cost IS the operator's cost. array_intersect over
-            # two broadcast joins measured ~47 CPU-s; the same
-            # intersection as bitmap popcounts over the corpus
-            # vocabulary is vectorizable end-to-end: per-doc bitmaps
-            # with one bit per distinct shingle hash, built ONCE
-            # driver-side by _bitmap_table (bounded by this regime's
-            # gate), broadcast, and gather+AND+popcount per Arrow
-            # batch. The UDF emits only exact integers (c, sa) screened
-            # by the exact integer threshold; the authoritative filter
-            # + round run JVM-side on those integers, so results are
-            # bit-equal to the join verify. The bitmaps' size is known
-            # from the arrays build before anything is collected.
+        if n_sh_rows * 8 >= BROADCAST_BYTES_CAP:
+            common = (
+                cand.join(sh.select(F.col(id_col).alias("id_a"), "h"), "id_a")
+                .join(sh.select(F.col(id_col).alias("id_b"), "h"), ["id_b", "h"])
+                .groupBy("id_a", "id_b", "sa")
+                .agg(F.count(F.lit(1)).alias("c"))
+            )
+        else:
+            # per-doc plain bigint hash arrays (array_intersect on
+            # STRUCT elements has no hash-set fast path — hence the
+            # strip, see prefix_filtered_pairs)
+            haf = arrays.select(
+                F.col(id_col), "sz",
+                F.transform("__arr", lambda x: x["h"]).alias("__ha"))
             if _bitmap_bytes(observed(arrays, "n_docs"),
                              observed(arrays, "n_hashes")) < BROADCAST_BYTES_CAP:
-                ids_np, wbits, sizes = _bitmap_table(
-                    arrays.select(
-                        F.col(id_col), "sz",
-                        F.transform("__arr", lambda x: x["h"]).alias("__ha")),
-                    id_col, "__ha", ["sz"])
-                bc = cand.sparkSession.sparkContext.broadcast(
-                    (ids_np, sizes[:, 0].copy(), wbits))
-                par = cand.sparkSession.sparkContext.defaultParallelism
-                n_cand = observed(cand)
-                # ~100k pairs/task (each ~6 µs of numpy), capped at the
-                # session's width; no max(par, ...) floor — a fresh
-                # python worker costs ~0.5-2 CPU-s of interpreter +
-                # import spin-up, so fanning a 390k-pair stage to 32
-                # tasks burns more on worker spin-up than the popcounts
-                # themselves when the pool isn't already warm (r14: was
-                # 50k/task; the wider stage paid 8 workers of spin-up
-                # per bench pass for ~0.3 s of compute each)
-                width = max(1, min(n_cand // 100_000 + 1, 8 * par))
-
-                def gen(batches):
-                    # mapInArrow, not mapInPandas (r14): the worker
-                    # then imports only pyarrow + numpy — pandas is
-                    # ~1.5-2 CPU-s of the spin-up this stage pays
-                    # whenever the worker pool is cold (each bench
-                    # pass, after 190 other rows churned the pool)
-                    import numpy as np
-                    import pyarrow as pa
-
-                    ids, nsz, words = bc.value
-                    pop8 = np.unpackbits(
-                        np.arange(256, dtype=np.uint8)[:, None], axis=1
-                    ).sum(axis=1).astype(np.uint8)
-                    n_ids = len(ids)
-                    # pairs per popcount slice: two gathered bitmap
-                    # rows, their AND and its byte popcounts stay near
-                    # 128 MB however wide the vocabulary
-                    step = max(1, (1 << 27) // (32 * words.shape[1] + 64))
-                    for batch in batches:
-                        ia = batch.column(0).to_numpy(
-                            zero_copy_only=False).astype(np.int64)
-                        ib = batch.column(1).to_numpy(
-                            zero_copy_only=False).astype(np.int64)
-                        a = np.searchsorted(ids, ia)
-                        b = np.searchsorted(ids, ib)
-                        if (
-                            (a >= n_ids).any() or (b >= n_ids).any()
-                            or (ids[a.clip(0, n_ids - 1)] != ia).any()
-                            or (ids[b.clip(0, n_ids - 1)] != ib).any()
-                        ):
-                            raise ValueError(
-                                "candidate id missing from the arrays "
-                                "side table — candidates must come "
-                                "from the same corpus build"
-                            )
-                        inter = np.empty(len(ia), np.int64)
-                        for s0 in range(0, len(ia), step):
-                            sa_, sb_ = a[s0:s0 + step], b[s0:s0 + step]
-                            inter[s0:s0 + step] = (
-                                pop8[(words[sa_] & words[sb_]).view(np.uint8)]
-                                .reshape(len(sa_), -1)
-                                .sum(axis=1, dtype=np.int64)
-                            )
-                        sa = nsz[a]
-                        keep = 20 * inter >= t20 * sa  # integer-exact
-                        yield pa.RecordBatch.from_arrays(
-                            [
-                                pa.array(ia[keep], type=pa.int64()),
-                                pa.array(ib[keep], type=pa.int64()),
-                                pa.array(sa[keep], type=pa.int64()),
-                                pa.array(inter[keep], type=pa.int64()),
-                            ],
-                            names=["id_a", "id_b", "sa", "c"],
-                        )
-
-                gathered = cand.select("id_a", "id_b").repartition(
-                    width
-                ).mapInArrow(
-                    gen, schema="id_a long, id_b long, sa long, c long"
-                )
-            if gathered is not None:
-                common = gathered
+                common = _gather_verify(
+                    cand, _bitmap_table(haf, id_col, "__ha", ["sz"]), t20)
             else:
                 # vocab too wide for per-doc bitmaps: broadcast the
-                # plain bigint hash arrays and intersect per pair
-                # (array_intersect on STRUCT elements has no hash-set
-                # fast path — hence the strip, see
-                # prefix_filtered_pairs)
-                haf = arrays.select(
-                    F.col(id_col),
-                    F.transform("__arr", lambda x: x["h"]).alias("__ha"))
+                # arrays and intersect per pair
                 a = F.broadcast(haf.select(
                     F.col(id_col).alias("id_a"), F.col("__ha").alias("__ha_a")))
                 b = F.broadcast(haf.select(
@@ -2729,13 +2557,6 @@ def containment_pairs(
                     "id_a", "id_b", "sa",
                     F.size(F.array_intersect("__ha_a", "__ha_b")).alias("c"),
                 )
-        else:
-            common = (
-                cand.join(sh.select(F.col(id_col).alias("id_a"), "h"), "id_a")
-                .join(sh.select(F.col(id_col).alias("id_b"), "h"), ["id_b", "h"])
-                .groupBy("id_a", "id_b", "sa")
-                .agg(F.count(F.lit(1)).alias("c"))
-            )
         return (
             common
             # 20c ≥ t20·sa  ⟺  c/sa ≥ t — integer-exact

@@ -131,25 +131,6 @@ def top_k_per_group(
     return Df.from_spark(ranked)
 
 
-def with_rank(
-    df: Df,
-    partition_by: Sequence[str],
-    order_by: Sequence[str | Column],
-    kind: str = "row_number",
-    out: str = "rank",
-    descending: bool = False,
-) -> Df:
-    fn = {
-        "row_number": F.row_number,
-        "rank": F.rank,
-        "dense_rank": F.dense_rank,
-        "percent_rank": F.percent_rank,
-        "ntile4": lambda: F.ntile(4),
-    }[kind]
-    w = Window.partitionBy(*partition_by).orderBy(*_order_cols(order_by, descending))
-    return Df.from_spark(df.to_spark().withColumn(out, fn().over(w)))
-
-
 def with_running_agg(
     df: Df,
     partition_by: Sequence[str],
@@ -166,19 +147,3 @@ def with_running_agg(
     col = F.col(agg_col) if isinstance(agg_col, str) else agg_col
     fn = {"sum": F.sum, "avg": F.avg, "count": F.count, "min": F.min, "max": F.max}[agg]
     return Df.from_spark(df.to_spark().withColumn(out, fn(col).over(w)))
-
-
-def with_lag_lead(
-    df: Df,
-    partition_by: Sequence[str],
-    order_by: Sequence[str | Column],
-    col: str,
-    offset: int = 1,
-) -> Df:
-    w = Window.partitionBy(*partition_by).orderBy(*_order_cols(order_by, False))
-    sdf = (
-        df.to_spark()
-        .withColumn(f"{col}_lag", F.lag(col, offset).over(w))
-        .withColumn(f"{col}_lead", F.lead(col, offset).over(w))
-    )
-    return Df.from_spark(sdf)

@@ -230,7 +230,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> Df:
     if name == "events":
         fp = fingerprint_op(fp, "events_ts_ns_to_micros")
     return Df(load_sdf(spark, sf_dir, name), fingerprint=fp)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, Df]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}

@@ -3,14 +3,12 @@
 ``foreach_batch_parquet`` is the exactly-once pattern: each micro-batch
 is written as an idempotent parquet partition keyed by ``batch_id`` —
 re-delivered batches overwrite their own partition instead of
-duplicating rows. The same wrapper accepts any batch function (JDBC
-upsert, MERGE INTO, dedup-before-write) — foreachBatch hands you a
+duplicating rows. ``foreachBatch`` accepts any batch function (JDBC
+upsert, MERGE INTO, dedup-before-write) the same way — it hands you a
 normal batch DataFrame plus the batch id for idempotence.
 """
 
 from __future__ import annotations
-
-from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
@@ -36,21 +34,6 @@ def foreach_batch_parquet(
         agg.writeStream.outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
         .foreachBatch(write_batch)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def foreach_batch_custom(
-    agg: DataFrame,
-    fn: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-    output_mode: str = "update",
-) -> StreamingQuery:
-    return (
-        agg.writeStream.outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .foreachBatch(fn)
         .trigger(availableNow=True)
         .start()
     )

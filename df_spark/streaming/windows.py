@@ -73,20 +73,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    events: DataFrame,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(F.col("w.start").alias("window_start"), "n_events")
-    )
-
-
 def session_windows(
     events: DataFrame,
     gap: str = "30 minutes",
@@ -246,6 +232,7 @@ def decontaminate_stream(
     from ..functions.hashing import h32
     from ..functions.text import char_kgrams, normalized
     from ..operators.dedup import DEDUP_MEMO, shingle_hashes
+    from ..operators.observe import observed_checkpoint
     from ..plans.memo import frame_key
 
     # materialize the static side ONCE: a stream-static join re-evaluates
@@ -264,11 +251,9 @@ def decontaminate_stream(
     # cost the bench re-pays every memo-cleared pass).
     bench_hashes = DEDUP_MEMO.get_or_build(
         ("bench_hashes", frame_key(bench_docs), "doc_id", "text", k),
-        lambda: (
+        lambda: observed_checkpoint(
             shingle_hashes(bench_docs, "doc_id", "text", k=k)
-            .select("h").repartition(2, "h").distinct()
-            .localCheckpoint(eager=True)
-        ),
+            .select("h").repartition(2, "h").distinct()),
     )
     # same normalize→shingle→h32 expressions as the batch operator;
     # only its repartition barrier is stream-unsafe, so the shingle

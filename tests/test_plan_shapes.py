@@ -418,9 +418,20 @@ def test_media_near_dup_banded_join_no_cartesian(spark):
     assert "MapInPandas" not in plan
 
 
-def test_dedup_incremental_probes_index_no_cartesian(spark):
-    # each generation probes new-vs-index via the (band_idx, bucket)
-    # equi-join off the checkpointed band table; no all-pairs step
+def test_dedup_incremental_probes_index_no_cartesian(spark, monkeypatch):
+    # sf0.001 is a one-task corpus: the fused verify and the generation
+    # election run on the driver, whose (id, n_dup_partners) table
+    # joins the batch docs as a local relation — no all-pairs step and
+    # no Python stage
+    from df_spark.operators import dedup as D
+
+    plan = plan_of(spark, "dedup_incremental")
+    assert "CartesianProduct" not in plan
+    assert "LocalTableScan" in plan
+    assert "MapInArrow" not in plan
+    # past the broadcast cap each generation probes new-vs-index via
+    # the (band_idx, bucket) equi-join off the checkpointed band table
+    monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
     plan = plan_of(spark, "dedup_incremental")
     assert "CartesianProduct" not in plan
     assert "ExistingRDD" in plan
