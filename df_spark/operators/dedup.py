@@ -9,7 +9,9 @@ numpy kernels — the containment gather, and ONE LSH band verify
 (:func:`_fused_band_verify`) for ``minhash_near_dups``,
 ``incremental_band_dedup`` and ``cross_near_dups_in_table``. A kernel
 stage of one task runs on the driver, which holds the table; wider
-ones in ``mapInArrow`` tasks. Four families, all shuffle-conscious:
+ones in ``mapInArrow`` tasks. Past the cap the same three operators
+run its one distributed JVM twin, :func:`_band_verify`. Four
+families, all shuffle-conscious:
 
 - **exact**: hash-groupBy on a normalized-content fingerprint. One
   shuffle on the fingerprint; at 100 TB this is the standard
@@ -256,29 +258,6 @@ def shingle_hashes(
     return shingled.select(F.col(id_col), h32(F.col("__s")).alias("h"))
 
 
-def shingle_profile(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text", k: int = 3,
-) -> DataFrame:
-    """Per-doc NARROW MinHash profile (id + NUM_HASHES permutation
-    minima — 16 longs/doc) in ONE codegen hash-aggregate over the
-    exploded shingle hashes. Map-side partial aggregation collapses a
-    doc's shingle rows before they move (doc rows land co-partitioned
-    behind the shingle barrier), so the shuffle carries ~one partial
-    row per doc, not one row per shingle.
-
-    Deliberately narrow: round 2 packed the hashed shingle SETS into
-    this same aggregate (``collect_set``), which (a) pushed every
-    doc's full shingle set through the shuffle inside the partial
-    aggregates and (b) made every narrow consumer of the checkpoint
-    (signature projection, estimate prefilter) pay KB-per-row array
-    deserialization for a column it never read — the round-2 bench
-    regression. Verification sets now come from the map-side-only
-    :func:`hashed_shingle_sets` and never enter an aggregate."""
-    hashes = shingle_hashes(docs, id_col, text_col, k=k)
-    aggs = [F.min(minhash_perm(F.col("h"), i)).alias(f"m{i}") for i in range(NUM_HASHES)]
-    return hashes.groupBy(id_col).agg(*aggs)
-
-
 # Max distinct shingle hashes for the bitmap verify encoding: 4096 bits
 # = 64 longs per doc. Char-k-shingle universes are bounded by charset^k
 # (a few hundred on normalized closed-vocab corpora, ≤ ~64k for ASCII
@@ -405,7 +384,7 @@ def _shared_build(
 
         # in the bitmap regime the explicit hash ARRAYS are dead weight:
         # every in-build consumer (verify, in-table cross, stats) reads
-        # the words + n_sh; arrays for the rare two-frame cross API come
+        # the words + n_sh; an ad-hoc caller that wants arrays gets them
         # from :func:`shared_sets`' separate lazy build instead. The
         # collect_set buffer was ~40% of this aggregate's cost.
         # n_sh is NOT aggregated here: countDistinct alongside plain
@@ -474,10 +453,9 @@ def shared_sets(
     ran in the array regime this is a slice of it; in the bitmap regime
     the hot path never materializes arrays, so this builds them lazily
     (one extra map-side corpus pass, :func:`hashed_shingle_sets`) for
-    the callers that genuinely need per-element sets — the two-frame
-    cross-corpus verify, ad-hoc analysis. Keeps that function's
-    contract: one row per doc, empty array for texts shorter than
-    ``k``."""
+    the callers that genuinely need per-element sets, such as ad-hoc
+    analysis. Keeps that function's contract: one row per doc, empty
+    array for texts shorter than ``k``."""
     combined = _shared_build(docs, id_col, text_col, k, memo=memo)
     if "sh" in combined.columns:
         return combined.select(id_col, "sh")
@@ -553,8 +531,8 @@ def minhash_signatures(
     bands: int = 4, rows_per_band: int = 4, profile: DataFrame | None = None,
     memo: bool = True,
 ) -> DataFrame:
-    """Per-doc signature digest + band bucket keys, from the single-
-    aggregate :func:`shingle_profile`. Docs with no shingles (len < k)
+    """Per-doc signature digest + band bucket keys, from the minima of
+    the one-aggregate :func:`_shared_build`. Docs with no shingles (len < k)
     have no signature — dropped, matching the oracle's unnest/
     inner-group semantics (the explode produces no row for them).
 
@@ -568,33 +546,107 @@ def minhash_signatures(
     return _bands_from_mins(profile, id_col, bands, rows_per_band)
 
 
+def minhash_mins_sql(table: str, id_col: str, text_col: str) -> str:
+    """DuckDB query of ``table``'s per-doc MinHash minima ``m0..m15``
+    over its character shingles (one row per doc with shingles) — the
+    minima every DuckDB twin of the MinHash family starts from."""
+    mins = ",\n        ".join(
+        f"MIN({minhash_perm_sql(h32_sql('s'), i)}) AS m{i}" for i in range(NUM_HASHES)
+    )
+    return f"""SELECT {id_col},
+        {mins}
+      FROM (SELECT {id_col}, unnest({char_shingles_sql(text_col)}) AS s
+            FROM {table})
+      GROUP BY {id_col}"""
+
+
+def _mins_md5_sql(first: int, n: int) -> str:
+    """md5 of the ``n`` minima from ``m{first}``, comma-joined: a band
+    bucket (``n`` rows per band) or the whole signature's digest."""
+    return ("md5(concat_ws(','"
+            + "".join(f", CAST(m{i} AS VARCHAR)" for i in range(first, first + n))
+            + "))")
+
+
+def band_rows_sql(src: str, id_col: str, bands: int, rows_per_band: int) -> str:
+    """DuckDB (id, bucket, band_idx) rows of the minima rows ``src``:
+    one SELECT per band, unioned."""
+    return "\n      UNION ALL ".join(
+        f"SELECT {id_col}, {_mins_md5_sql(b * rows_per_band, rows_per_band)}"
+        f" AS bucket, {b} AS band_idx FROM {src}"
+        for b in range(bands)
+    )
+
+
+def minhash_est_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`minhash_est` over minima rows ``a``, ``b``."""
+    return " + ".join(
+        f"(CASE WHEN {a}.m{i} = {b}.m{i} THEN 1 ELSE 0 END)" for i in range(NUM_HASHES)
+    )
+
+
+def hashed_sets_sql(table: str, id_col: str, text_col: str) -> str:
+    """DuckDB (id, sh) query: the int-packed twin of
+    :func:`hashed_shingle_sets` (same -2^31 shift)."""
+    return (
+        f"SELECT {id_col}, list_distinct(list_transform({char_shingles_sql(text_col)},"
+        f" s -> CAST({h32_sql('s')} - 2147483648 AS INTEGER))) AS sh FROM {table}"
+    )
+
+
+def set_jaccard_sql(a: str, b: str) -> str:
+    """DuckDB twin of :func:`jaccard_projection`'s rounded Jaccard of
+    the hash sets ``a.sh`` and ``b.sh``."""
+    inter = f"len(list_intersect({a}.sh, {b}.sh))"
+    return (f"round(CAST({inter} AS DOUBLE)"
+            f" / (CAST(len({a}.sh) + len({b}.sh) AS DOUBLE) - {inter}), 6)")
+
+
 def minhash_signatures_sql(
     table: str = "documents", id_col: str = "doc_id", text_col: str = "text",
     bands: int = 4, rows_per_band: int = 4,
 ) -> str:
-    mins = ",\n        ".join(
-        f"MIN({minhash_perm_sql(h32_sql('s'), i)}) AS m{i}" for i in range(NUM_HASHES)
-    )
     band_exprs = ",\n      ".join(
-        "md5(concat_ws(','"
-        + "".join(f", CAST(m{b * rows_per_band + r} AS VARCHAR)" for r in range(rows_per_band))
-        + f")) AS band{b}"
+        f"{_mins_md5_sql(b * rows_per_band, rows_per_band)} AS band{b}"
         for b in range(bands)
     )
-    sig_all = "concat_ws(','" + "".join(f", CAST(m{i} AS VARCHAR)" for i in range(NUM_HASHES)) + ")"
     return f"""
-    WITH sh AS (
-      SELECT {id_col}, unnest({char_shingles_sql(text_col)}) AS s
-      FROM {table}
-    ), sig AS (
-      SELECT {id_col},
-        {mins}
-      FROM sh GROUP BY {id_col}
+    WITH sig AS (
+      {minhash_mins_sql(table, id_col, text_col)}
     )
-    SELECT {id_col}, md5({sig_all}) AS sig_md5,
+    SELECT {id_col}, {_mins_md5_sql(0, NUM_HASHES)} AS sig_md5,
       {band_exprs}
     FROM sig
     """
+
+
+def _bucket_rows(signatures: DataFrame, id_col: str, bands: int = 4) -> DataFrame:
+    """(id, band_idx, bucket): one row per LSH band of each signature
+    row, the rows every band join equi-joins on (two docs share band b
+    iff its md5 digests are equal)."""
+    return signatures.select(
+        F.col(id_col),
+        F.posexplode(F.array(*[F.col(f"band{b}") for b in range(bands)])).alias(
+            "band_idx", "bucket"),
+    )
+
+
+def _bucket_pairs(buckets: DataFrame, id_col: str, est_bytes: int,
+                  keys: tuple[str, ...] = ("band_idx", "bucket"),
+                  side: str | None = None) -> DataFrame:
+    """Distinct (id_a, id_b) pairs of :func:`_bucket_rows` rows equal
+    on ``keys``: id_a < id_b, or, given a ``side`` label column, labels
+    differing and id_a's the higher. One self-join side is broadcast
+    while ``est_bytes`` fits the cap (checkpoints carry no stats, so
+    the planner alone would shuffle both sides)."""
+    def half(suffix: str) -> DataFrame:
+        label = [F.col(side).alias(f"side{suffix}")] if side else []
+        return buckets.select(F.col(id_col).alias(f"id{suffix}"), *keys, *label)
+
+    keep = (F.col("side_a") > F.col("side_b") if side
+            else F.col("id_a") < F.col("id_b"))
+    return (half("_a").join(size_hinted(half("_b"), est_bytes), list(keys))
+            .filter(keep).select("id_a", "id_b").distinct())
 
 
 def lsh_candidate_pairs(
@@ -617,22 +669,10 @@ def lsh_candidate_pairs(
     and every near-dup/cluster/pipeline query need exactly this frame;
     signatures built from the memoized profile hash to the same key)."""
     def build() -> DataFrame:
-        buckets = observed_checkpoint(signatures.select(
-            F.col(id_col),
-            F.posexplode(F.array(*[F.col(f"band{b}") for b in range(bands)])).alias(
-                "band_idx", "bucket"
-            ),
-        ))
-        # bucket rows are (id, 4B idx, 32B digest) — measure and
-        # broadcast one self-join side when bounded (checkpoints carry
-        # no stats, so the planner alone would shuffle both sides)
-        buckets_bytes = observed(buckets) * 64
-        left = buckets.select(F.col(id_col).alias("id_a"), "bucket", "band_idx")
-        right = size_hinted(
-            buckets.select(F.col(id_col).alias("id_b"), "bucket", "band_idx"),
-            buckets_bytes)
-        pairs = left.join(right, ["bucket", "band_idx"]).filter(F.col("id_a") < F.col("id_b"))
-        return pairs.select("id_a", "id_b").distinct().localCheckpoint(eager=True)
+        buckets = observed_checkpoint(_bucket_rows(signatures, id_col, bands))
+        # bucket rows are (id, 4B idx, 32B digest)
+        return _bucket_pairs(
+            buckets, id_col, observed(buckets) * 64).localCheckpoint(eager=True)
 
     if not memo:
         return build()
@@ -676,20 +716,30 @@ def _fused_table(combined: DataFrame, id_col: str, words: list[str],
 
     The unlabelled table is collected once per build and kept on the
     build's frame object, like its observed sizes, so the MinHash
-    operators share it until the memo evicts the build."""
+    operators share it until the memo evicts the build; a labelled one
+    masks it with the labels, collected alone as ``(id, label)``."""
     n_docs, mins_bytes, pay_bytes = _verify_payload_bytes(combined, words)
     n_bits = len(words) * 64 or observed(combined, "n_bits_max")
     if max(pay_bytes + mins_bytes,
            _bitmap_bytes(n_docs, n_bits)) >= BROADCAST_BYTES_CAP:
         return None
-    extra = ["n_sh", *[f"m{i}" for i in range(NUM_HASHES)]]
+    if not hasattr(combined, "_fused_side"):
+        combined._fused_side = _bitmap_table(
+            combined, id_col, words or "sh",
+            ["n_sh", *[f"m{i}" for i in range(NUM_HASHES)]])
     if label is None:
-        if not hasattr(combined, "_fused_side"):
-            combined._fused_side = _bitmap_table(combined, id_col, words or "sh", extra)
         return combined._fused_side
-    labelled = combined.select(
-        "*", label.cast("long").alias("__side")).dropna(subset=["__side"])
-    return _bitmap_table(labelled, id_col, words or "sh", [*extra, "__side"])
+    import numpy as np
+
+    # the kept table's rows are the build's ids, ascending
+    t = combined.select(id_col, label.cast("long")).toArrow()
+    order = np.argsort(np.asarray(t.column(0), np.int64), kind="stable")
+    labels = t.column(1)
+    keep = np.asarray(labels.is_valid())[order]
+    side = np.asarray(labels.fill_null(0), np.int64)[order][keep]
+    ids, wbits, extras = combined._fused_side
+    return (ids[keep], wbits[keep],
+            np.column_stack([extras[keep], side]))
 
 
 def _bitmap_table(frame: DataFrame, id_col: str, bits: list[str] | str,
@@ -799,22 +849,80 @@ def _fused_band_verify(spark, table, min_jaccard: float, min_est_matches: int,
         F.col("jaccard") >= min_jaccard)
 
 
-def _payload(words: list[str], suffix: str) -> list[Column]:
-    """A :func:`_shared_build` row's exact-Jaccard payload, suffixed."""
-    return [
+def _payload(combined: DataFrame, id_col: str, words: list[str],
+             suffix: str) -> DataFrame:
+    """``(id, n, payload)``, suffixed: a :func:`_shared_build` frame's
+    exact-Jaccard payload (bitmap words, or the hash array ``sh``),
+    broadcast while its observed size fits the cap."""
+    return size_hinted(combined.select(
+        F.col(id_col).alias(f"id{suffix}"),
         F.col("n_sh").alias(f"n{suffix}"),
         *([F.col(w).alias(f"{w}{suffix}") for w in words] if words
           else [F.col("sh").alias(f"sh{suffix}")]),
-    ]
+    ), _verify_payload_bytes(combined, words)[2])
 
 
-def _exact_jaccard(pairs: DataFrame, words: list[str], min_jaccard: float) -> DataFrame:
-    """(id_a, id_b, jaccard ≥ threshold) of ``pairs`` carrying both
-    sides' :func:`_payload` (suffixes ``_a``/``_b``)."""
+def _exact_jaccard(pairs: DataFrame, combined: DataFrame, id_col: str,
+                   words: list[str], min_jaccard: float) -> DataFrame:
+    """(id_a, id_b, jaccard ≥ threshold) of the (id_a, id_b) ``pairs``
+    of docs of a :func:`_shared_build` frame, from both sides'
+    :func:`_payload`."""
+    pairs = (pairs.join(_payload(combined, id_col, words, "_a"), "id_a")
+             .join(_payload(combined, id_col, words, "_b"), "id_b"))
     if words:
         return jaccard_words_projection(
             pairs, "id_a", "id_b", "_a", "_b", words, min_jaccard)
     return jaccard_projection(pairs, "id_a", "id_b", "sh_a", "sh_b", min_jaccard)
+
+
+def _band_verify(combined: DataFrame, id_col: str, words: list[str],
+                 min_jaccard: float, min_est_matches: int,
+                 label: Column | None = None) -> tuple[DataFrame, int]:
+    """The distributed twin of :func:`_fused_band_verify`, for the
+    regime past ``BROADCAST_BYTES_CAP`` (the 100 TB one, where the
+    side table does not fit the driver and every join may shuffle):
+    (id_a, id_b, jaccard) for every pair of docs of a
+    :func:`_shared_build` frame sharing an LSH band bucket that passes
+    the estimate floor and the exact Jaccard threshold. The same label
+    contract: ``label``, a Column over the id column, keeps only pairs
+    whose labels differ, id_a the HIGHER label, and drops rows whose
+    label is null; otherwise id_a < id_b.
+
+    Two phases: the band self-join's candidates are screened against
+    the NARROW minima first (16 longs per doc through the shuffle, not
+    the payload), the survivors are checkpointed, and only they pay
+    the payload-attaching exact verify. When the screen is selective
+    (sparse corpora, the production case) this avoids shuffling
+    payloads for pairs the estimate already rejects. The survivors are
+    spread to ~20k pairs per task (capped at 8× parallelism): the pair
+    stream otherwise inherits ~10 post-join partitions (measured
+    12.2 s vs 3.0 s at sf0.1). Every join side is size-hinted from the
+    sizes the build's checkpoint observed, and the screen's own job
+    observes the survivor count, returned with the pairs: nothing is
+    counted."""
+    n_docs, mins_bytes, _ = _verify_payload_bytes(combined, words)
+    buckets = _bucket_rows(minhash_signatures(id_col=id_col, profile=combined), id_col)
+    if label is not None:
+        buckets = buckets.select("*", label.cast("long").alias("__side")).dropna(
+            subset=["__side"])
+
+    def mins_side(suffix: str) -> DataFrame:
+        return size_hinted(combined.select(
+            F.col(id_col).alias(f"id{suffix}"),
+            minhash_mins_array().alias(f"mins{suffix}")), mins_bytes)
+
+    # bucket rows are (id, 4B idx, 32B digest), K.BANDS per doc
+    cand = _bucket_pairs(buckets, id_col, n_docs * K.BANDS * 64,
+                         side=None if label is None else "__side")
+    screened = observed_checkpoint(
+        cand.join(mins_side("_a"), "id_a").join(mins_side("_b"), "id_b")
+        .filter(minhash_est("mins_a", "mins_b") >= min_est_matches)
+        .select("id_a", "id_b"))
+    n_pairs = observed(screened)
+    par = combined.sparkSession.sparkContext.defaultParallelism
+    width = max(par, min(n_pairs // 20_000 + 1, 8 * par))
+    return _exact_jaccard(
+        screened.repartition(width), combined, id_col, words, min_jaccard), n_pairs
 
 
 def minhash_near_dups(
@@ -864,19 +972,11 @@ def minhash_near_dups(
       (:func:`_bitmap_table`; exact, the arrays being sets) while those
       bitmaps also fit the cap — checked from the build's observed hash
       count before anything is collected.
-    - **two-phase** (the minima and payload, or the bitmaps, exceed
-      the cap — the 100 TB regime, where the sets frame is corpus-
-      sized and every join shuffles): screen the checkpointed
-      :func:`lsh_candidate_pairs` against the NARROW mins first (16
-      longs/doc through the shuffle, not KB arrays), checkpoint the
-      survivors, then pay the payload-attaching join only for them.
-      When the screen is selective (sparse corpora — the production
-      case, unlike the dense synthetic sf0.1 corpus) this avoids
-      shuffling shingle arrays for pairs the estimate already rejects.
-      The pair-stream repartition is sized to the observed survivor
-      count (~20k payload-carrying pairs/task, capped at 8×
-      parallelism) — the pair frame otherwise inherits ~10 post-join
-      partitions from upstream (measured 12.2 s vs 3.0 s at sf0.1).
+    - **distributed** (the minima and payload, or the bitmaps, exceed
+      the cap — the 100 TB regime, where the payload is corpus-sized
+      and every join shuffles): :func:`_band_verify`, the band self-
+      join with a narrow minima screen before the payload-attaching
+      verify.
 
     With ``memo=True`` the verified pair set itself is session-memoized
     (eager observed checkpoint, re-partitioned to data-sized width so
@@ -889,39 +989,16 @@ def minhash_near_dups(
         combined = _shared_build(docs, id_col, text_col, memo=memo)
         words = _build_words(combined)
         par = docs.sparkSession.sparkContext.defaultParallelism
-        n_docs, mins_bytes, pay_bytes = _verify_payload_bytes(combined, words)
         table = _fused_table(combined, id_col, words)
         if table is not None:
             verified = _fused_band_verify(
                 docs.sparkSession, table, min_jaccard, min_est_matches)
             # the verified set scales with the corpus, not with the
             # candidate count, which this path never materializes
-            store_width = max(1, min(n_docs // 1_000 + 1, par))
+            store_width = max(1, min(observed(combined) // 1_000 + 1, par))
         else:
-            prof = combined.select(id_col, *[f"m{i}" for i in range(NUM_HASHES)])
-            est = minhash_est("mins_a", "mins_b")
-            side = combined.select(F.col(id_col), "n_sh", *(words or ["sh"]))
-            sigs = minhash_signatures(id_col=id_col, profile=prof)
-            cand = lsh_candidate_pairs(sigs, id_col, memo=memo)
-            # two-phase: narrow screen, then the payload-attaching join
-            # only for survivors
-            prof_m = combined.select(F.col(id_col), minhash_mins_array().alias("mins"))
-            mins_a = prof_m.select(F.col(id_col).alias("id_a"), F.col("mins").alias("mins_a"))
-            mins_b = prof_m.select(F.col(id_col).alias("id_b"), F.col("mins").alias("mins_b"))
-            screened = observed_checkpoint(
-                cand.join(size_hinted(mins_a, mins_bytes), "id_a")
-                .join(size_hinted(mins_b, mins_bytes), "id_b")
-                .filter(est >= min_est_matches)
-                .select("id_a", "id_b")
-            )
-            n_pairs = observed(screened)
-            width = max(par, min(n_pairs // 20_000 + 1, 8 * par))
-            sa = size_hinted(
-                side.select(F.col(id_col).alias("id_a"), *_payload(words, "_a")), pay_bytes)
-            sb = size_hinted(
-                side.select(F.col(id_col).alias("id_b"), *_payload(words, "_b")), pay_bytes)
-            pairs = screened.repartition(width).join(sa, "id_a").join(sb, "id_b")
-            verified = _exact_jaccard(pairs, words, min_jaccard)
+            verified, n_pairs = _band_verify(
+                combined, id_col, words, min_jaccard, min_est_matches)
             store_width = max(1, min(n_pairs // 500_000 + 1, par))
         if not memo:
             return verified
@@ -944,35 +1021,13 @@ def minhash_near_dups_sql(table: str = "documents", min_jaccard: float = 0.6,
                           id_col: str = "doc_id", text_col: str = "text",
                           min_est_matches: int = MIN_EST_MATCHES,
                           bands: int = 4, rows_per_band: int = 4) -> str:
-    mins = ",\n        ".join(
-        f"MIN({minhash_perm_sql(h32_sql('s'), i)}) AS m{i}" for i in range(NUM_HASHES)
-    )
-    band_rows = "\n      UNION ALL ".join(
-        f"SELECT {id_col}, md5(concat_ws(','"
-        + "".join(f", CAST(m{b * rows_per_band + r} AS VARCHAR)" for r in range(rows_per_band))
-        + f")) AS bucket, {b} AS band_idx FROM mins"
-        for b in range(bands)
-    )
-    est = " + ".join(
-        f"(CASE WHEN ma.m{i} = mb.m{i} THEN 1 ELSE 0 END)" for i in range(NUM_HASHES)
-    )
-    # int-packed twin of hashed_shingle_sets (same -2^31 shift)
-    shingle_hashed = (
-        f"list_distinct(list_transform({char_shingles_sql(text_col)},"
-        f" s -> CAST({h32_sql('s')} - 2147483648 AS INTEGER)))"
-    )
+    jac = set_jaccard_sql("sa", "sb")
     return f"""
-    WITH sh AS (
-      SELECT {id_col}, unnest({char_shingles_sql(text_col)}) AS s
-      FROM {table}
-    ),
-    mins AS (
-      SELECT {id_col},
-        {mins}
-      FROM sh GROUP BY {id_col}
+    WITH mins AS (
+      {minhash_mins_sql(table, id_col, text_col)}
     ),
     buckets AS (
-      {band_rows}
+      {band_rows_sql("mins", id_col, bands, rows_per_band)}
     ),
     cand AS (
       SELECT DISTINCT a.{id_col} AS id_a, b.{id_col} AS id_b
@@ -985,21 +1040,16 @@ def minhash_near_dups_sql(table: str = "documents", min_jaccard: float = 0.6,
       FROM cand
       JOIN mins ma ON ma.{id_col} = cand.id_a
       JOIN mins mb ON mb.{id_col} = cand.id_b
-      WHERE {est} >= {min_est_matches}
+      WHERE {minhash_est_sql("ma", "mb")} >= {min_est_matches}
     ),
     sets AS (
-      SELECT {id_col}, {shingle_hashed} AS sh FROM {table}
+      {hashed_sets_sql(table, id_col, text_col)}
     )
-    SELECT id_a, id_b,
-           round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                 / (CAST(len(sa.sh) + len(sb.sh) AS DOUBLE)
-                    - len(list_intersect(sa.sh, sb.sh))), 6) AS jaccard
+    SELECT id_a, id_b, {jac} AS jaccard
     FROM screened
     JOIN sets sa ON sa.{id_col} = screened.id_a
     JOIN sets sb ON sb.{id_col} = screened.id_b
-    WHERE round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)
-                / (CAST(len(sa.sh) + len(sb.sh) AS DOUBLE)
-                   - len(list_intersect(sa.sh, sb.sh))), 6) >= {min_jaccard}
+    WHERE {jac} >= {min_jaccard}
     """
 
 
@@ -1079,23 +1129,25 @@ def incremental_band_dedup(
     - signatures come from the memoized family build
       (:func:`_shared_build`) — in production they are READ from the
       persisted index table; nothing here recomputes old docs' text.
-    - the probe is a hash equi-join on (band_idx, bucket) between the
-      batch's bands and the index's bands — batch-sized x index-
-      bucket-matched, never all-pairs, never index x index.
-    - "append only novel docs" is expressed as an anti-join of the
-      previous batches' verified-dup ids (bounded by dup count per
-      batch); a real deployment appends novel rows to the band table
-      instead and needs no anti-join at all.
-    - the per-batch verify attaches payloads for CANDIDATES only
-      (batch-bounded), with the estimate screen cutting the
-      set-attaching join's input first.
-
-    Bounded corpora skip that per-generation chain: when the per-doc
-    minima and payload (sizes observed by the build's checkpoint) and
-    the side table's bitmaps fit ``BROADCAST_BYTES_CAP`` — in either
-    payload regime, as in :func:`minhash_near_dups` — every cross-
-    generation pair is verified in one :func:`_fused_band_verify`
-    pass, and the generations are elected from that one pair table.
+    - every cross-generation pair is verified in ONE labelled band
+      verify (label ``pmod(id, gens)``: id_a the HIGHER generation, the
+      batch doc probing the index; same-generation pairs are never
+      emitted): :func:`_fused_band_verify` while the per-doc minima
+      and payload (sizes observed by the build's checkpoint) and the
+      side table's bitmaps fit ``BROADCAST_BYTES_CAP``, in either
+      payload regime as in :func:`minhash_near_dups`; past it
+      :func:`_band_verify`, a hash equi-join on (band_idx, bucket) —
+      bucket-matched, never all-pairs — whose estimate screen cuts the
+      payload-attaching join's input first.
+    - generation by generation, the batch docs with a verified partner
+      not removed by an earlier generation are dups and never join the
+      index. Verification is per pair and deterministic, so dropping
+      removed docs from the VERIFIED pairs gives the pair set a
+      per-generation probe of the index produces. Fused, the pairs are
+      collected and the generations elected in numpy; past the cap the
+      pairs (unbounded in number) stay checkpointed, and each
+      generation is an anti-join of the earlier dups plus one count
+      aggregate.
     """
     combined = _shared_build(docs, id_col, text_col, memo=memo)
     words = _build_words(combined)
@@ -1103,89 +1155,31 @@ def incremental_band_dedup(
         F.col(id_col), F.pmod(id_col, gens).cast("long").alias("gen"))
     table = _fused_table(combined, id_col, words)
     if table is not None:
-        # FUSED ALL-GENERATIONS VERIFY: one kernel pass verifies every
-        # cross-generation pair (id_a the HIGHER generation, the batch
-        # doc probing the index; same-generation pairs are never
-        # emitted) instead of the JVM chain's (band join -> verify ->
-        # agg) round per generation, ~2.5-3.5 s each at sf0.1, mostly
-        # exchange + AQE latency. Removed docs are dropped from the
-        # VERIFIED pairs: verification is per pair and deterministic,
-        # so this is the pair set the per-generation probe produces.
         verified = _fused_band_verify(
             docs.sparkSession, table, min_jaccard, min_est_matches,
             side=table[0] % gens).select("id_a", "id_b")
         return _elect_generations(all_ids, verified, id_col, gens)
 
-    prof = combined.select(id_col, *[f"m{i}" for i in range(NUM_HASHES)])
-    sigs = minhash_signatures(id_col=id_col, profile=prof)
-    # narrow (id, band_idx, bucket, gen) rows, checkpointed once: every
-    # generation's probe reads this frame twice (new side + old side)
-    buckets = (
-        sigs.select(
-            F.col(id_col),
-            F.posexplode(
-                F.array(*[F.col(f"band{b}") for b in range(4)])
-            ).alias("band_idx", "bucket"),
-        )
-        .withColumn("gen", F.pmod(id_col, gens))
-        .localCheckpoint(eager=True)
-    )
-
-    mins_arr = minhash_mins_array()
-
-    side = combined.select(
-        F.col(id_col), mins_arr.alias("mins"), F.col("n_sh"),
-        *(words if words else ["sh"]),
-    )
-    # size-gated broadcast of the per-doc payload sides: the
-    # checkpointed build carries no Catalyst stats, so AQE would plan a
-    # sort-merge join per verify. A bitmap-regime side is
-    # n_docs·(mins + words + n_sh) bytes; the array regime's payload is
-    # unbounded (no hint), and past the cap the join shuffles.
-    side_bytes = (observed(combined) * (16 * 8 + (len(words) + 1) * 8 + 24)
-                  if words else None)
-    a_side = size_hinted(side.select(
-        F.col(id_col).alias("id_a"), F.col("mins").alias("mins_a"), *_payload(words, "_a")),
-        side_bytes)
-    b_side = size_hinted(side.select(
-        F.col(id_col).alias("id_b"), F.col("mins").alias("mins_b"), *_payload(words, "_b")),
-        side_bytes)
-    est = minhash_est("mins_a", "mins_b")
-
-    def probe(g: int, removed: DataFrame | None) -> DataFrame:
-        new_b = buckets.filter(F.col("gen") == g).select(
-            F.col(id_col).alias("id_a"), "band_idx", "bucket")
-        old_b = buckets.filter(F.col("gen") < g)
-        if removed is not None:
-            old_b = old_b.join(removed, [id_col], "left_anti")
-        cand = (
-            new_b.join(
-                old_b.select(
-                    F.col(id_col).alias("id_b"), "band_idx", "bucket"),
-                ["band_idx", "bucket"],
-            )
-            .select("id_a", "id_b")
-            .distinct()
-        )
-        pairs = (cand.join(a_side, "id_a").join(b_side, "id_b")
-                 .filter(est >= min_est_matches))
-        return _exact_jaccard(pairs, words, min_jaccard)
-
-    # generation by generation, the batch docs with a verified index
-    # partner are dups, and never join the index
+    verified, _ = _band_verify(combined, id_col, words, min_jaccard,
+                               min_est_matches, label=F.pmod(id_col, gens))
+    # read once per generation: checkpointed, never collected
+    verified = verified.select("id_a", "id_b").localCheckpoint(eager=True)
     out: DataFrame | None = None
     removed: DataFrame | None = None
     for g in range(1, gens):
+        batch = verified.filter(F.pmod("id_a", gens) == g)
+        if removed is not None:
+            batch = batch.join(removed, "id_b", "left_anti")
         # (id, n_dup_partners): consumed twice (output row + the next
-        # generation's index anti-join) — checkpoint the bounded frame
+        # generations' anti-join) — checkpoint the bounded frame
         dups = (
-            probe(g, removed).groupBy(F.col("id_a").alias(id_col))
+            batch.groupBy(F.col("id_a").alias(id_col))
             .agg(F.count(F.lit(1)).cast("long").alias("n_dup_partners"))
             .localCheckpoint(eager=True)
         )
         rows = _generation_rows(all_ids.filter(F.col("gen") == g), dups, id_col)
         out = rows if out is None else out.unionByName(rows)
-        newly = dups.select(id_col)
+        newly = dups.select(F.col(id_col).alias("id_b"))
         removed = newly if removed is None else removed.unionByName(newly)
     return out
 
@@ -1201,46 +1195,16 @@ def incremental_dedup_sql(
     (candidate -> screen+verify -> dup) CTE block per generation, each
     generation's old side excluding earlier generations' verified
     dups — two chained snapshot generations by default."""
-    mins = ",\n        ".join(
-        f"MIN({minhash_perm_sql(h32_sql('s'), i)}) AS m{i}"
-        for i in range(NUM_HASHES)
-    )
-    band_rows = "\n      UNION ALL ".join(
-        f"SELECT {id_col}, md5(concat_ws(','"
-        + "".join(
-            f", CAST(m{b * rows_per_band + r} AS VARCHAR)"
-            for r in range(rows_per_band))
-        + f")) AS bucket, {b} AS band_idx FROM mins"
-        for b in range(bands)
-    )
-    est = " + ".join(
-        f"(CASE WHEN ma.m{i} = mb.m{i} THEN 1 ELSE 0 END)"
-        for i in range(NUM_HASHES)
-    )
-    shingle_hashed = (
-        f"list_distinct(list_transform({char_shingles_sql(text_col)},"
-        f" s -> CAST({h32_sql('s')} - 2147483648 AS INTEGER)))"
-    )
-    jac = (
-        "round(CAST(len(list_intersect(sa.sh, sb.sh)) AS DOUBLE)"
-        " / (CAST(len(sa.sh) + len(sb.sh) AS DOUBLE)"
-        " - len(list_intersect(sa.sh, sb.sh))), 6)"
-    )
+    est, jac = minhash_est_sql("ma", "mb"), set_jaccard_sql("sa", "sb")
     parts = [
-        f"""sh AS (
-      SELECT {id_col}, unnest({char_shingles_sql(text_col)}) AS s
-      FROM {table}
-    )""",
         f"""mins AS (
-      SELECT {id_col},
-        {mins}
-      FROM sh GROUP BY {id_col}
+      {minhash_mins_sql(table, id_col, text_col)}
     )""",
         f"""buckets AS MATERIALIZED (
-      {band_rows}
+      {band_rows_sql("mins", id_col, bands, rows_per_band)}
     )""",
         f"""sets AS (
-      SELECT {id_col}, {shingle_hashed} AS sh FROM {table}
+      {hashed_sets_sql(table, id_col, text_col)}
     )""",
     ]
 
@@ -1414,56 +1378,15 @@ def banded_ngram_jaccard(
     dedup family."""
     block_cols = list(block_exprs)
     combined = _shared_build(docs, id_col, text_col, memo=memo)
-    words = _build_words(combined)
-    prof = combined.select(id_col, *[f"m{i}" for i in range(NUM_HASHES)])
-    sigs = minhash_signatures(id_col=id_col, profile=prof)
     meta = docs.select(
         F.col(id_col), *[e.alias(n) for n, e in block_exprs.items()])
-    buckets = (
-        sigs.select(
-            F.col(id_col),
-            F.posexplode(F.array(*[F.col(f"band{b}") for b in range(4)])).alias(
-                "band_idx", "bucket"),
-        )
-        .join(meta, id_col)
-    )
-    buckets = observed_checkpoint(buckets)
-    bucket_bytes = observed(buckets) * (48 + 16 * len(block_cols))
-    keys = [*block_cols, "band_idx", "bucket"]
-    left = buckets.select(F.col(id_col).alias("id_a"), *keys)
-    right = size_hinted(
-        buckets.select(F.col(id_col).alias("id_b"), *keys), bucket_bytes)
-    cand = (
-        left.join(right, keys)
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    # the shared build's checkpoint observed its rows and Σn_sh
-    n_docs = observed(combined)
-    if words:
-        pay = combined.select(F.col(id_col), "n_sh", *words)
-        pay_bytes = n_docs * ((len(words) + 1) * 8 + 24)
-        a = size_hinted(pay.select(
-            F.col(id_col).alias("id_a"), F.col("n_sh").alias("n_a"),
-            *[F.col(w).alias(f"{w}_a") for w in words]), pay_bytes)
-        b = size_hinted(pay.select(
-            F.col(id_col).alias("id_b"), F.col("n_sh").alias("n_b"),
-            *[F.col(w).alias(f"{w}_b") for w in words]), pay_bytes)
-        return jaccard_words_projection(
-            cand.join(a, "id_a").join(b, "id_b"),
-            "id_a", "id_b", "_a", "_b", words, 0.0)
-    # array regime: the sets are the build's own ``sh`` column, so
-    # Σn_sh is their summed size
-    sets = shared_sets(docs, id_col, text_col, memo=memo)
-    sets_bytes = observed(combined, "nh") * 4 + n_docs * 32
-    sa = size_hinted(sets.select(
-        F.col(id_col).alias("id_a"), F.col("sh").alias("sh_a")), sets_bytes)
-    sb = size_hinted(sets.select(
-        F.col(id_col).alias("id_b"), F.col("sh").alias("sh_b")), sets_bytes)
-    return jaccard_projection(
-        cand.join(sa, "id_a").join(sb, "id_b"),
-        "id_a", "id_b", "sh_a", "sh_b", 0.0)
+    buckets = observed_checkpoint(_bucket_rows(
+        minhash_signatures(id_col=id_col, profile=combined), id_col,
+    ).join(meta, id_col))
+    cand = _bucket_pairs(buckets, id_col,
+                         observed(buckets) * (48 + 16 * len(block_cols)),
+                         (*block_cols, "band_idx", "bucket"))
+    return _exact_jaccard(cand, combined, id_col, _build_words(combined), 0.0)
 
 
 # ---------------------------------------------------------------------------
@@ -1739,148 +1662,6 @@ def winnow_fingerprint_summary(
 # ---------------------------------------------------------------------------
 
 
-def _cross_verify(
-    side_new: DataFrame,
-    side_base: DataFrame,
-    min_jaccard: float,
-    id_col: str,
-    min_est_matches: int,
-    words: list[str] | None = None,
-) -> DataFrame:
-    """The distributed cross-corpus verify: band buckets per side,
-    cross-side candidate join, estimate screen, exact-Jaccard verify.
-    It serves the two-frame :func:`cross_near_dups`, and
-    :func:`cross_near_dups_in_table` past the broadcast cap (under it,
-    the in-table join runs the one fused kernel,
-    :func:`_fused_band_verify`).
-
-    Each side is ONE frame carrying the MinHash minima (``m0..m15``)
-    plus the verify payload — ``n_sh`` + bitmap word columns when both
-    sides are slices of one :func:`_shared_build` (the in-table
-    incremental case: shared bit universe, verify = popcounts of ANDs;
-    pass ``words``), or a hash array ``sh`` for two independent builds
-    (incompatible bit assignments). Single-frame sides mean the
-    in-table path never self-joins its own build's slices. Each side
-    carries its observed rows and Σ|set| (``nh``), upper bounds that
-    size its join side with no job."""
-    sig_n = minhash_signatures(id_col=id_col, profile=side_new)
-    sig_b = minhash_signatures(id_col=id_col, profile=side_base)
-
-    def buckets(sig: DataFrame, out_id: str) -> DataFrame:
-        return sig.select(
-            F.col(id_col).alias(out_id),
-            F.posexplode(F.array(*[F.col(f"band{b}") for b in range(4)])).alias(
-                "band_idx", "bucket"
-            ),
-        )
-
-    cand = (
-        buckets(sig_n, "id_new")
-        .join(buckets(sig_b, "id_base"), ["bucket", "band_idx"])
-        .select("id_new", "id_base")
-        .distinct()
-    )
-    # the candidate count sizes the spread below, observed by the
-    # checkpoint's own job
-    cand = observed_checkpoint(cand)
-    n_cand = observed(cand)
-    par = cand.sparkSession.sparkContext.defaultParallelism
-    width = max(par, min(n_cand // 20_000 + 1, 8 * par))
-    if width <= 2 * cand.rdd.getNumPartitions():
-        # the checkpoint already spreads the pairs ~this wide; a second
-        # full shuffle of the candidate set buys nothing
-        width = None
-
-    mins_arr = minhash_mins_array()
-    est = minhash_est("mins_n", "mins_b")
-    # size-gated like minhash_near_dups' verify: the base corpus at
-    # 100 TB will NOT fit a broadcast — size_hinted degrades each side
-    # independently to a shuffle join past the cap instead of dying on
-    # Spark's broadcast limit. Bytes are observed, not assumed: rows x
-    # (16 minima + avg set payload).
-    def side_bytes(side: DataFrame) -> int:
-        n_docs = observed(side)
-        if words:
-            return n_docs * ((len(words) + 1) * 8 + NUM_HASHES * 8 + 56)
-        return observed(side, "nh") * 4 + n_docs * (NUM_HASHES * 8 + 56)
-
-    def payload(suffix: str) -> list:
-        if words:
-            return [
-                F.col("n_sh").alias(f"n{suffix}"),
-                *[F.col(w).alias(f"{w}{suffix}") for w in words],
-            ]
-        return [F.col("sh").alias(f"sh{suffix}")]
-
-    side_n = size_hinted(
-        side_new.select(
-            F.col(id_col).alias("id_new"), mins_arr.alias("mins_n"),
-            *payload("_n")),
-        side_bytes(side_new))
-    side_b = size_hinted(
-        side_base.select(
-            F.col(id_col).alias("id_base"), mins_arr.alias("mins_b"),
-            *payload("_b")),
-        side_bytes(side_base))
-    spread = cand.repartition(width) if width else cand
-    attached = spread.join(side_n, "id_new").join(side_b, "id_base")
-    if words:
-        # popcount-first (the in-corpus verify's r6 lesson): the exact
-        # bitmap Jaccard (W ANDs + popcounts) is cheaper per row than
-        # the 16-term getItem estimate, so it runs first and the
-        # estimate screen — still part of the contract — only sees the
-        # survivors. Pure reordering of conjuncts: the result set is
-        # identical.
-        out = jaccard_words_projection(
-            attached, "id_new", "id_base", "_n", "_b", words, min_jaccard,
-            carry=["mins_n", "mins_b"])
-        return out.filter(est >= min_est_matches).select(
-            "id_new", "id_base", "jaccard")
-    screened = attached.filter(est >= min_est_matches)
-    return jaccard_projection(
-        screened, "id_new", "id_base", "sh_n", "sh_b", min_jaccard)
-
-
-def cross_near_dups(
-    new_docs: DataFrame,
-    base_docs: DataFrame,
-    min_jaccard: float = 0.6,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_est_matches: int = MIN_EST_MATCHES,
-    memo: bool = True,
-) -> DataFrame:
-    """Incremental near-dedup: pairs (id_new, id_base) with exact
-    Jaccard >= threshold between a NEW corpus and an existing BASE
-    corpus — the "dedup this crawl against everything we already have"
-    pass. Same LSH -> estimate screen -> exact verify contract as
-    :func:`minhash_near_dups`, but the band-bucket join is ACROSS
-    corpora (never within either side), so cost is driven by
-    cross-collisions only.
-
-    This two-frame form shingles each corpus independently — use it
-    when the corpora are genuinely separate tables. When both sides
-    are filters of ONE table, :func:`cross_near_dups_in_table` derives
-    them from the single full-corpus build instead (one corpus pass,
-    memo-shared with the whole dedup family).
-
-    At 100 TB the base side's signatures/sets would persist as tables
-    between crawls; the per-crawl cost is the new side's map-side
-    shingle pass plus the bucket equi-join."""
-    def side(docs: DataFrame) -> DataFrame:
-        build = _shared_build(docs, id_col, text_col, memo=memo)
-        sets = (build.select(id_col, "sh") if "sh" in build.columns
-                else shared_sets(docs, id_col, text_col, memo=memo))
-        # the join keeps the build's rows, so its observed sizes hold
-        return with_observed(
-            build.select(id_col, *[f"m{i}" for i in range(NUM_HASHES)])
-            .join(sets, id_col),
-            rows=observed(build), nh=observed(build, "nh"))
-
-    return _cross_verify(
-        side(new_docs), side(base_docs), min_jaccard, id_col, min_est_matches)
-
-
 def cross_near_dups_in_table(
     docs: DataFrame,
     new_pred: Column,
@@ -1890,41 +1671,40 @@ def cross_near_dups_in_table(
     min_est_matches: int = MIN_EST_MATCHES,
     memo: bool = True,
 ) -> DataFrame:
-    """:func:`cross_near_dups` for the common case where the "new" and
-    "base" corpora are partitions of ONE table selected by ``new_pred``
-    (a boolean Column over the id column — it is applied to the
-    per-doc sets/profile frames, which carry only ``id_col``).
+    """Incremental near-dedup: pairs (id_new, id_base) with exact
+    Jaccard >= threshold between a NEW corpus and an existing BASE
+    corpus — the "dedup this crawl against everything we already have"
+    pass — where both are partitions of ONE table selected by
+    ``new_pred`` (a boolean Column over the id column). Same LSH ->
+    estimate screen -> exact verify contract as
+    :func:`minhash_near_dups`, but the band-bucket join is ACROSS
+    corpora (never within either side), so cost is driven by
+    cross-collisions only.
 
     The full-corpus sets + MinHash profile are built ONCE (the same
     session-memoized frames every other dedup query uses). Measured at
     sf0.1: 8.4s -> ~2s cold when the dedup family has already run, and
-    one corpus pass instead of two either way. While the build's side
-    table fits ``BROADCAST_BYTES_CAP`` (gated on the whole build's
-    observed sizes, no job), ``new_pred`` is each row's label in the
-    one fused kernel, :func:`_fused_band_verify`, which keeps the pairs
-    across labels; past the cap each side is a filter over the build
-    for :func:`_cross_verify`. Null-``new_pred`` rows are on neither
-    side."""
+    one corpus pass instead of two either way. ``new_pred`` is each
+    row's label in the one band verify, which keeps the pairs across
+    labels, new rows (label 1) as id_a: :func:`_fused_band_verify`
+    while the build's side table fits ``BROADCAST_BYTES_CAP`` (gated
+    on the whole build's observed sizes, no job), its distributed twin
+    :func:`_band_verify` past it. Null-``new_pred`` rows are on
+    neither side."""
     combined = _shared_build(docs, id_col, text_col, memo=memo)
     words = _build_words(combined)
     table = _fused_table(combined, id_col, words, label=new_pred)
     if table is not None:
-        # the label is the table's last extra; new rows (label 1) come
-        # out as id_a
+        # the label is the table's last extra
         verified = _fused_band_verify(
             docs.sparkSession, table, min_jaccard, min_est_matches,
             side=table[2][:, -1])
-        return verified.select(
-            F.col("id_a").alias("id_new"), F.col("id_b").alias("id_base"),
-            "jaccard")
-    # each side's sizes are bounded by the whole build's
-    sizes = {"rows": observed(combined), "nh": observed(combined, "nh")}
-    return _cross_verify(
-        with_observed(combined.filter(new_pred), **sizes),
-        with_observed(combined.filter(~new_pred), **sizes),
-        min_jaccard, id_col, min_est_matches,
-        words=words or None,
-    )
+    else:
+        verified, _ = _band_verify(combined, id_col, words, min_jaccard,
+                                   min_est_matches, label=new_pred)
+    return verified.select(
+        F.col("id_a").alias("id_new"), F.col("id_b").alias("id_base"),
+        "jaccard")
 
 
 def cross_near_dups_sql(
@@ -1937,41 +1717,23 @@ def cross_near_dups_sql(
     bands: int = 4,
     rows_per_band: int = 4,
 ) -> str:
-    """DuckDB twin of :func:`cross_near_dups` with the two corpora
-    carved out of one table by ``new_pred``."""
-    mins = ",\n        ".join(
-        f"MIN({minhash_perm_sql(h32_sql('s'), i)}) AS m{i}" for i in range(NUM_HASHES)
-    )
-    def band_rows(src: str) -> str:
-        return "\n      UNION ALL ".join(
-            f"SELECT {id_col}, md5(concat_ws(','"
-            + "".join(f", CAST(m{b * rows_per_band + r} AS VARCHAR)" for r in range(rows_per_band))
-            + f")) AS bucket, {b} AS band_idx FROM {src}"
-            for b in range(bands)
-        )
-    est = " + ".join(
-        f"(CASE WHEN mn.m{i} = mb.m{i} THEN 1 ELSE 0 END)" for i in range(NUM_HASHES)
-    )
-    shingle_hashed = (
-        f"list_distinct(list_transform({char_shingles_sql(text_col)},"
-        f" s -> CAST({h32_sql('s')} - 2147483648 AS INTEGER)))"
-    )
+    """DuckDB twin of :func:`cross_near_dups_in_table`: the two corpora
+    carved out of one table by ``new_pred``, each shingled on its own."""
+    jac = set_jaccard_sql("sn", "sb")
     return f"""
     WITH newd AS (SELECT * FROM {table} WHERE {new_pred}),
     based AS (SELECT * FROM {table} WHERE NOT ({new_pred})),
-    shn AS (SELECT {id_col}, unnest({char_shingles_sql(text_col)}) AS s FROM newd),
-    minsn AS (SELECT {id_col},
-        {mins}
-      FROM shn GROUP BY {id_col}),
-    shb AS (SELECT {id_col}, unnest({char_shingles_sql(text_col)}) AS s FROM based),
-    minsb AS (SELECT {id_col},
-        {mins}
-      FROM shb GROUP BY {id_col}),
+    minsn AS (
+      {minhash_mins_sql("newd", id_col, text_col)}
+    ),
+    minsb AS (
+      {minhash_mins_sql("based", id_col, text_col)}
+    ),
     bucketsn AS (
-      {band_rows('minsn')}
+      {band_rows_sql("minsn", id_col, bands, rows_per_band)}
     ),
     bucketsb AS (
-      {band_rows('minsb')}
+      {band_rows_sql("minsb", id_col, bands, rows_per_band)}
     ),
     cand AS (
       SELECT DISTINCT n.{id_col} AS id_new, b.{id_col} AS id_base
@@ -1983,20 +1745,15 @@ def cross_near_dups_sql(
       FROM cand
       JOIN minsn mn ON mn.{id_col} = cand.id_new
       JOIN minsb mb ON mb.{id_col} = cand.id_base
-      WHERE {est} >= {min_est_matches}
+      WHERE {minhash_est_sql("mn", "mb")} >= {min_est_matches}
     ),
-    setsn AS (SELECT {id_col}, {shingle_hashed} AS sh FROM newd),
-    setsb AS (SELECT {id_col}, {shingle_hashed} AS sh FROM based)
-    SELECT id_new, id_base,
-           round(CAST(len(list_intersect(sn.sh, sb.sh)) AS DOUBLE)
-                 / (CAST(len(sn.sh) + len(sb.sh) AS DOUBLE)
-                    - len(list_intersect(sn.sh, sb.sh))), 6) AS jaccard
+    setsn AS ({hashed_sets_sql("newd", id_col, text_col)}),
+    setsb AS ({hashed_sets_sql("based", id_col, text_col)})
+    SELECT id_new, id_base, {jac} AS jaccard
     FROM screened
     JOIN setsn sn ON sn.{id_col} = screened.id_new
     JOIN setsb sb ON sb.{id_col} = screened.id_base
-    WHERE round(CAST(len(list_intersect(sn.sh, sb.sh)) AS DOUBLE)
-                / (CAST(len(sn.sh) + len(sb.sh) AS DOUBLE)
-                   - len(list_intersect(sn.sh, sb.sh))), 6) >= {min_jaccard}
+    WHERE {jac} >= {min_jaccard}
     """
 
 
@@ -2038,7 +1795,8 @@ def prefix_filtered_pairs(
 
     ``partition_cols`` scopes the join (and the oracle) to pairs that
     agree on those columns — the within-ingest-partition dedup pattern
-    (cross-partition near-dup is the minhash/cross_near_dups family).
+    (cross-partition near-dup is the minhash/cross_near_dups_in_table
+    family).
     This synthetic corpus draws from a ~6k-shingle vocabulary, so even
     rarity-ordered prefixes collide broadly (measured: 7.6M candidates
     over 5k docs corpus-wide at sf0.1 — 61% of all pairs, the dense
@@ -2578,6 +2336,26 @@ def containment_pairs(
     )
 
 
+def exhaustive_shingles_sql(table: str, id_col: str, text_col: str, k: int,
+                            partition_cols: list[str]) -> str:
+    """The ``sh`` and ``sz`` CTEs of the exhaustive set-similarity
+    oracles: every doc's distinct raw k-shingle STRINGS ``(id,
+    partition cols, h)`` — no prefix, size or positional filter — and
+    its set size ``(id, sz)``."""
+    pc_sel = "".join(f", {c}" for c in partition_cols)
+    norm = normalized_sql(text_col)
+    return f"""sh AS (
+      SELECT DISTINCT {id_col} AS id{pc_sel}, s AS h FROM (
+        SELECT {id_col}{pc_sel}, unnest(list_distinct(list_transform(
+          range(1, len({norm}) - {k - 2}),
+          i -> substr({norm}, CAST(i AS INT), {k})))) AS s
+        FROM {table}
+        WHERE len({norm}) >= {k}
+      )
+    ),
+    sz AS (SELECT id, COUNT(*) AS sz FROM sh GROUP BY 1)"""
+
+
 def containment_pairs_sql(
     table: str = "documents", min_containment: float = 0.8,
     id_col: str = "doc_id", text_col: str = "text", k: int = 7,
@@ -2590,20 +2368,9 @@ def containment_pairs_sql(
     :func:`prefix_filtered_pairs_sql`)."""
     t20 = int(round(min_containment * 20))
     pcols = partition_cols or []
-    pc_sel = "".join(f", {c}" for c in pcols)
     part_join = "".join(f" AND a.{c} = b.{c}" for c in pcols)
-    norm = normalized_sql(text_col)
     return f"""
-    WITH sh AS (
-      SELECT DISTINCT {id_col} AS id{pc_sel}, s AS h FROM (
-        SELECT {id_col}{pc_sel}, unnest(list_distinct(list_transform(
-          range(1, len({norm}) - {k - 2}),
-          i -> substr({norm}, CAST(i AS INT), {k})))) AS s
-        FROM {table}
-        WHERE len({norm}) >= {k}
-      )
-    ),
-    sz AS (SELECT id, COUNT(*) AS sz FROM sh GROUP BY 1),
+    WITH {exhaustive_shingles_sql(table, id_col, text_col, k, pcols)},
     co AS (
       SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS c
       FROM sh a JOIN sh b ON a.h = b.h AND a.id <> b.id{part_join}
@@ -2635,20 +2402,9 @@ def prefix_filtered_pairs_sql(
     t20 = int(round(min_jaccard * 20))
     pcols = partition_cols or []
     # partition equality via the per-doc columns carried into sh
-    pc_sel = "".join(f", {c}" for c in pcols)
     part_join = "".join(f" AND a.{c} = b.{c}" for c in pcols)
-    norm = normalized_sql(text_col)
     return f"""
-    WITH sh AS (
-      SELECT DISTINCT {id_col} AS id{pc_sel}, s AS h FROM (
-        SELECT {id_col}{pc_sel}, unnest(list_distinct(list_transform(
-          range(1, len({norm}) - {k - 2}),
-          i -> substr({norm}, CAST(i AS INT), {k})))) AS s
-        FROM {table}
-        WHERE len({norm}) >= {k}
-      )
-    ),
-    sz AS (SELECT id, COUNT(*) AS sz FROM sh GROUP BY 1),
+    WITH {exhaustive_shingles_sql(table, id_col, text_col, k, pcols)},
     co AS (
       SELECT a.id AS id_a, b.id AS id_b, COUNT(*) AS c
       FROM sh a JOIN sh b ON a.h = b.h AND a.id < b.id{part_join}

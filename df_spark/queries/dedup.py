@@ -561,39 +561,15 @@ def fuzzy_name_join(spark, sf_dir):
 def _est_audit_sql(table: str = "documents", bands: int = 4,
                    rows_per_band: int = 4, bucket_w: int = 50,
                    sample_mod: int = 20) -> str:
-    from ..functions.hashing import NUM_HASHES, minhash_perm_sql
+    from ..functions.hashing import NUM_HASHES
 
-    mins = ",\n        ".join(
-        f"MIN({minhash_perm_sql(h32_sql('s'), i)}) AS m{i}"
-        for i in range(NUM_HASHES)
-    )
-    band_rows = "\n      UNION ALL ".join(
-        f"SELECT doc_id, md5(concat_ws(','"
-        + "".join(f", CAST(m{b * rows_per_band + r} AS VARCHAR)"
-                  for r in range(rows_per_band))
-        + f")) AS bucket, {b} AS band_idx FROM mins"
-        for b in range(bands)
-    )
-    est = " + ".join(
-        f"(CASE WHEN ma.m{i} = mb.m{i} THEN 1 ELSE 0 END)"
-        for i in range(NUM_HASHES)
-    )
-    shingle_hashed = (
-        f"list_distinct(list_transform({char_shingles_sql('text')},"
-        f" s -> CAST({h32_sql('s')} - 2147483648 AS INTEGER)))"
-    )
+    est = D.minhash_est_sql("ma", "mb")
     return f"""
-    WITH sh AS (
-      SELECT doc_id, unnest({char_shingles_sql('text')}) AS s
-      FROM {table}
-    ),
-    mins AS (
-      SELECT doc_id,
-        {mins}
-      FROM sh GROUP BY doc_id
+    WITH mins AS (
+      {D.minhash_mins_sql(table, "doc_id", "text")}
     ),
     buckets AS (
-      {band_rows}
+      {D.band_rows_sql("mins", "doc_id", bands, rows_per_band)}
     ),
     cand AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -606,7 +582,7 @@ def _est_audit_sql(table: str = "documents", bands: int = 4,
       WHERE (id_a * 31 + id_b) % {sample_mod} = 0
     ),
     sets AS (
-      SELECT doc_id, {shingle_hashed} AS sh FROM {table}
+      {D.hashed_sets_sql(table, "doc_id", "text")}
     ),
     scored AS (
       SELECT

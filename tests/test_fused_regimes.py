@@ -39,8 +39,7 @@ def test_cross_fused_vs_jvm_identical(docs, monkeypatch):
     fused kernel with the new-side predicate as each row's label, and
     returns the rows of the distributed path (cap 0). That path sizes
     its join sides from the same observed sizes, so it counts nothing
-    either, in the bitmap and the array regime, nor does the two-frame
-    cross join, which returns the same rows."""
+    either, in the bitmap and the array regime."""
     pred = F.expr("doc_id % 3 = 0")
     fused_calls = []
     kernel = D._fused_band_verify
@@ -56,12 +55,10 @@ def test_cross_fused_vs_jvm_identical(docs, monkeypatch):
         assert len(fused_calls) == 1
         m.setattr(D, "BROADCAST_BYTES_CAP", 0)
         jvm = _rows(D.cross_near_dups_in_table(docs, pred, memo=False))
-        two_frame = _rows(D.cross_near_dups(
-            docs.filter(pred), docs.filter(~pred), memo=False))
         m.setattr(D, "BITMAP_MAX_WORDS", 0)
         jvm_arrays = _rows(D.cross_near_dups_in_table(docs, pred, memo=False))
     assert len(fused_calls) == 1
-    assert fused == jvm == jvm_arrays == two_frame
+    assert fused == jvm == jvm_arrays
     assert len(fused) > 0
 
 
@@ -75,11 +72,15 @@ def test_containment_gather_vs_count_join_identical(docs, monkeypatch):
     assert len(fused) > 0
 
 
+@pytest.mark.parametrize("gens", [3, 4])
 def test_incremental_negative_ids_both_regimes_match_oracle(
-        spark, sf_dir, monkeypatch):
+        spark, sf_dir, monkeypatch, gens):
     """Generations are pmod(id, gens) on both regimes, matching the
     fused kernel's numpy ``%``: with ids shifted below zero, no doc
-    falls out of the output and both regimes equal the DuckDB twin."""
+    falls out of the output and both regimes equal the DuckDB twin,
+    the distributed one in both payload regimes. At ``gens=4`` a
+    batch's index holds two earlier batches, so a removal in one
+    generation changes the next one's index."""
     import duckdb
 
     shift = 250
@@ -89,17 +90,25 @@ def test_incremental_negative_ids_both_regimes_match_oracle(
     con.execute(
         "CREATE VIEW documents AS SELECT * REPLACE (doc_id - "
         f"{shift} AS doc_id) FROM read_parquet('{sf_dir}/documents.parquet')")
-    want = sorted(con.execute(D.incremental_dedup_sql("documents", 0.6)).fetchall())
+    want = sorted(con.execute(
+        D.incremental_dedup_sql("documents", 0.6, gens=gens)).fetchall())
     ids = [r[0] for r in con.execute("SELECT doc_id FROM documents").fetchall()]
-    assert len(want) == sum(1 for i in ids if i % 3 != 0)
+    assert len(want) == sum(1 for i in ids if i % gens != 0)
     assert any(r[0] < 0 and r[2] == 0 for r in want), "no negative-id dup"
+    assert {r[1] for r in want if r[2] == 0} == set(range(1, gens))
+
+    def run():
+        return _rows(D.incremental_band_dedup(docs, 0.6, gens=gens, memo=False))
 
     monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 1 << 62)
-    fused = _rows(D.incremental_band_dedup(docs, 0.6, memo=False))
+    fused = run()
     monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
-    jvm = _rows(D.incremental_band_dedup(docs, 0.6, memo=False))
+    jvm = run()
+    monkeypatch.setattr(D, "BITMAP_MAX_WORDS", 0)
+    jvm_arrays = run()
     assert fused == want
     assert jvm == want
+    assert jvm_arrays == want
 
 
 @pytest.mark.parametrize("shift", [0, 250])
@@ -109,14 +118,18 @@ def test_fused_array_regime_matches_jvm_and_bitmap(spark, sf_dir, monkeypatch, s
     built from the hash arrays, and returns exactly the rows of the JVM
     verify (cap 0) and of the bitmap-regime fused path, for all three
     operators. A hash the array-side bitmap build dropped would shrink
-    an intersection and change a returned Jaccard. ``shift`` moves ids below zero, which
-    changes the incremental generations."""
+    an intersection and change a returned Jaccard. At cap 0 each
+    operator runs the one distributed twin, ``_band_verify``, in both
+    payload regimes, and counts nothing. ``shift`` moves ids below
+    zero, which changes the incremental generations."""
     docs = load_sdf(spark, sf_dir, "documents").withColumn(
         "doc_id", F.col("doc_id") - shift).localCheckpoint(eager=True)
-    fused_calls = []
-    kernel = D._fused_band_verify
+    fused_calls, jvm_calls = [], []
+    kernel, twin = D._fused_band_verify, D._band_verify
     monkeypatch.setattr(D, "_fused_band_verify",
                         lambda *a, **k: fused_calls.append(1) or kernel(*a, **k))
+    monkeypatch.setattr(D, "_band_verify",
+                        lambda *a, **k: jvm_calls.append(1) or twin(*a, **k))
 
     def run():
         return (_rows(D.minhash_near_dups(docs, 0.6, memo=False)),
@@ -124,15 +137,27 @@ def test_fused_array_regime_matches_jvm_and_bitmap(spark, sf_dir, monkeypatch, s
                 _rows(D.cross_near_dups_in_table(
                     docs, F.expr("doc_id % 3 = 0"), memo=False)))
 
+    bitmap_words = D.BITMAP_MAX_WORDS
     bitmap = run()
     monkeypatch.setattr(D, "BITMAP_MAX_WORDS", 0)
     assert "sh" in D._shared_build(docs, memo=False).columns
     fused_array = run()
     assert len(fused_calls) == 6
+    assert not jvm_calls
+
+    def no_count(self):
+        raise AssertionError("count() on the distributed verify path")
+
     monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
-    jvm = run()
+    with monkeypatch.context() as m:
+        m.setattr(type(docs), "count", no_count)
+        jvm_array = run()
+        assert len(jvm_calls) == 3
+        m.setattr(D, "BITMAP_MAX_WORDS", bitmap_words)
+        jvm_bitmap = run()
+        assert len(jvm_calls) == 6
     assert len(fused_calls) == 6
-    assert fused_array == jvm == bitmap
+    assert fused_array == jvm_array == jvm_bitmap == bitmap
     assert len(bitmap[0]) > 0
     assert any(r[3] > 0 for r in bitmap[1]), "no incremental dup"
     assert len(bitmap[2]) > 0

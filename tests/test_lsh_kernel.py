@@ -184,6 +184,9 @@ def test_driver_path_runs_no_map_in_arrow(docs, monkeypatch):
 
 
 def test_unlabelled_side_table_is_collected_once_per_build(docs, monkeypatch):
+    """A labelled side table masks the build's kept one with labels
+    collected alone: its rows are the kept rows whose label is not
+    null, the label appended as the last extra."""
     combined = D._shared_build(docs, memo=False)
     words = D._build_words(combined)
     first = D._fused_table(combined, "doc_id", words)
@@ -193,8 +196,15 @@ def test_unlabelled_side_table_is_collected_once_per_build(docs, monkeypatch):
 
     monkeypatch.setattr(D, "_bitmap_table", no_collect)
     assert D._fused_table(combined, "doc_id", words) is first
-    with pytest.raises(AssertionError, match="twice"):
-        D._fused_table(combined, "doc_id", words, label=F.expr("doc_id % 3 = 0"))
+    ids, wbits, extras = first
+    label = F.expr("CASE WHEN doc_id % 2 = 0 THEN doc_id % 3 = 0 END")
+    l_ids, l_wbits, l_extras = D._fused_table(combined, "doc_id", words, label=label)
+    keep = ids % 2 == 0
+    assert 0 < keep.sum() < len(ids)
+    assert np.array_equal(l_ids, ids[keep])
+    assert np.array_equal(l_wbits, wbits[keep])
+    assert np.array_equal(l_extras[:, :-1], extras[keep])
+    assert np.array_equal(l_extras[:, -1], (ids[keep] % 3 == 0).astype(np.int64))
 
 
 # ---------------------------------------------------------------------------

@@ -429,8 +429,9 @@ def test_dedup_incremental_probes_index_no_cartesian(spark, monkeypatch):
     assert "CartesianProduct" not in plan
     assert "LocalTableScan" in plan
     assert "MapInArrow" not in plan
-    # past the broadcast cap each generation probes new-vs-index via
-    # the (band_idx, bucket) equi-join off the checkpointed band table
+    # past the broadcast cap one labelled (band_idx, bucket) equi-join
+    # verifies every cross-generation pair, and each generation's
+    # election reads the checkpointed verified pairs
     monkeypatch.setattr(D, "BROADCAST_BYTES_CAP", 0)
     plan = plan_of(spark, "dedup_incremental")
     assert "CartesianProduct" not in plan
